@@ -50,6 +50,7 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", SparkEntry.codegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: pay JVM/codegen/scheduler startup once, not inside

@@ -24,6 +24,7 @@ object Explain {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", SparkEntry.codegenCacheEntries)
     // SPARK_GRAFT_EVENTLOG=/dir enables the event log for stage-level
     // profiling (parse SparkListenerStageCompleted for durations)
     val spark = sys.env.get("SPARK_GRAFT_EVENTLOG").fold(builder) { dir =>

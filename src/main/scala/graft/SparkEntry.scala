@@ -35,6 +35,15 @@ object SparkEntry {
     spark
   }
 
+  /** Size of Spark's compiled-codegen class cache for the sessions the
+    * program's mains build (Bench, Verify, Explain). Spark's default of
+    * 100 is below one sweep's footprint (91–95 generated classes per
+    * `Sweep.run`) and far below a query mix's (~216 for eight queries),
+    * so at 100 every pass evicts and recompiles classes it just used.
+    * A static conf — it must be set on the builder, before the session
+    * exists; `ensureConfs` cannot set it. */
+  val codegenCacheEntries: String = "2000"
+
   /** Input-size-derived default shuffle-partition count (guide §2:
     * "make partitioning scale-adaptive — derive from input size — rather
     * than a constant tuned for either local mode or the cluster").

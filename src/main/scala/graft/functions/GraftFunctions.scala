@@ -811,13 +811,17 @@ object HashedWordNgrams {
   }
 }
 
-/** Seeded running maximum of a double array — element i is
-  * max(seed, arr[1..i]) (1-based prefixes). Semantically identical to
+/** Seeded running maximum of a double array, scaled — element i is
+  * max(seed, arr[1..i]) * scale (1-based prefixes). With scale 1.0 it is
+  * semantically identical to
   *   transform(sequence(1, size(a)), i -> greatest(seed, array_max(slice(a, 1, i))))
   * (the trailing-stop running high of gen201, seeded with the entry price)
   * but a single O(n) scan instead of the O(n²) per-trade slice+max chain —
   * at the reference's 200-bar forward windows that is 40,000 → 200 ops per
-  * trade. Max is associative and commutative over doubles, so the scan's
+  * trade. The scale folds gen201's per-bar trailing stop
+  * (running max × (1 − trail_pct)) into the same pass, one multiply per
+  * element exactly as `transform(running_maxes, rm -> rm * scale)` did.
+  * Max is associative and commutative over doubles, so the scan's
   * values are bit-identical to the slice form — including NaN, which is
   * the LARGEST value under Spark's double ordering and therefore poisons
   * the running max from its position on in both forms. NULL elements poison the
@@ -825,23 +829,23 @@ object HashedWordNgrams {
   * containing NULL... which never occurs here (forward arrays are built
   * from non-null OHLC); inputs with NULLs return NULL for safety.
   */
-case class RunningMaxSeeded(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class RunningMaxSeeded(first: Expression, second: Expression, third: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def nullSafeEval(arrAny: Any, seedAny: Any): Any =
-    RunningMaxSeeded.evalScan(
-      arrAny.asInstanceOf[ArrayData], seedAny.asInstanceOf[Double])
+  override def nullSafeEval(arrAny: Any, seedAny: Any, scaleAny: Any): Any =
+    RunningMaxSeeded.evalScan(arrAny.asInstanceOf[ArrayData],
+      seedAny.asInstanceOf[Double], scaleAny.asInstanceOf[Double])
 
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr, seed) => {
+    nullSafeCodeGen(ctx, ev, (arr, seed, scale) => {
       s"""
          |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_r =
-         |  graft.functions.RunningMaxSeeded.evalScan($arr, $seed);
+         |  graft.functions.RunningMaxSeeded.evalScan($arr, $seed, $scale);
          |if (${ev.value}_r == null) {
          |  ${ev.isNull} = true;
          |} else {
@@ -850,13 +854,14 @@ case class RunningMaxSeeded(left: Expression, right: Expression)
        """.stripMargin
     })
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
   override def prettyName: String = "running_max_seeded"
 }
 
 object RunningMaxSeeded {
-  def evalScan(ad: ArrayData, seed: Double): ArrayData = {
+  def evalScan(ad: ArrayData, seed: Double, scale: Double): ArrayData = {
     val n = ad.numElements()
     val out = new Array[Double](n)
     var m = seed
@@ -872,10 +877,128 @@ object RunningMaxSeeded {
       // bare Double.compare would replace -0.0 with 0.0 where the
       // composed form keeps the first-seen zero
       if (v != m && java.lang.Double.compare(v, m) > 0) m = v
-      out(i) = m
+      out(i) = m * scale
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+}
+
+/** First-touch barrier scan: the 1-based index of the first element of
+  * `arr[offset+1 .. offset+len]` that is >= (`above`) or <= (`!above`) the
+  * threshold, 0 if none — one codegen'd loop for what was
+  *   coalesce(array_position(transform(slice(arr, offset + 1, len),
+  *     x -> x >= t), true), 0)   (+ offset when found)
+  * whose `transform` lambda is a CodegenFallback: evaluated interpreted
+  * per row with boxed doubles and a materialized boolean array, and it
+  * forced an UnsafeProjection copy of each scanned row's forward arrays.
+  *
+  * Semantics are those of the composed form, element for element:
+  *  - comparison under SQLOrderingUtil.compareDoubles (NaN is the largest
+  *    double and equals itself; -0.0 equals 0.0), as `>=`/`<=` compile;
+  *  - a NULL element (or, for an array threshold, a NULL or missing
+  *    threshold element — zip_with pads with NULL) never matches;
+  *  - a NULL array, offset, length or scalar threshold yields 0;
+  *  - `len` past the end of the array is clipped; a negative `len` raises
+  *    slice's INVALID_PARAMETER_VALUE.LENGTH and a negative offset a named
+  *    error, before the threshold is read.
+  * The threshold is a double, or an array<double> compared element-wise
+  * at the same index (the trailing stop's per-bar stop prices). Returns
+  * an index into `arr` (offset included), so the two-segment scan's
+  * second segment needs no re-basing.
+  */
+case class FirstTouch(arr: Expression, offset: Expression, len: Expression,
+    threshold: Expression, above: Boolean) extends Expression {
+  override def children: Seq[Expression] = Seq(arr, offset, len, threshold)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult = InputChecks.all(
+    InputChecks.typed(s"$prettyName arr", arr, ArrayType(DoubleType)),
+    InputChecks.typed(s"$prettyName offset", offset, IntegerType),
+    InputChecks.typed(s"$prettyName len", len, IntegerType),
+    if (threshold.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
+    else InputChecks.typed(s"$prettyName threshold", threshold, ArrayType(DoubleType)))
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val a = arr.eval(input)
+    if (a == null) return 0L
+    val o = offset.eval(input)
+    if (o == null) return 0L
+    val n = len.eval(input)
+    if (n == null) return 0L
+    FirstTouch.checkWindow(o.asInstanceOf[Int], n.asInstanceOf[Int])
+    threshold.eval(input) match {
+      case null => 0L
+      case t: ArrayData => FirstTouch.scan(
+        a.asInstanceOf[ArrayData], o.asInstanceOf[Int], n.asInstanceOf[Int], t, above)
+      case t => FirstTouch.scan(
+        a.asInstanceOf[ArrayData], o.asInstanceOf[Int], n.asInstanceOf[Int],
+        t.asInstanceOf[Double], above)
+    }
+  }
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val Seq(a, o, n, t) = children.map(_.genCode(ctx))
+    // nested like nullSafeCodeGen (a child is only evaluated once the
+    // ones before it are non-null), but a NULL reads as "no touch" (0)
+    ev.copy(code = code"""
+      |${a.code}
+      |long ${ev.value} = 0L;
+      |if (!${a.isNull}) {
+      |  ${o.code}
+      |  if (!${o.isNull}) {
+      |    ${n.code}
+      |    if (!${n.isNull}) {
+      |      graft.functions.FirstTouch.checkWindow(${o.value}, ${n.value});
+      |      ${t.code}
+      |      if (!${t.isNull}) {
+      |        ${ev.value} = graft.functions.FirstTouch.scan(
+      |          ${a.value}, ${o.value}, ${n.value}, ${t.value}, $above);
+      |      }
+      |    }
+      |  }
+      |}""".stripMargin,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): FirstTouch =
+    copy(arr = cs(0), offset = cs(1), len = cs(2), threshold = cs(3))
+  override def prettyName: String = "first_touch"
+}
+
+object FirstTouch {
+  def checkWindow(offset: Int, len: Int): Unit = {
+    if (len < 0) throw GraftBridge.negativeLengthError("first_touch", len)
+    if (offset < 0) throw new IllegalArgumentException(
+      s"first_touch requires offset >= 0, got $offset")
+  }
+
+  def scan(a: ArrayData, offset: Int, len: Int, t: Double, above: Boolean): Long =
+    scanFrom(a, offset, len, t, null, above)
+
+  def scan(a: ArrayData, offset: Int, len: Int, ts: ArrayData, above: Boolean): Long =
+    scanFrom(a, offset, len, 0.0, ts, above)
+
+  /** One loop for both threshold shapes: `ts == null` means the scalar `t`. */
+  private def scanFrom(a: ArrayData, offset: Int, len: Int, t: Double,
+      ts: ArrayData, above: Boolean): Long = {
+    val end = math.min(a.numElements().toLong, offset.toLong + len).toInt
+    val tn = if (ts == null) 0 else ts.numElements()
+    var i = offset
+    while (i < end) {
+      if (!a.isNullAt(i) && (ts == null || (i < tn && !ts.isNullAt(i)))) {
+        val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(
+          a.getDouble(i), if (ts == null) t else ts.getDouble(i))
+        if (if (above) c >= 0 else c <= 0) return i + 1L
+      }
+      i += 1
+    }
+    0L
   }
 }
 
@@ -997,11 +1120,20 @@ object GraftFunctions {
   def hashedWordNgrams(text: Column, n: Int): Column =
     GraftBridge.toColumn(HashedWordNgrams(GraftBridge.toExpr(text), n))
 
-  /** Seeded prefix maximum array (see [[RunningMaxSeeded]]); one O(n) scan
-    * replacing the O(n²) transform/array_max(slice) chain. */
-  def runningMaxSeeded(arr: Column, seed: Column): Column =
+  /** Seeded prefix maximum array times `scale` (see [[RunningMaxSeeded]]);
+    * one O(n) scan replacing the O(n²) transform/array_max(slice) chain. */
+  def runningMaxSeeded(arr: Column, seed: Column, scale: Column = lit(1.0)): Column =
     GraftBridge.toColumn(RunningMaxSeeded(
-      GraftBridge.toExpr(arr), GraftBridge.toExpr(seed)))
+      GraftBridge.toExpr(arr), GraftBridge.toExpr(seed), GraftBridge.toExpr(scale)))
+
+  /** First 1-based index of `arr[offset+1 .. offset+len]` at or above
+    * (`above`) / at or below the threshold, 0 if none (see [[FirstTouch]]);
+    * the codegen'd form of
+    * `coalesce(array_position(transform(slice(arr, 1, len), x -> x >= t), true), 0)`. */
+  def firstTouch(arr: Column, len: Column, threshold: Column, above: Boolean,
+      offset: Column = lit(0)): Column =
+    GraftBridge.toColumn(FirstTouch(GraftBridge.toExpr(arr), GraftBridge.toExpr(offset),
+      GraftBridge.toExpr(len), GraftBridge.toExpr(threshold), above))
 
   /** Exclusive quantile as an incremental aggregate (TypedImperativeAggregate)
     * — use for plain aggregation and EXPANDING window frames (SURVEY §4.3.1b);

@@ -2,12 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.{firstTouch, runningMaxSeeded}
 
 /** Simulation layer (SURVEY.md §7.0 L2): triple-barrier / trailing-stop
   * scans as pure array-expression pipelines over forward-array columns.
   *
   * Everything here is whole-stage-codegen-friendly Column expressions — no
-  * UDFs, no shuffles: the scan is embarrassingly row-parallel after the
+  * UDFs, no higher-order-function lambdas (Spark evaluates `transform` /
+  * `zip_with` interpreted; every first-touch scan is the codegen'd
+  * [[graft.functions.FirstTouch]] kernel), no shuffles: the scan is
+  * embarrassingly row-parallel after the
   * forward arrays are attached (one window shuffle, shared by every barrier
   * combo via the grid cross join). This is the Spark restatement of
   * sql/gen200_triple_barrier.sql:190-266 (AUDIT #1 explicit price columns,
@@ -31,12 +35,6 @@ object Barriers {
         lit("barrier scan requires max_bars >= 1, got "),
         col("max_bars").cast("string"))))
 
-  /** First 1-based index of `arr[1..maxBars]` satisfying `pred`, 0 if none
-    * (ClickHouse arrayFirstIndex semantics; Spark array_position returns
-    * 0-not-found natively). */
-  private def firstIndex(arr: Column, maxBars: Column, pred: Column => Column): Column =
-    coalesce(array_position(transform(slice(arr, lit(1), maxBars), pred), lit(true)), lit(0L))
-
   /** Attach raw_tp_bar / raw_sl_bar / window_bars / tp_price / sl_price. */
   def withTripleBarrierScan(df: DataFrame): DataFrame = {
     val entry = col("entry_price")
@@ -46,9 +44,9 @@ object Barriers {
       .withColumn("window_bars",
         least(size(col("fwd_highs")).cast("long"), col("max_bars").cast("long")))
       .withColumn("raw_tp_bar",
-        firstIndex(col("fwd_highs"), col("max_bars"), _ >= col("tp_price")))
+        firstTouch(col("fwd_highs"), col("max_bars"), col("tp_price"), above = true))
       .withColumn("raw_sl_bar",
-        firstIndex(col("fwd_lows"), col("max_bars"), _ <= col("sl_price")))
+        firstTouch(col("fwd_lows"), col("max_bars"), col("sl_price"), above = false))
   }
 
   /** Exit classification on a scanned frame: exit_type / exit_bar /
@@ -86,23 +84,16 @@ object Barriers {
     val entry = col("entry_price")
     val scanned = df
       .withColumn("tp_price", entry * (lit(1.0) + col("tp_pct")))
-      .withColumn("running_maxes", // O(n) seeded prefix-max scan (vs the
-        // O(n²) slice+array_max chain; max is order-independent, so values
-        // are bit-identical — pinned by spec)
-        graft.functions.GraftFunctions.runningMaxSeeded(col("fwd_highs"), entry))
-      .withColumn("trailing_sls",
-        transform(col("running_maxes"), rm => rm * (lit(1.0) - col("trail_pct"))))
+      .withColumn("trailing_sls", // O(n) seeded prefix-max scan times
+        // (1 - trail_pct) (vs the O(n²) slice+array_max chain; max is
+        // order-independent, so values are bit-identical — pinned by spec)
+        runningMaxSeeded(col("fwd_highs"), entry, lit(1.0) - col("trail_pct")))
       .withColumn("window_bars",
         least(size(col("fwd_highs")).cast("long"), col("max_bars").cast("long")))
       .withColumn("raw_tp_bar",
-        firstIndex(col("fwd_highs"), col("max_bars"), _ >= col("tp_price")))
-      .withColumn("raw_trail_bar",
-        coalesce(array_position(
-          zip_with(
-            slice(col("fwd_lows"), lit(1), col("max_bars")),
-            slice(col("trailing_sls"), lit(1), col("max_bars")),
-            (l, t) => l <= t),
-          lit(true)), lit(0L)))
+        firstTouch(col("fwd_highs"), col("max_bars"), col("tp_price"), above = true))
+      .withColumn("raw_trail_bar", // per-bar stop: low[i] <= trailing_sls[i]
+        firstTouch(col("fwd_lows"), col("max_bars"), col("trailing_sls"), above = false))
     val tp = col("raw_tp_bar"); val tr = col("raw_trail_bar")
     val trWins = tr > 0 && (tp === 0 || tr <= tp)   // trailing SL wins ties
     val tpWins = tp > 0 && (tr === 0 || tp < tr)
@@ -128,16 +119,17 @@ object Barriers {
 
   /** Two-segment (time-decay) SL scan (gen720_wf_2down_template.sql:155-232):
     * wide SL during bars 1..phase1_bars, tight SL after; the tight-SL scan
-    * starts at bar phase1_bars+1 (seg2 local index + phase1 offset). The
+    * starts at bar phase1_bars+1 (a first-touch scan offset by
+    * phase1_bars, so its index is already a forward-bar number). The
     * effective SL price feeds the AP-13 gap fill. Requires columns: tp_pct,
     * sl_wide_pct, sl_tight_pct, phase1_bars, max_bars.
     */
   def twoSegmentSl(df: DataFrame): DataFrame = {
     val entry = col("entry_price")
-    // negative phase1_bars is the SILENT failure mode: slice with a
-    // negative start scans from the END of the forward array (Spark
-    // semantics), misclassifying exits with no error; p1 = -1 merely
-    // throws a cryptic slice error (r13 review) — raise readably instead
+    // negative phase1_bars was the SILENT failure mode of the slice form
+    // (a negative slice start scans from the END of the forward array);
+    // the kernel refuses a negative offset, but without naming the
+    // config column (r13 review) — raise readably instead
     val p1 = when(col("phase1_bars") >= 0, col("phase1_bars"))
       .otherwise(raise_error(concat(
         lit("two-segment SL requires phase1_bars >= 0, got "),
@@ -149,20 +141,15 @@ object Barriers {
       .withColumn("window_bars",
         least(size(col("fwd_highs")).cast("long"), col("max_bars").cast("long")))
       .withColumn("raw_tp_bar",
-        firstIndex(col("fwd_highs"), col("max_bars"), _ >= col("tp_price")))
+        firstTouch(col("fwd_highs"), col("max_bars"), col("tp_price"), above = true))
       .withColumn("raw_sl_seg1",
-        coalesce(array_position(transform(
-          slice(col("fwd_lows"), lit(1), least(p1, col("max_bars").cast("int"))),
-          _ <= col("sl_wide_price")), lit(true)), lit(0L)))
-      .withColumn("raw_sl_seg2_local",
-        coalesce(array_position(transform(
-          slice(col("fwd_lows"), p1 + 1,
-            greatest(col("max_bars").cast("int") - p1, lit(0))),
-          _ <= col("sl_tight_price")), lit(true)), lit(0L)))
+        firstTouch(col("fwd_lows"), least(p1, col("max_bars").cast("int")),
+          col("sl_wide_price"), above = false))
+      .withColumn("raw_sl_seg2", // bars p1+1 .. max_bars, indexed from bar 1
+        firstTouch(col("fwd_lows"), greatest(col("max_bars").cast("int") - p1, lit(0)),
+          col("sl_tight_price"), above = false, offset = p1))
       .withColumn("raw_sl_bar",
-        when(col("raw_sl_seg1") > 0, col("raw_sl_seg1"))
-          .when(col("raw_sl_seg2_local") > 0, col("raw_sl_seg2_local") + p1)
-          .otherwise(lit(0L)))
+        when(col("raw_sl_seg1") > 0, col("raw_sl_seg1")).otherwise(col("raw_sl_seg2")))
       .withColumn("sl_price_eff",
         when(col("raw_sl_seg1") > 0, col("sl_wide_price"))
           .otherwise(col("sl_tight_price")))
@@ -198,25 +185,18 @@ object Barriers {
     val scanned = df
       .withColumn("tp_price", entry * (lit(1.0) + col("tp_pct")))
       .withColumn("sl_price", entry * (lit(1.0) - col("sl_pct")))
-      .withColumn("running_maxes", // O(n) seeded prefix-max scan (vs the
-        // O(n²) slice+array_max chain; max is order-independent, so values
-        // are bit-identical — pinned by spec)
-        graft.functions.GraftFunctions.runningMaxSeeded(col("fwd_highs"), entry))
-      .withColumn("trailing_sls",
-        transform(col("running_maxes"), rm => rm * (lit(1.0) - col("trail_pct"))))
+      .withColumn("trailing_sls", // O(n) seeded prefix-max scan times
+        // (1 - trail_pct) (vs the O(n²) slice+array_max chain; max is
+        // order-independent, so values are bit-identical — pinned by spec)
+        runningMaxSeeded(col("fwd_highs"), entry, lit(1.0) - col("trail_pct")))
       .withColumn("window_bars",
         least(size(col("fwd_highs")).cast("long"), col("max_bars").cast("long")))
       .withColumn("raw_tp_bar",
-        firstIndex(col("fwd_highs"), col("max_bars"), _ >= col("tp_price")))
+        firstTouch(col("fwd_highs"), col("max_bars"), col("tp_price"), above = true))
       .withColumn("raw_sl_bar",
-        firstIndex(col("fwd_lows"), col("max_bars"), _ <= col("sl_price")))
-      .withColumn("raw_trail_bar",
-        coalesce(array_position(
-          zip_with(
-            slice(col("fwd_lows"), lit(1), col("max_bars")),
-            slice(col("trailing_sls"), lit(1), col("max_bars")),
-            (l, t) => l <= t),
-          lit(true)), lit(0L)))
+        firstTouch(col("fwd_lows"), col("max_bars"), col("sl_price"), above = false))
+      .withColumn("raw_trail_bar", // per-bar stop: low[i] <= trailing_sls[i]
+        firstTouch(col("fwd_lows"), col("max_bars"), col("trailing_sls"), above = false))
     val tp = col("raw_tp_bar")
     val fixedWins = col("raw_sl_bar") > 0 &&
       (col("raw_trail_bar") === 0 || col("raw_sl_bar") <= col("raw_trail_bar"))

@@ -151,11 +151,13 @@ object EventBars {
       .agg(sort_array(collect_list(struct(
         col("b_rn"), col("b_high"), col("b_low"), col("b_open"), col("b_close"))))
         .as("fwd"))
+    // field extraction from the struct array (GetArrayStructFields) is
+    // codegen'd; a `transform(fwd, x -> x.b_high)` lambda is not
     signals.join(arrays, Seq("event_type", "rn"))
-      .withColumn("fwd_highs", expr("transform(fwd, x -> x.b_high)"))
-      .withColumn("fwd_lows", expr("transform(fwd, x -> x.b_low)"))
-      .withColumn("fwd_opens", expr("transform(fwd, x -> x.b_open)"))
-      .withColumn("fwd_closes", expr("transform(fwd, x -> x.b_close)"))
+      .withColumn("fwd_highs", col("fwd").getField("b_high"))
+      .withColumn("fwd_lows", col("fwd").getField("b_low"))
+      .withColumn("fwd_opens", col("fwd").getField("b_open"))
+      .withColumn("fwd_closes", col("fwd").getField("b_close"))
       .drop("fwd")
   }
 

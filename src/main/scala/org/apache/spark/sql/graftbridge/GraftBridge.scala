@@ -12,6 +12,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftBridge {
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** slice's INVALID_PARAMETER_VALUE.LENGTH, for kernels that fuse a slice. */
+  def negativeLengthError(function: String, length: Int): RuntimeException =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .unexpectedValueForLengthInFunctionError(function, length)
 }
 
 /** Bridge into Spark's `private[sql]` Arrow machinery (ArrowWriter /

@@ -233,6 +233,155 @@ class GraftFunctionsSpec extends GraftSuite {
     assert(both.head.getSeq[Double](0).drop(1).forall(_.isNaN))
   }
 
+  test("running_max_seeded's scale equals transform(running max, x -> x * scale)") {
+    // the trailing stop's per-bar stop price, formerly a lambda over the
+    // unscaled running max: the same single multiply per element
+    val d = Seq(
+      (Seq(1.0, Double.NaN, 2.0), 0.0, 0.99),
+      (Seq(-1.0, -0.0, 0.0, -2.0), -3.0, 0.5),
+      (Seq(3.0, 1.0, 4.0, 1.0, 5.0), 2.0, 1.0 - 0.01)
+    ).toDF("a", "seed", "scale")
+    val both = d.select(
+      GraftFunctions.runningMaxSeeded(col("a"), col("seed"), col("scale")).as("fast"),
+      transform(GraftFunctions.runningMaxSeeded(col("a"), col("seed")),
+        x => x * col("scale")).as("slow")).collect()
+    both.foreach { r =>
+      val (f, s) = (r.getSeq[Double](0), r.getSeq[Double](1))
+      assert(f.length == s.length && f.zip(s).forall { case (x, y) =>
+        java.lang.Double.compare(x, y) == 0 }, s"$f vs $s")
+    }
+  }
+
+  /** Runs `body` on Spark's generated code and again on the interpreted
+    * `eval` path (no whole-stage codegen, no expression codegen). */
+  private def onBothPaths(body: String => Unit): Unit = {
+    body("codegen")
+    val confs = Map("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body("interpreted")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  // the kernel's whole edge surface: NaN, ±0.0 and NULL elements, NULL
+  // arrays, lengths from NULL through 0 to past the end, thresholds
+  // including NaN, ±0.0 and NULL
+  private val touchPool: Seq[java.lang.Double] =
+    Seq(-2.0, -1.0, -0.0, 0.0, 1.0, 2.0, Double.NaN).map(Double.box) :+ null
+  private def touchFrame(rows: Int, seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    def arr: Seq[java.lang.Double] =
+      if (rnd.nextInt(12) == 0) null else Seq.fill(rnd.nextInt(7))(pick(touchPool))
+    val lens = Seq[Integer](null, 0, 1, 2, 3, 6, 100)
+    (0 until rows).map(_ => (arr, pick(lens), pick(touchPool), arr, pick(Seq(0, 0, 1, 2, 5))))
+      .toDF("a", "n", "t", "ts", "o")
+      .repartition(2) // keep the projection off the local relation (else it folds interpreted)
+  }
+
+  test("first_touch equals coalesce(array_position(transform(slice(a, 1, n), " +
+    "x -> x >= t / x <= t), true), 0) on NaN, ±0.0 and NULL edges") {
+    val d = touchFrame(600, 11)
+    onBothPaths { path =>
+      val got = d.select(
+        GraftFunctions.firstTouch(col("a"), col("n"), col("t"), above = true).as("up"),
+        expr("coalesce(array_position(transform(slice(a, 1, n), x -> x >= t), true), 0)")
+          .as("up_ref"),
+        GraftFunctions.firstTouch(col("a"), col("n"), col("t"), above = false).as("dn"),
+        expr("coalesce(array_position(transform(slice(a, 1, n), x -> x <= t), true), 0)")
+          .as("dn_ref"),
+        col("a"), col("n"), col("t")).collect()
+      got.foreach { r =>
+        assert(r.getLong(0) == r.getLong(1) && r.getLong(2) == r.getLong(3),
+          s"$path: a=${r.get(4)} n=${r.get(5)} t=${r.get(6)} -> $r")
+      }
+      // every edge actually occurs, and both outcomes (touch / none) do
+      assert(got.exists(_.isNullAt(4)) && got.exists(_.isNullAt(5)) && got.exists(_.isNullAt(6)))
+      assert(got.exists(r => !r.isNullAt(6) && r.getDouble(6).isNaN))
+      assert(got.exists(_.getLong(0) > 0) && got.exists(_.getLong(0) == 0))
+    }
+  }
+
+  test("first_touch with an offset equals the slice(a, o + 1, n) form re-based by o") {
+    val d = touchFrame(400, 12)
+    onBothPaths { path =>
+      d.select(
+        GraftFunctions.firstTouch(col("a"), col("n"), col("t"), above = false,
+          offset = col("o")).as("fast"),
+        expr("coalesce(array_position(transform(slice(a, o + 1, n), x -> x <= t), true), 0)")
+          .as("local"), col("o")).collect().foreach { r =>
+        val want = if (r.getLong(1) > 0) r.getLong(1) + r.getInt(2) else 0L
+        assert(r.getLong(0) == want, s"$path: $r")
+      }
+    }
+  }
+
+  test("first_touch with an array threshold equals the zip_with(slice, slice) form") {
+    // the trailing stop's per-bar stop: a shorter or NULL-holding stop
+    // array never touches where zip_with pads or holds NULL
+    val d = touchFrame(600, 13)
+    onBothPaths { path =>
+      d.select(
+        GraftFunctions.firstTouch(col("a"), col("n"), col("ts"), above = false).as("fast"),
+        expr("coalesce(array_position(zip_with(slice(a, 1, n), slice(ts, 1, n), " +
+          "(x, y) -> x <= y), true), 0)").as("slow"), col("a"), col("ts"))
+        .collect().foreach { r =>
+          assert(r.getLong(0) == r.getLong(1), s"$path: $r")
+        }
+    }
+  }
+
+  test("first_touch refuses a negative length like slice (named error, even " +
+    "with a NULL threshold) and a negative offset") {
+    import org.apache.spark.SparkThrowable
+    def rootCauses(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: rootCauses(t.getCause)
+    val d = Seq((Seq(1.0, 2.0), -1, Option.empty[Double], 0), (Seq(1.0, 2.0), 1, Some(1.0), -1))
+      .toDF("a", "n", "t", "o").repartition(1)
+    onBothPaths { path =>
+      val neg = intercept[Exception](d.filter(col("o") === 0).select(
+        GraftFunctions.firstTouch(col("a"), col("n"), col("t"), above = true)).collect())
+      assert(rootCauses(neg).exists {
+        case e: SparkThrowable => e.getCondition == "INVALID_PARAMETER_VALUE.LENGTH"
+        case _ => false
+      }, s"$path: ${rootCauses(neg).map(_.getMessage).mkString(" | ")}")
+      // the slice form it replaces fails the same way
+      val ref = intercept[Exception](d.filter(col("o") === 0).select(
+        expr("array_position(transform(slice(a, 1, n), x -> x >= t), true)")).collect())
+      assert(rootCauses(ref).exists(_.getMessage.contains("INVALID_PARAMETER_VALUE.LENGTH")))
+      val off = intercept[Exception](d.filter(col("o") === -1).select(
+        GraftFunctions.firstTouch(col("a"), col("n"), col("t"), above = true,
+          offset = col("o"))).collect())
+      assert(rootCauses(off).exists(e =>
+        e.getMessage != null && e.getMessage.contains("offset >= 0")), s"$path")
+    }
+  }
+
+  test("first_touch fails ANALYSIS on array<float> / non-int bounds instead of " +
+    "reading 4-byte slots as doubles") {
+    import org.apache.spark.sql.AnalysisException
+    val d = Seq((Seq(1.0f, 2.0f), Seq(1.0, 2.0), 2, 2L, 1.5))
+      .toDF("floats", "doubles", "n", "nl", "t")
+    intercept[AnalysisException](d.select(
+      GraftFunctions.firstTouch(col("floats"), col("n"), col("t"), above = true)).collect())
+    intercept[AnalysisException](d.select(
+      GraftFunctions.firstTouch(col("doubles"), col("nl"), col("t"), above = true)).collect())
+    intercept[AnalysisException](d.select(
+      GraftFunctions.firstTouch(col("doubles"), col("n"), col("floats"), above = true)).collect())
+    // the explicit cast is the supported route, and agrees with the lambda form
+    val r = d.select(
+      GraftFunctions.firstTouch(col("floats").cast("array<double>"), col("n"), col("t"),
+        above = true),
+      expr("coalesce(array_position(transform(slice(floats, 1, n), x -> x >= t), true), 0)"))
+      .first()
+    assert(r.getLong(0) == 2L && r.getLong(1) == 2L, r.toString)
+  }
+
   test("custom kernels fail ANALYSIS on mistyped inputs instead of reading " +
     "garbage at fixed widths") {
     import org.apache.spark.sql.AnalysisException

@@ -53,6 +53,32 @@ class PlanShapeSpec extends GraftSuite {
       p.contains("ShuffledHashJoin"), s"no equi join:\n$p")
   }
 
+  test("q43/q18 barrier scans are codegen'd: no interpreted higher-order " +
+    "function reads the forward arrays") {
+    // Spark evaluates transform/zip_with/... as CodegenFallback: one
+    // reintroduced lambda over fwd_* puts the sweep's hot stage back on
+    // the interpreted path (boxed doubles + an UnsafeProjection copy of
+    // every scanned row's forward arrays)
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Walk extends AdaptiveSparkPlanHelper
+    for ((name, df) <- Seq(
+        "q43" -> SweepQueries.q43FormationBarrierSweep(spark, sf),
+        "q18" -> BarrierQueries.q18TripleBarrier(spark, sf))) {
+      spark.catalog.clearCache()
+      val executed = df.queryExecution.executedPlan
+      val hofs = Walk.flatMap(executed)(_.expressions.flatMap(_.collect {
+        case h: HigherOrderFunction
+            if h.references.exists(_.name.toLowerCase.startsWith("fwd")) => h
+      }))
+      assert(hofs.isEmpty, s"$name: interpreted lambda over forward arrays: " +
+        hofs.map(_.sql).mkString("; "))
+      assert(Walk.find(executed)(_.expressions.exists(_.exists(
+        _.isInstanceOf[graft.functions.FirstTouch]))).isDefined,
+        s"$name: barrier scan no longer runs the first_touch kernel")
+    }
+  }
+
   test("q02 aggregates with partial (map-side) aggregation") {
     val p = plan(CoreQueries.q02CondAgg(spark, sf))
     assert(p.contains("HashAggregate"), s"no hash aggregate:\n$p")
