@@ -57,94 +57,34 @@ object Bench {
     // whichever query happens to run first
     spark.range(1L << 20).selectExpr("sum(id) AS s")
       .write.format("noop").mode("overwrite").save()
-    // The four staging chains — dedup (exact-dedup → MinHash → LSH →
-    // verify, shared by q49/q61/q79/q87/q89), eval (q72's KDE lane + the
-    // tamrs chain), mcdm (gen720 fold frame + 200-rep bootstrap medians,
-    // read by q131-q136/q139/q141/q142) and gate (the written flat/routed/
-    // append-base indexes the q126/q127/q129/q130 twins consume) — are
-    // measured as their OWN rows so consumers report plan cost, not
-    // build-order accounting (r13/r15). r16: the chains are mutually
-    // INDEPENDENT (different sources, different staged outputs, memoized
-    // under different keys) and each is stage-latency-bound, not CPU-bound
-    // (dozens of small sequential stages over ≤10⁵-row frames at bench
-    // SF), so they now run CONCURRENTLY on the shared scheduler — the
-    // overlap a production cluster would get from submitting independent
-    // staging pipelines together. Each row still reports its own build's
-    // wall-clock (slightly inflated by contention vs a solo run);
-    // q_staging_wall reports the overlapped region's total, which is what
-    // the session actually paid. Thread-safe by construction:
-    // StagingRoots.memoizedBuild serializes per-key joins and
-    // releasingBuildCaches refcounts concurrent sibling frames.
-    val stagingBuilds: Seq[(String, SparkSession => Unit)] = {
-      val dedup =
-        if (only.forall(_.exists(Set("q49_dedup_pipeline",
-            "q61_dup_components", "q79_split_leakage",
-            "q87_components_star", "q89_cluster_rep"))))
-          Seq("q_staging_dedup" -> ((s: SparkSession) =>
-            { graft.queries.DedupQueries.Staging.scoredAndCounts(s, sfDir); () }))
-        else Seq.empty
-      val eval =
-        if (only.forall(_.exists(Set("q72_signal_regularity",
-            "q122_tamrs", "q123_tier_screening"))))
-          Seq("q_staging_eval" -> ((s: SparkSession) =>
-            graft.queries.EvalStaging.build(s, sfDir)))
-        else Seq.empty
-      val mcdm =
-        if (only.forall(_.exists(Set("q131_entropy_topsis", "q132_promethee",
-            "q133_stability_rank", "q134_universality", "q135_bootstrap_rank",
-            "q136_rank_agreement", "q139_rank_matrix", "q141_best_barriers",
-            "q142_top_barriers"))))
-          Seq("q_staging_mcdm" -> ((s: SparkSession) =>
-            graft.queries.McdmStaging.build(s, sfDir)))
-        else Seq.empty
-      val gate = {
-        val needFlat = only.forall(_.contains("q126_semantic_gate_census"))
-        val needRouted = only.forall(_.exists(Set(
-          "q127_semantic_gate_routed", "q129_semantic_gate_staged")))
-        val needAppendBase =
-          only.forall(_.contains("q130_semantic_index_append"))
-        if (needFlat || needRouted || needAppendBase)
-          Seq("q_staging_gate" -> ((s: SparkSession) =>
-            graft.queries.GateStaging.build(s, sfDir,
-              flat = needFlat, routed = needRouted, appendBase = needAppendBase)))
-        else Seq.empty
-      }
-      dedup ++ eval ++ mcdm ++ gate
-    }
+    // Staging chains are measured as their OWN rows so consumers report
+    // plan cost, not build-order accounting; which chains (and parts) a
+    // run stages comes from their declaration, queries.StagingRoots.chains.
+    // The chains are independent and stage-latency-bound, so they run
+    // concurrently: each row reports its own build's wall-clock,
+    // q_staging_wall the overlapped region the session paid.
+    val stagingChains = graft.queries.StagingRoots.chainsFor(only)
     val allStaging: Seq[(String, Double, Option[String])] =
-      if (stagingBuilds.isEmpty) Seq.empty
+      if (stagingChains.isEmpty) Seq.empty
       else {
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        // dev A/B knob for the staging region's scheduling (the driver
-        // sets no env, so its runs keep the default)
-        val seqMode = sys.env.get("SPARK_GRAFT_STAGING_SEQ").contains("true")
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          if (seqMode) 1 else stagingBuilds.size)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
         // Core-share sizing (guide §2.6): N independent chains submitted
         // together each get cores/N shuffle partitions — what N pipelines
         // sharing one cluster would be sized to — instead of N chains each
         // assuming the whole machine (4 chains x 32-partition stages
         // quadruple scheduler pressure for frames this small).
-        val chainParts = math.max(2, cpus.toInt / stagingBuilds.size)
+        val chainParts = math.max(2, cpus.toInt / stagingChains.size)
         val w0 = System.nanoTime()
-        val rows = try {
-          stagingBuilds.map { case (name, build) =>
-            Future {
-              // per-chain session clone: confs are session-local, so the
-              // core-share partition cap never leaks into query rows
-              val s = graft.SparkEntry.ensureConfs(spark.newSession())
-              if (!seqMode)
-                s.conf.set("spark.sql.shuffle.partitions", chainParts.toString)
-              val t0 = System.nanoTime()
-              val err =
-                try { build(s); None }
-                catch { case scala.util.control.NonFatal(e) => Some(jsonEscape(e.toString)) }
-              (name, (System.nanoTime() - t0) / 1e9, err)
-            }
-          }.map(Await.result(_, Duration.Inf))
-        } finally pool.shutdown()
+        val rows = graft.queries.StagingRoots.all(stagingChains.map { c => () =>
+          // per-chain session clone: confs are session-local, so the
+          // core-share partition cap never leaks into query rows
+          val s = graft.SparkEntry.ensureConfs(spark.newSession())
+          s.conf.set("spark.sql.shuffle.partitions", chainParts.toString)
+          val t0 = System.nanoTime()
+          val err =
+            try { c.build(s, sfDir); None }
+            catch { case scala.util.control.NonFatal(e) => Some(jsonEscape(e.toString)) }
+          (s"q_staging_${c.name}", (System.nanoTime() - t0) / 1e9, err)
+        })
         rows :+ (("q_staging_wall", (System.nanoTime() - w0) / 1e9,
           None: Option[String]))
       }
@@ -206,9 +146,9 @@ object Bench {
     // same elapsed seconds up to 4×; q_staging_wall is what the session
     // actually paid for the whole staging region. (When staging is empty
     // — a filtered run with no staged consumers — nothing changes.)
-    val stagingBuildNames = stagingBuilds.map(_._1).toSet
+    val buildRows = allStaging.map(_._1).toSet - "q_staging_wall"
     val total = results.collect {
-      case (k, v, None) if !stagingBuildNames.contains(k) => v
+      case (k, v, None) if !buildRows.contains(k) => v
     }.sum
     val sfj = jsonEscape(sfDir)
     val line =

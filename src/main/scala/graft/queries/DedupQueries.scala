@@ -267,12 +267,11 @@ object DedupQueries {
     * staging tables between pipeline stages. */
   private[graft] def scoredCandidatePairs(spark: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val docs = Tables.documents(spark, d)
     val reps = docs.withColumn("th", md5(col("text")))
       .groupBy(col("th")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     // HASHED shingle sets (sorted distinct md5-32 longs): the pipeline's
     // shingle representation — 8 bytes per shingle through the persisted
     // frame and both sides of the verify join, vs ~15-char strings that
@@ -284,7 +283,7 @@ object DedupQueries {
       .join(reps, "doc_id")
       .select(col("doc_id"),
         graft.functions.GraftFunctions.hashedWordBigrams(col("text")).as("shset"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val bands = minhashBands(shingled, nLanes = 16, perBand = 2)
     val cand = bands.select(col("band"), col("band_key"), col("doc_id").as("d1"))
       .join(bands.select(col("band").as("band_r"), col("band_key").as("band_key_r"),
@@ -321,8 +320,7 @@ object DedupQueries {
 
   private def verifyScored(spark: SparkSession, cand0: DataFrame,
       shingled: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val cand = cand0.persist(StorageLevel.MEMORY_AND_DISK)
+    val cand = StagingRoots.persist(cand0)
     val nCand = cand.count()
     val nPart = math.max(sessionShuffleParts(spark),
       (nCand * 2500L / (48L << 20)).toInt + 1)
@@ -349,58 +347,16 @@ object DedupQueries {
     * into the parquet scan. A fresh per-process tmpdir keys the staging to
     * this JVM — no cross-run staleness; StagingSpec pins staging == inline.
     */
-  // directory keys come from StagingRoots.pathKey (MD5 of the corpus
-  // path): String.hashCode is 32-bit and trivially collides, which would
-  // make two distinct corpus dirs append into the SAME staging/index
-  // directories in one JVM, silently mixing their rows
-
   private[graft] object Staging {
-    private lazy val root =
-      StagingRoots.tempRootWithCleanup("graft_dedup_staging")
-    private val done = StagingRoots.memo[(String, String)]()
-
-    def scoredAndCounts(spark: SparkSession, d: String): (DataFrame, DataFrame) = {
-      val (sp, cp) = StagingRoots.memoizedBuild(done, d) {
-        // releasing: the build persists reps/shingled (+ the verify
-        // join's candidate frame) for its multi-pass scoring; once both
-        // parquet outputs are written, consumers read THOSE — the
-        // in-memory copies would otherwise pin corpus-sized frames for
-        // the JVM lifetime (r13 review)
-        StagingRoots.releasingBuildCaches(spark) {
-          val (docs, reps, scored) = scoredCandidatePairs(spark, d)
-          val dirKey = StagingRoots.pathKey(d)
-          val sPath = root.resolve(s"scored_$dirKey").toString
-          val cPath = root.resolve(s"counts_$dirKey").toString
-          // Overwrite, not Append: a failed build is not memoized, and a
-          // retry must not append onto its committed part-files (the
-          // EvalStaging r11 ADVICE, same medicine here).
-          // The two writes are independent reads of already-persisted
-          // frames, so they OVERLAP (guide §2.6 — the r16 "not yet
-          // optimized" item): the counts job's handful of tasks back-fill
-          // the scored write's straggler tail instead of waiting for it.
-          locally {
-            import scala.concurrent.{Await, Future, ExecutionContext}
-            import scala.concurrent.duration.Duration
-            import scala.util.Try
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-            implicit val ec: ExecutionContext =
-              ExecutionContext.fromExecutorService(pool)
-            try {
-              val fs: Seq[Future[Unit]] = Seq(
-                Future { scored.write
-                  .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sPath) },
-                Future { docs.agg(count(lit(1)).as("n_docs"))
-                  .crossJoin(reps.agg(count(lit(1)).as("n_after_exact")))
-                  .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(cPath) })
-              fs.map(f => Try(Await.result(f, Duration.Inf))).foreach(_.get)
-            } finally pool.shutdown()
-          }
-          (sPath, cPath)
-        }
-      }
-      (graft.sources.ResultSink.read(spark, sp),
-        graft.sources.ResultSink.read(spark, cp))
-    }
+    def scoredAndCounts(spark: SparkSession, d: String): (DataFrame, DataFrame) =
+      StagingRoots.tables(spark, "dedup", "scored", d) {
+        val (docs, reps, scored) = scoredCandidatePairs(spark, d)
+        // two independent reads of already-persisted frames, written
+        // concurrently: the counts job's handful of tasks back-fill the
+        // scored write's straggler tail
+        Seq(scored, docs.agg(count(lit(1)).as("n_docs"))
+          .crossJoin(reps.agg(count(lit(1)).as("n_after_exact"))))
+      } match { case Seq(scored, counts) => (scored, counts) }
   }
 
   def q49DedupPipeline(spark: SparkSession, d: String): DataFrame = {
@@ -611,40 +567,23 @@ object DedupQueries {
   // q49; removal is greedy per verified pair (later doc loses), existing
   // docs always win ties against incoming.
   private[graft] object IncrementalIndex {
-    private lazy val root =
-      StagingRoots.tempRootWithCleanup("graft_incr_index")
-    private val done = StagingRoots.memo[(String, String, String)]()
-
     /** (digests (th), bands (doc_id, band, band_key), sketches
       * (doc_id, shset)) of the EXISTING-corpus exact reps, from the
       * written index. */
-    def of(spark: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-      val (dp, bp, sp) = StagingRoots.memoizedBuild(done, d) {
+    def of(spark: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) =
+      StagingRoots.tables(spark, "dedup", "incr_index", d) {
         val docs = Tables.documents(spark, d)
         val existing = docs
           .filter(md5Int(col("doc_id").cast("string")) % 5 =!= 0)
         val reps = existing.withColumn("th", md5(col("text")))
           .groupBy(col("th")).agg(min(col("doc_id")).as("doc_id"))
-        val sketches = existing.join(reps.select(col("doc_id")), "doc_id")
-          .select(col("doc_id"),
-            graft.functions.GraftFunctions.hashedWordBigrams(col("text")).as("shset"))
-          .persist()
-        val bands = minhashBands(sketches, nLanes = 16, perBand = 2)
-        val dirKey = StagingRoots.pathKey(d)
-        val dPath = root.resolve(s"digests_$dirKey").toString
-        val bPath = root.resolve(s"bands_$dirKey").toString
-        val sPath = root.resolve(s"sketches_$dirKey").toString
-        reps.select(col("th"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dPath)
-        bands.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(bPath)
-        sketches.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(sPath)
-        sketches.unpersist()
-        (dPath, bPath, sPath)
-      }
-      (graft.sources.ResultSink.read(spark, dp),
-        graft.sources.ResultSink.read(spark, bp),
-        graft.sources.ResultSink.read(spark, sp))
-    }
+        val sketches = StagingRoots.persist(
+          existing.join(reps.select(col("doc_id")), "doc_id")
+            .select(col("doc_id"),
+              graft.functions.GraftFunctions.hashedWordBigrams(col("text")).as("shset")))
+        Seq(reps.select(col("th")), minhashBands(sketches, nLanes = 16, perBand = 2),
+          sketches)
+      } match { case Seq(digests, bands, sketches) => (digests, bands, sketches) }
   }
 
   def q88IncrementalDedup(spark: SparkSession, d: String): DataFrame = {

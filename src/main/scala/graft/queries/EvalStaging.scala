@@ -1,124 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Per-JVM temp staging root with recursive delete on JVM exit — staged
-  * parquet copies would otherwise accumulate in /tmp across bench/test
-  * JVMs (r11 ADVICE). ONE definition for the three per-JVM staging
-  * caches (eval, dedup, incremental index). */
-private[graft] object StagingRoots {
-  def tempRootWithCleanup(prefix: String): java.nio.file.Path = {
-    val r = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook { deleteRecursively(r) }
-    r
-  }
-
-  /** Recursive delete, closing the Files.walk stream (it holds directory
-    * handles until closed). */
-  def deleteRecursively(r: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    if (Files.exists(r)) {
-      val walk = Files.walk(r)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
-  }
-
-  /** Recursive copy of a directory tree into `dst` (which may already
-    * exist — children are created under it). The q130 lifecycle lane
-    * copies its memoized PRISTINE base index into a fresh workdir per
-    * invocation, because append/compact MUTATE the index in place and a
-    * memoized build must never be mutated. */
-  def copyRecursively(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path, StandardCopyOption}
-    val walk = Files.walk(src)
-    try walk.forEach { p =>
-      val t = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
-    } finally walk.close()
-  }
-
-  /** Collision-free filename stem for a corpus dir path. */
-  def pathKey(d: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-
-  type Memo[A] =
-    java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.CompletableFuture[A]]
-  def memo[A](): Memo[A] = new Memo[A]()
-
-  /** Release the Spark caches a staging BUILD created once its output is
-    * written: builders persist corpus-sized frames (shingle sets, band
-    * keys, normalized vectors) for their multi-pass builds, and the
-    * memoized staging path never touches those RDDs again — un-released
-    * they pin multi-GB copies in the block store for the JVM's lifetime
-    * (r13 review). Diff-of-persistent-RDDs scoping, valid under the
-    * single-driver assumption the staging lanes document (builds are
-    * serialized rows in Bench/Verify; a concurrent persist by a NON-BUILD
-    * thread during the build window would be swept too).
-    *
-    * Concurrency-safe across SIBLING builds (r16): GateStaging runs its
-    * independent index builds on a thread pool, so the naive
-    * per-invocation diff would let the first finisher sweep a sibling's
-    * still-in-use seeding caches (its persist landed after the
-    * finisher's snapshot). Frames are refcounted instead: the first
-    * entrant snapshots the context's persistent-RDD ids, the LAST exiter
-    * sweeps everything persisted since — getPersistentRDDs is
-    * CONTEXT-level, so the scheme holds across cloned sessions too. */
-  private[this] val buildFrames = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile private[this] var framesBefore: Set[Int] = Set.empty
-  private[this] val frameLock = new Object
-  def releasingBuildCaches[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    frameLock.synchronized {
-      if (buildFrames.getAndIncrement() == 0)
-        framesBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    }
-    try body
-    finally frameLock.synchronized {
-      if (buildFrames.decrementAndGet() == 0) {
-        val before = framesBefore
-        spark.sparkContext.getPersistentRDDs
-          .filter { case (id, _) => !before.contains(id) }
-          .values.foreach(_.unpersist(blocking = false))
-      }
-    }
-  }
-
-  /** ONE definition of the per-JVM memoized staging build (three staging
-    * caches share it — eval, dedup, gate — after the r13 review caught
-    * the scaffolding triplicating): the first caller of `key` runs
-    * `build` OUTSIDE the map's critical section (computeIfAbsent holds
-    * the hash-bin lock for the whole build, serializing unrelated keys
-    * that share a bin — measured on the eval lane: the "concurrent"
-    * regularity and tamrs builds ran back-to-back until this), later
-    * callers join the same future; a FAILED build removes the key so a
-    * retry rebuilds (each writer uses SaveMode.Overwrite, so the retry
-    * starts clean over the debris), and the failure rethrows its RAW
-    * cause, not the CompletionException join() wraps it in — consumers
-    * (and Bench's error column) see the same exception type the unstaged
-    * chain threw. */
-  def memoizedBuild[A](done: Memo[A], key: String)(build: => A): A = {
-    val fresh = new java.util.concurrent.CompletableFuture[A]()
-    val prior = done.putIfAbsent(key, fresh)
-    val fut = if (prior != null) prior else {
-      try fresh.complete(build)
-      catch { case e: Throwable =>
-        done.remove(key, fresh)
-        fresh.completeExceptionally(e)
-      }
-      fresh
-    }
-    try fut.join() catch {
-      case e: java.util.concurrent.CompletionException if e.getCause != null =>
-        throw e.getCause
-    }
-  }
-}
 
 /** Staged shared eval frames (the DedupQueries.Staging discipline on the
   * eval axis): q72's KDE regularity lane and the q122/q123 TAMRS frame are
@@ -137,42 +19,17 @@ private[graft] object StagingRoots {
   * audits the raw KDE plan, and the DuckDB oracles replay the raw chains
   * — staging changes where the rows are read from, never what they are. */
 private[graft] object EvalStaging {
-  private lazy val root = StagingRoots.tempRootWithCleanup("graft_eval_staging")
-  private val done = StagingRoots.memo[String]()
-
-  private def staged(kind: String, d: String)(build: => DataFrame)
-      (spark: SparkSession): DataFrame = {
-    val key = s"${kind}_${StagingRoots.pathKey(d)}"
-    val path = StagingRoots.memoizedBuild(done, key) {
-      val p = root.resolve(key).toString
-      val t0 = System.nanoTime()
-      // Overwrite, not Append: a failed build leaves committed part-files
-      // but no memoized key, and a retry must start from a clean directory
-      // rather than append duplicates onto the debris (r11 ADVICE).
-      // releasingBuildCaches: today's eval builders persist nothing, but
-      // the wrapper makes the staging-wide invariant ("a build's persists
-      // are swept once its parquet is written, and concurrent siblings
-      // refcount") ENFORCED here rather than incidental (r16 ADVICE) —
-      // these builds run concurrently with the dedup/mcdm/gate chains in
-      // Bench, all of which enter the same refcounted window.
-      StagingRoots.releasingBuildCaches(spark) {
-        build.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-      }
-      println(f"[staging_eval] $kind built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      p
-    }
-    graft.sources.ResultSink.read(spark, path)
-  }
-
   /** q72's full regularity output (cfg, n, qualified, n_peaks,
     * kde_peak_cv, raw_iat_cv, coverage, bandwidth_factor), staged. */
   def regularity(spark: SparkSession, d: String): DataFrame =
-    staged("regularity", d)(RankingQueries.q72SignalRegularity(spark, d))(spark)
+    StagingRoots.table(spark, "eval", "regularity", d)(
+      RankingQueries.q72SignalRegularity(spark, d))
 
   /** The joined TAMRS frame (cfg, n_trades, tamrs, rachev_ratio,
     * sl_cdar_ratio, ou_barrier_ratio), staged. */
   def tamrs(spark: SparkSession, d: String): DataFrame =
-    staged("tamrs", d)(EvalStatsQueries.tamrsFrameRaw(spark, d))(spark)
+    StagingRoots.table(spark, "eval", "tamrs", d)(
+      EvalStatsQueries.tamrsFrameRaw(spark, d))
 
   /** Pre-build both frames (the Bench `q_staging_eval` hook).
     *
@@ -195,11 +52,6 @@ private[graft] object EvalStaging {
     * its own AQE regime (r12 verdict; EvalStagingSpec polls the caller's
     * conf during a live build). */
   def build(spark: SparkSession, d: String): Unit = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    import scala.util.Try
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val buildSession = spark.newSession()
     // newSession inherits only BUILDER-time SparkConf entries, not the
     // caller's runtime conf.set state — carry the confs the staged chains
@@ -213,14 +65,9 @@ private[graft] object EvalStaging {
     }
     graft.SparkEntry.ensureConfs(buildSession)
     buildSession.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val fs = Seq(
-        Future(regularity(buildSession, d)),
-        Future(tamrs(buildSession, d)))
-      // await BOTH builds before teardown — bailing on the first failure
-      // would shut the pool under the still-running second build (r12
-      // ADVICE) — then rethrow the first failure
-      fs.map(f => Try(Await.result(f, Duration.Inf))).foreach(_.get)
-    } finally pool.shutdown()
+    StagingRoots.all(Seq(
+      () => regularity(buildSession, d),
+      () => tamrs(buildSession, d)))
+    ()
   }
 }

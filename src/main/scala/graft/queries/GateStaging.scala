@@ -21,44 +21,20 @@ import org.apache.spark.sql.SparkSession
   * hash-match).
   */
 private[graft] object GateStaging {
-  private lazy val root = StagingRoots.tempRootWithCleanup("graft_gate_staging")
-  private val done = StagingRoots.memo[String]()
-
-  private def staged(kind: String, d: String)(build: String => Unit): String = {
-    val key = s"${kind}_${StagingRoots.pathKey(d)}"
-    StagingRoots.memoizedBuild(done, key) {
-      val path = root.resolve(key).toString
-      val t0 = System.nanoTime()
-      build(path)
-      println(f"[staging_gate] $kind built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      path
-    }
-  }
-
-  // release the corpus caches semanticStreamIndex/Routed persist for
-  // their seeding passes once the index is written (shared helper —
-  // see StagingRoots.releasingBuildCaches for the contract)
-  private def unpersistBuildCaches[A](spark: SparkSession)(body: => A): A =
-    StagingRoots.releasingBuildCaches(spark)(body)
-
   /** The flat (q113-cell) index dir for `d`, built+written on first use. */
   def flatDir(spark: SparkSession, d: String): String =
-    staged("flat", d) { path =>
-      unpersistBuildCaches(spark) {
-        val (cents, members) = SimilarityQueries.semanticStreamIndex(spark, d)
-        SimilarityQueries.writeGateIndexFlat(spark, path, cents, members)
-      }
+    StagingRoots.dir("gate", "flat", d) { path =>
+      val (cents, members) = SimilarityQueries.semanticStreamIndex(spark, d)
+      SimilarityQueries.writeGateIndexFlat(spark, path, cents, members)
     }
 
   /** The routed (q116-cell) index dir for `d`, built+written on first use.
     * Shared by the broadcast-routed (q127) and staged (q129) heads — the
     * two heads READ the same written tables differently. */
   def routedDir(spark: SparkSession, d: String): String =
-    staged("routed", d) { path =>
-      unpersistBuildCaches(spark) {
-        val (tabs, members) = SimilarityQueries.semanticStreamIndexRouted(spark, d)
-        SimilarityQueries.writeGateIndexRouted(spark, path, tabs, members)
-      }
+    StagingRoots.dir("gate", "routed", d) { path =>
+      val (tabs, members) = SimilarityQueries.semanticStreamIndexRouted(spark, d)
+      SimilarityQueries.writeGateIndexRouted(spark, path, tabs, members)
     }
 
   // ---------------------------------------------------------------------
@@ -78,14 +54,11 @@ private[graft] object GateStaging {
   // dirs they were read from. The QUERY still computes its result from
   // the parquet corpus every run; only the index-table load is amortized,
   // the same line the r13 staging split drew for the index BUILD.
-  private val flatCentsMemo = StagingRoots.memo[Seq[Seq[Long]]]()
-  private val routedTabsMemo = StagingRoots.memo[SimilarityQueries.RoutedTables]()
 
   /** The flat gate's centroid table, collected once per (JVM, corpus). */
   def flatCents(spark: SparkSession, d: String): Seq[Seq[Long]] = {
     val idx = flatDir(spark, d)
-    StagingRoots.memoizedBuild(flatCentsMemo,
-      s"flatcents_${StagingRoots.pathKey(d)}") {
+    StagingRoots.memoized(s"gate_flatcents_${StagingRoots.pathKey(d)}") {
       SimilarityQueries.readFlatCents(spark, idx)
     }
   }
@@ -93,8 +66,7 @@ private[graft] object GateStaging {
   /** The routed gate's RoutedTables, collected once per (JVM, corpus). */
   def routedTables(spark: SparkSession, d: String): SimilarityQueries.RoutedTables = {
     val idx = routedDir(spark, d)
-    StagingRoots.memoizedBuild(routedTabsMemo,
-      s"routedtabs_${StagingRoots.pathKey(d)}") {
+    StagingRoots.memoized(s"gate_routedtabs_${StagingRoots.pathKey(d)}") {
       SimilarityQueries.readRoutedTables(spark, idx)
     }
   }
@@ -103,17 +75,15 @@ private[graft] object GateStaging {
     * `embeddings`), memoized per (JVM, corpus). Never mutated — the
     * append lifecycle copies it into a fresh workdir per invocation. */
   private def appendBasePristineDir(spark: SparkSession, d: String): String =
-    staged("appendbase", d) { path =>
-      unpersistBuildCaches(spark) {
-        import org.apache.spark.sql.functions.col
-        val (coarse, fineRouted, members) = SimilarityQueries
-          .semanticStreamIndexStagedFrom(
-            graft.Tables.embeddings(spark, d)
-              .filter(col("vec_id") % 4 =!= 0)
-              .select(col("vec_id"), col("embedding")))
-        SimilarityQueries.writeGateIndexStaged(spark, path, coarse, fineRouted, members)
-        ()
-      }
+    StagingRoots.dir("gate", "appendbase", d) { path =>
+      import org.apache.spark.sql.functions.col
+      val (coarse, fineRouted, members) = SimilarityQueries
+        .semanticStreamIndexStagedFrom(
+          graft.Tables.embeddings(spark, d)
+            .filter(col("vec_id") % 4 =!= 0)
+            .select(col("vec_id"), col("embedding")))
+      SimilarityQueries.writeGateIndexStaged(spark, path, coarse, fineRouted, members)
+      ()
     }
 
   /** A FRESH mutable copy of the pristine q130 base index — one per call,
@@ -132,7 +102,7 @@ private[graft] object GateStaging {
   def appendWorkdir(spark: SparkSession, d: String): String = {
     val pristine = appendBasePristineDir(spark, d)
     Option(prevWorkdir.get()).foreach(StagingRoots.deleteRecursively)
-    val work = java.nio.file.Files.createTempDirectory(root, "appendwork_")
+    val work = java.nio.file.Files.createTempDirectory(StagingRoots.root, "appendwork_")
     StagingRoots.copyRecursively(java.nio.file.Paths.get(pristine), work)
     prevWorkdir.set(work)
     work.toString
@@ -145,14 +115,10 @@ private[graft] object GateStaging {
     * build otherwise lands inside q130's first timed run — the exact
     * build-cost-in-gate-rows accounting r13 fixed for the twins).
     *
-    * The selected builds run CONCURRENTLY (r16, the EvalStaging.build
-    * discipline): the three indexes are independent — different source
-    * slices, different output dirs, memoized under different keys — and
-    * each build is a chain of small sequential stages (seed/assign/write
-    * over a 500–4k-vector corpus at bench SF), i.e. stage-latency-bound,
-    * not CPU-bound. Safe because memoizedBuild already serializes
-    * per-key cross-thread joins and releasingBuildCaches refcounts
-    * concurrent sibling frames (the last exiter sweeps).
+    * The selected builds run CONCURRENTLY (r16): the three indexes are
+    * independent (different source slices, dirs and memo keys), and each
+    * is a chain of small sequential stages, stage-latency-bound rather
+    * than CPU-bound at bench SF.
     *
     * The flat/routed lanes warm their ROUTING-TABLE memos here too (r16
     * ADVICE): the one-time orderBy+collect otherwise lands inside
@@ -162,24 +128,11 @@ private[graft] object GateStaging {
   def build(spark: SparkSession, d: String,
       flat: Boolean = true, routed: Boolean = true,
       appendBase: Boolean = false): Unit = {
-    val builds: Seq[() => Unit] = Seq(
+    StagingRoots.all(Seq(
       (flat, () => { flatCents(spark, d); () }),
       (routed, () => { routedTables(spark, d); () }),
       (appendBase, () => { appendBasePristineDir(spark, d); () })
-    ).collect { case (true, b) => b }
-    if (builds.sizeIs <= 1) builds.foreach(_.apply())
-    else {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      import scala.util.Try
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(builds.size)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try {
-        // await ALL builds before teardown, then rethrow the first
-        // failure (the EvalStaging.build r12-ADVICE pattern)
-        builds.map(b => Future(b())).map(f => Try(Await.result(f, Duration.Inf)))
-          .foreach(_.get)
-      } finally pool.shutdown()
-    }
+    ).collect { case (true, b) => b })
+    ()
   }
 }

@@ -136,7 +136,7 @@ object McdmQueries {
       // fact scan ~10× over). The frame is O(barriers × fold cells)
       // (1,920 rows), so the cache is trivial; Bench clears caches
       // between queries.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
   }
 
   /** DuckDB twin of [[foldFrame]] — `folds` is MATERIALIZED because the

@@ -23,39 +23,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * round-trip parquet bit-exactly, so hashes are unchanged.
   */
 private[graft] object McdmStaging {
-  private lazy val root = StagingRoots.tempRootWithCleanup("graft_mcdm_staging")
-  private val done = StagingRoots.memo[String]()
-
-  private def staged(kind: String, d: String)(build: SparkSession => DataFrame)
-      (spark: SparkSession): DataFrame = {
-    val key = s"${kind}_${StagingRoots.pathKey(d)}"
-    val path = StagingRoots.memoizedBuild(done, key) {
-      val p = root.resolve(key).toString
-      val t0 = System.nanoTime()
-      // the raw builders persist their outputs for their own multi-subtree
-      // consumers; the staged path never touches those RDDs again, so
-      // release them once the parquet is written (the EvalStaging rule)
-      StagingRoots.releasingBuildCaches(spark) {
-        build(spark).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-      }
-      println(f"[staging_mcdm] $kind built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      p
-    }
-    graft.sources.ResultSink.read(spark, path)
-  }
-
   /** The gen720 fold frame (bid, sym, fmt, thr, fold, fold_key, n, 6
     * metrics), staged — the ONE windowed fact pass the pack pays per
     * corpus. */
   def folds(spark: SparkSession, d: String): DataFrame =
-    staged("folds", d)(s => McdmQueries.foldFrameRaw(s, d))(spark)
+    StagingRoots.table(spark, "mcdm", "folds", d)(McdmQueries.foldFrameRaw(spark, d))
 
   /** The 200-rep bootstrap resample medians (rep, bid, med_*), staged —
     * the resample join + per-(rep, bid) median aggregation shared by
     * q135/q136/q139. Builds on the staged fold frame so the fact pass
     * runs once, not once per frame. */
   def repMedians(spark: SparkSession, d: String): DataFrame =
-    staged("repmed", d)(s => McdmQueries.repMedianRaw(s, folds(s, d)))(spark)
+    StagingRoots.table(spark, "mcdm", "repmed", d)(
+      McdmQueries.repMedianRaw(spark, folds(spark, d)))
 
   /** Pre-build both frames (the Bench `q_staging_mcdm` hook). Sequential
     * by dependency: repMedians consumes the staged folds. */

@@ -773,7 +773,6 @@ object SimilarityQueries {
     * centroid table — the streaming gate's broadcast side. */
   private def scaledAssignWithCents(v: DataFrame,
       targetCell: Int = TargetCell): (IndexedSeq[Array[Double]], DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val n = v.count()
     val k = math.max(1, math.ceil(n / targetCell.toDouble).toInt)
     // same deterministic seed rule as q63: the K smallest (md5(vec_id), vec_id)
@@ -794,7 +793,7 @@ object SimilarityQueries {
         col("mud"), cents.map(_.map(_.toLong).toSeq)))
     // persisted: the centroid-update collect AND the second assignment both
     // consume a1 — uncached, the whole ×K first pass would run twice
-    val a1 = assign(seeds.toIndexedSeq, "c1")(v).persist(StorageLevel.MEMORY_AND_DISK)
+    val a1 = assign(seeds.toIndexedSeq, "c1")(v).transform(StagingRoots.persist)
     val lanes = (0 until Dim).map(i =>
       sum(element_at(col("mud"), i + 1).cast("long")).as(s"s$i"))
     val sums = a1.groupBy(col("c1"))
@@ -811,7 +810,7 @@ object SimilarityQueries {
     val cents2 = (0 until k).map(c => sums.getOrElse(c, seeds(c)))
     (cents2,
       assign(cents2, "cid")(a1)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .transform(StagingRoots.persist))
   }
 
   def q113SemanticDedupScaled(spark: SparkSession, d: String): DataFrame =
@@ -824,12 +823,11 @@ object SimilarityQueries {
     * against. */
   private[graft] def semanticStreamIndex(spark: SparkSession, d: String,
       targetCell: Int = TargetCell): (Seq[Seq[Long]], DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val v = withNorm(spark, d)
       .withColumn("mud",
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
       .repartition(col("vec_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val (cents, a2) = scaledAssignWithCents(v, targetCell)
     val members = a2.groupBy(col("cid"))
       .agg(collect_list(struct(col("vec_id"), col("e"), col("nrm"))).as("members"))
@@ -847,12 +845,11 @@ object SimilarityQueries {
     * (q126 / q127). */
   private[graft] def semanticStreamIndexRouted(spark: SparkSession, d: String,
       targetCell: Int = TargetCell): (RoutedTables, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val v = withNorm(spark, d)
       .withColumn("mud",
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
       .repartition(col("vec_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val (tabs, a2) = routedAssignWithTables(v, targetCell)
     val members = a2.groupBy(col("cid"))
       .agg(collect_list(struct(col("vec_id"), col("e"), col("nrm"))).as("members"))
@@ -1357,7 +1354,6 @@ object SimilarityQueries {
     * tables — the routed streaming gate's broadcast side. */
   private[graft] def routedAssignWithTables(v: DataFrame,
       targetCell: Int = TargetCell): (RoutedTables, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val n = v.count()
     val k = math.max(1, math.ceil(n / targetCell.toDouble).toInt)
     val k1 = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
@@ -1367,7 +1363,7 @@ object SimilarityQueries {
     def assign(fineCents: IndexedSeq[Array[Long]], outCol: String)(df: DataFrame): DataFrame =
       routedAssignApply(routedTablesOf(seedsL, k1, fineCents), outCol)(df)
 
-    val a1 = assign(seedsL.toIndexedSeq, "c1")(v).persist(StorageLevel.MEMORY_AND_DISK)
+    val a1 = assign(seedsL.toIndexedSeq, "c1")(v).transform(StagingRoots.persist)
     val lanes = (0 until Dim).map(i =>
       sum(element_at(col("mud"), i + 1).cast("long")).as(s"s$i"))
     val sums = a1.groupBy(col("c1"))
@@ -1384,7 +1380,7 @@ object SimilarityQueries {
     val tables = routedTablesOf(seedsL, k1, cents2)
     (tables,
       routedAssignApply(tables, "cid")(a1)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .transform(StagingRoots.persist))
   }
 
   def q116SemanticDedupRouted(spark: SparkSession, d: String): DataFrame =
@@ -1428,7 +1424,6 @@ object SimilarityQueries {
     * zipWithIndex). Shared by the staged assignment and the SemScale
     * seed-geometry census. */
   private[graft] def stagedSeeds(v: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
     val spark = v.sparkSession
@@ -1443,7 +1438,7 @@ object SimilarityQueries {
       StructField("cid", IntegerType, nullable = false),
       StructField("smud", ArrayType(DoubleType, containsNull = false))))
     spark.createDataFrame(seedRdd, seedSchema)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
   }
 
   /** The O(√K) coarse table — the staged path's ONLY collected state. */
@@ -1486,7 +1481,6 @@ object SimilarityQueries {
   private[graft] def routedAssignStagedWithTables(v: DataFrame,
       targetCell: Int = TargetCell)
       : (Seq[Seq[Long]], DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val n = v.count()
     val k = math.max(1, math.ceil(n / targetCell.toDouble).toInt)
     val k1 = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
@@ -1503,7 +1497,7 @@ object SimilarityQueries {
         .select(col("fr"),
           expr("transform(cs, x -> transform(x.smud, v -> CAST(v AS BIGINT)))").as("cc"),
           expr("transform(cs, x -> x.cid)").as("ids"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(StagingRoots.persist)
       // O(√K): the non-empty coarse ids (a duplicate seed can orphan a
       // coarse cell — vectors route only among cells that HAVE fine
       // centroids, the routedAssignFrom rule)
@@ -1521,7 +1515,7 @@ object SimilarityQueries {
         .drop("__ridx", "__route", "cc", "ids")
     }
 
-    val a1 = assign(seeds, "c1")(v).persist(StorageLevel.MEMORY_AND_DISK)
+    val a1 = assign(seeds, "c1")(v).transform(StagingRoots.persist)
     val lanes = (0 until Dim).map(i =>
       sum(element_at(col("mud"), i + 1).cast("long")).as(s"s$i"))
     // Lloyd sums stay distributed: K rows keyed by c1, rejoined to seeds
@@ -1531,9 +1525,9 @@ object SimilarityQueries {
         round(col(s"s$i").cast("double") / col("cnt"), 0)): _*).as("umud"))
     val fine2 = seeds.join(sums, seeds("cid") === sums("c1"), "left")
       .select(col("cid"), coalesce(col("umud"), col("smud")).as("smud"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val assigned = assign(fine2, "cid")(a1)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val fineRouted = fine2
       .withColumn("fr",
         graft.functions.GraftFunctions.centroidArgmin(col("smud"), coarse))
@@ -1560,14 +1554,13 @@ object SimilarityQueries {
     * `embeddings` and admits the complement as arrivals. */
   private[graft] def semanticStreamIndexStagedFrom(vecs: DataFrame,
       targetCell: Int = TargetCell): (Seq[Seq[Long]], DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val v = vecs
       .withColumn("e", col("embedding"))
       .withColumn("nrm", sqrt(dot("e", "e")))
       .withColumn("mud",
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
       .repartition(col("vec_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val (coarse, fineRouted, a2) = routedAssignStagedWithTables(v, targetCell)
     val members = a2.groupBy(col("cid"))
       .agg(collect_list(struct(col("vec_id"), col("e"), col("nrm"))).as("members"))
@@ -2047,7 +2040,7 @@ object SimilarityQueries {
         .select(explode(col("members")).as("m"))
         .select(col("m.vec_id").as("vec_id"), col("m.e").as("embedding"))
       val tmp = idx + ".rebuilt"
-      val k = StagingRoots.releasingBuildCaches(spark) {
+      val k = StagingRoots.owningCaches {
         val (coarse, fineRouted, members) = semanticStreamIndexStagedFrom(vecs, tc)
         writeGateIndexStaged(spark, tmp, coarse, fineRouted, members)
       }
