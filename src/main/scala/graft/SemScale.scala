@@ -4,19 +4,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Semantic-dedup-lane scaling rehearsal (dev tool, the EvalScale/
-  * GraphScale pattern): measures the staged routed-assignment stack (q125)
-  * and the exact-first lanes (q117/q118) at the regime they were built
-  * for — K ≥ 10⁵ centroids and 2M-vector corpora — recording wall clock
-  * AND peak JVM heap, because the staged lane's entire reason to exist is
-  * the claim that driver state stays O(√K) while the kernel lanes
-  * (q116/q118) carry O(K) driver collects. In local mode the driver and
-  * executors share one heap, so "peak heap" here upper-bounds the driver
-  * requirement (the r8 array-keyed lane needed SPARK_DRIVER_MEM=32g at
-  * 1000×; the digest-keyed collapse + staged lane are supposed to fit the
-  * 8g dev default — this runner is what proves or refutes that).
+  * GraphScale pattern): measures the routed-assignment stack (q118) and
+  * the exact-first lane (q117) at the regime they were built for —
+  * K ≥ 10⁵ centroids and 2M-vector corpora — recording wall clock AND
+  * peak JVM heap, because the routed head's design claim is that driver
+  * state stays O(√K) (only the coarse table is collected) while the flat
+  * lanes (q113/q117) carry O(K) centroid collects. In local mode the
+  * driver and executors share one heap, so "peak heap" here upper-bounds
+  * the driver requirement (the r8 array-keyed lane needed
+  * SPARK_DRIVER_MEM=32g at 1000×; the digest-keyed collapse + routed head
+  * are supposed to fit the 8g dev default — this runner is what proves or
+  * refutes that).
   *
   * Modes (one JVM per measurement so heap peaks don't bleed across runs):
-  *   staged <dir> [targetCell]  — the q125 stack via stagedStackRehearsal
+  *   staged <dir> [targetCell]  — the q118 stack via stagedStackRehearsal
   *                                (targetCell=16 on a 2M-vector corpus →
   *                                K = 125,000); wall + peak heap + census
   *                                shape (cells, worst cell, pairs).
@@ -45,18 +46,14 @@ import org.apache.spark.sql.functions._
   *                                memory appetite is the build's, not the
   *                                gate's — run this row at whatever heap
   *                                the flat lane needs and report it).
-  *   gateindexr <src> <dst> [targetCell]
-  *                              — ROUTED twin of gateindex (q116 routing
-  *                                tables + members by routed cid): same
-  *                                broadcast footprint, O(√K) assignment
-  *                                kernel instead of O(K).
   *   gateindexrs <src> <dst> [targetCell]
-  *                              — STAGED build of the same routed layout
-  *                                (q125 discipline: no O(K) driver state
-  *                                in the build either) — the 8 g-default
-  *                                path at K where the kernel build needs
-  *                                32 g.
-  *   gate <src> <idx> [S] [mod] [union|seq|seqa|stga]
+  *                              — ROUTED twin of gateindex (q116 routing
+  *                                tables + members by routed cid), built
+  *                                with no O(K) driver state: O(√K)
+  *                                assignment kernel instead of O(K), and
+  *                                the 8 g default suffices at K where a
+  *                                driver-resident build needed 32 g.
+  *   gate <src> <idx> [S] [mod] [union|seq|seqa]
   *                              — the streaming semantic gate (batch twin,
   *                                stream ≡ batch pinned by StreamingSpec)
   *                                reading the written index in a fresh JVM:
@@ -65,7 +62,10 @@ import org.apache.spark.sql.functions._
   *                                2M-vector index is ~544 MB raw — the
   *                                single-broadcast bound the r11 sharding
   *                                answers; each shard scans only its cid
-  *                                range of the index parquet.
+  *                                range of the index parquet. A routed
+  *                                index runs the staged assignment head
+  *                                (O(√K) collected coarse table, the fine
+  *                                table a joined frame).
   *   append <src> <idx> [mod]   — incremental index maintenance
   *                                (semanticIndexAppend): admit a 1-in-<mod>
   *                                arrival batch (vec_ids shifted so they
@@ -328,7 +328,7 @@ object SemScale {
         // at 2M vectors it carries that lane's known memory appetite
         // (3 cached corpus copies + the K = ⌈N/64⌉ argmin passes — the r8
         // measurement put the flat lane past 8g at this scale; production
-        // builds would use the routed q116/q125 lanes). Build heap is
+        // builds would use the routed gateindexrs build). Build heap is
         // reported so the gate rows can cite it honestly.
         val src = args(1)
         val dst = args(2)
@@ -351,45 +351,15 @@ object SemScale {
           f""""build_wall_sec":$buildWall%.1f,""" +
           s""""build_peak_heap_mb":${heapPeakMb()},"xmx_mb":${xmxMb()}}""")
 
-      case "gateindexr" =>
-        // ROUTED twin of `gateindex`: builds + writes the q116 routed-lane
-        // index (routing tables + members by ROUTED cid). The written
-        // tables are the gate's broadcast side (~K·Dim·8 B, same as flat),
-        // but a `gate` run against this index pays O(2√K·Dim) kernel work
-        // per probe row instead of O(K·Dim) — the measured answer to the
-        // flat gate's assignment-dominated 2M-vector wall.
-        val src = args(1)
-        val dst = args(2)
-        val tc = args.lift(3).map(_.toInt)
-          .getOrElse(queries.SimilarityQueries.TargetCell)
-        val spark = session()
-        val n = Tables.embeddings(spark, src).count()
-        resetHeapPeaks()
-        dropOtherLayout(dst, routed = true)
-        val (k, buildWall) = time {
-          val (tabs, m) = queries.SimilarityQueries
-            .semanticStreamIndexRouted(spark, src, tc)
-          queries.SimilarityQueries.writeGateIndexRouted(spark, dst, tabs, m)
-          tabs.grouped.map(_.size).sum
-        }
-        println(s"""{"mode":"gateindexr","src":"$src","dst":"$dst",""" +
-          s""""n_vectors":$n,"k":$k,""" +
-          s""""index_payload_mb":${n * 272 / 1000000},""" +
-          f""""build_wall_sec":$buildWall%.1f,""" +
-          s""""build_peak_heap_mb":${heapPeakMb()},"xmx_mb":${xmxMb()}}""")
-
       case "gateindexrs" =>
-        // STAGED twin of `gateindexr`: the same routed-index LAYOUT built
-        // through the q125 staging discipline — seeds by banded
+        // ROUTED twin of `gateindex`: builds + writes the q116 routed-lane
+        // index (routing tables + members by ROUTED cid) — seeds by banded
         // distributed sort, O(√K) coarse collect only, fine table and
-        // Lloyd update as frames, assignment via the shuffle-hash +
-        // CellArgmin path. The kernel build's driver state (K-row seed
-        // and Lloyd collects + the K·65-long reference arrays) made IT
-        // the K-axis heap ceiling (29.3 GB at K=250k/2M vectors); this
-        // build is the one that fits the 8 g dev default at the same K.
-        // Geometry is bit-identical (SemDedupStagedSpec pins the tables),
-        // so gate rows against this index must reproduce gateindexr's
-        // flag counts exactly.
+        // Lloyd update as frames, assignment via the cell join +
+        // CellArgmin path. A driver-resident build (K-row seed and Lloyd
+        // collects + K·65-long reference arrays) was the K-axis heap
+        // ceiling (29.3 GB at K=250k/2M vectors); this build fits the
+        // 8 g dev default at the same K.
         val src = args(1)
         val dst = args(2)
         val tc = args.lift(3).map(_.toInt)
@@ -415,7 +385,7 @@ object SemScale {
         // static reference corpus, whose member index (~272 B/vector raw:
         // 64 floats + vec_id + nrm ≈ 544 MB at 2M) is past comfortable
         // single-broadcast range — the bound the r11 cid-range sharding
-        // exists for. Reads the `gateindex`/`gateindexr`-written index in
+        // exists for. Reads the `gateindex`/`gateindexrs`-written index in
         // a FRESH JVM (one per measured row) and gates a 1-in-<mod> probe
         // batch at nShards cid-range shards (1 = unsharded). The batch
         // twin IS the stream path (StreamingSpec pins stream ≡ batch and
@@ -423,8 +393,10 @@ object SemScale {
         // per-microbatch costs. Each shard's broadcast build reads ONLY
         // its cid range — the range filter pushes into the members
         // parquet scan. A routed index (fine.parquet present) switches
-        // the assignment head to the O(√K) routed kernel; the verify tail
-        // and all variants are layout-independent.
+        // the assignment head to the staged routed head (O(√K) collected
+        // coarse table; the K-row fine table stays a frame and meets
+        // probes in a join); the verify tail and all variants are
+        // layout-independent.
         val src = args(1)
         val idx = args(2)
         val nShards = args.lift(3).map(_.toInt).getOrElse(1)
@@ -444,7 +416,7 @@ object SemScale {
         require(!(hasFlat && routed),
           s"index dir $idx contains BOTH layouts (cents.parquet AND " +
             "fine.parquet) — stale mixed build; rebuild it with " +
-            "gateindex/gateindexr (which drop the other layout) or delete it")
+            "gateindex/gateindexrs (which drop the other layout) or delete it")
         // gate mode reads members.parquet RAW (one row per cid); an index
         // that has received append generations would silently emit one
         // verify row per probe per generation — refuse it (r13 review)
@@ -466,21 +438,15 @@ object SemScale {
         // `seqa` is the assign-ONCE sequential form: the kernel runs one
         // time over the probe batch, the (probe-sized) assigned frame
         // persists, and each shard runs only its verify join — the form a
-        // production foreachBatch consumer would use. `stga` is seqa with
-        // the STAGED assignment head (streamingSemanticGateStaged): only
-        // the O(√K) coarse table is collected; the K-row fine table stays
-        // a distributed frame and meets probes in a shuffle-hash join —
-        // the r12 "at K ≥ 10⁷" upgrade path, measured here.
+        // production foreachBatch consumer would use.
         val variant = args.lift(5).getOrElse("union")
-        require(variant != "stga" || routed,
-          "stga (staged assignment) requires a routed (gateindexr) index")
-        // Assignment head per layout/variant, with the DRIVER-RESIDENT
-        // routing state it carries (bytes) reported honestly: the flat
-        // and routed broadcast heads collect O(K) centroid state — fine
-        // for per-microbatch probe gates at today's K, structurally
-        // impossible at K ≥ 10⁷ — while the staged head collects O(√K).
+        // Assignment head per layout, with the DRIVER-RESIDENT routing
+        // state it carries (bytes) reported honestly: the flat head
+        // collects O(K) centroid state — fine for per-microbatch probe
+        // gates at today's K, structurally impossible at K ≥ 10⁷ — while
+        // the routed head collects O(√K).
         val (k, assignHead, routingStateBytes): (Int, DataFrame => DataFrame, Long) =
-          if (variant == "stga") {
+          if (routed) {
             val tabs = queries.SimilarityQueries.stagedGateTables(
               spark.read.parquet(s"$idx/coarse.parquet"),
               spark.read.parquet(s"$idx/fine.parquet"))
@@ -492,19 +458,12 @@ object SemScale {
               (p: DataFrame) => graft.streaming.StreamingOps
                 .semanticGateAssignStaged(p, tabs),
               tabs.coarse.map(_.size.toLong * 8 + 4).sum)
-          } else if (!routed) {
+          } else {
             val cents = queries.SimilarityQueries.readFlatCents(spark, idx)
             (cents.length,
               (p: DataFrame) => graft.streaming.StreamingOps
                 .semanticGateAssign(p, cents),
               cents.map(_.size.toLong * 8).sum)
-          } else {
-            val tabs = queries.SimilarityQueries.readRoutedTables(spark, idx)
-            (tabs.grouped.map(_.size).sum,
-              (p: DataFrame) => graft.streaming.StreamingOps
-                .semanticGateAssignRouted(p, tabs),
-              (tabs.coarse.map(_.size.toLong) ++
-                tabs.grouped.flatten.map(_.size.toLong)).sum * 8)
           }
         val width = math.max(1, math.ceil(k.toDouble / nShards).toInt)
         def verifyShard(assigned: DataFrame, s: Int): DataFrame =
@@ -523,7 +482,7 @@ object SemScale {
             case "union" =>
               agg1((0 until nShards).map(s => verifyShard(assignHead(probe), s))
                 .reduce(_ union _))
-            case "seq" | "seqa" | "stga" =>
+            case "seq" | "seqa" =>
               val assignedOnce = if (variant == "seq") None else Some {
                 val a = assignHead(probe)
                   .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -903,7 +862,7 @@ object SemScale {
 
       case other =>
         System.err.println(s"unknown mode: $other " +
-          "(staged|census|blobfix|append|dedup|gateindex|gateindexr|" +
+          "(staged|census|blobfix|append|dedup|gateindex|" +
           "gateindexrs|gate|subset|admitloop|compact|dumpmembers|" +
           "admitproc|verifyindex|lockhold|lockprobe)")
         sys.exit(2)

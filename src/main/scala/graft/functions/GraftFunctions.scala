@@ -1088,15 +1088,8 @@ object GraftFunctions {
   def centroidArgmin(mud: Column, cents: Seq[Seq[Long]]): Column =
     GraftBridge.toColumn(CentroidArgmin(GraftBridge.toExpr(mud), cents))
 
-  /** Routed (two-level) k-means argmin: fine centroids pre-grouped by
-    * coarse cell (see [[CentroidArgminRouted]]). */
-  def centroidArgminRouted(mud: Column, route: Column,
-      cents: Seq[Seq[Seq[Long]]], ids: Seq[Seq[Int]]): Column =
-    GraftBridge.toColumn(CentroidArgminRouted(
-      GraftBridge.toExpr(mud), GraftBridge.toExpr(route), cents, ids))
-
   /** Per-row argmin over a JOINED cell table (see [[CellArgmin]]) — the
-    * staged routed assignment's kernel: centroids arrive as column
+    * routed assignment's in-cell kernel: centroids arrive as column
     * values, never as driver/broadcast state. */
   def cellArgmin(mud: Column, cells: Column, ids: Column): Column =
     GraftBridge.toColumn(CellArgmin(GraftBridge.toExpr(mud),

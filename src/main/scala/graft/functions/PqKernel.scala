@@ -186,89 +186,18 @@ case class CentroidArgmin(child: Expression, cents: Seq[Seq[Long]])
   override def prettyName: String = "centroid_argmin"
 }
 
-/** Routed (two-level / IVF-style) k-means assignment kernel (q116): the
-  * fine centroid table is pre-grouped by coarse cell; a row first routes
-  * to a coarse cell (CentroidArgmin over the coarse table) and then takes
-  * the argmin ONLY over that cell's fine centroids — O(k₁ + K/k₁) work
-  * per row instead of O(K), the faiss coarse-quantizer shape. Returns the
-  * GLOBAL fine cid via the ids table. Ties → smaller global cid, matching
-  * the flat kernel inside each routed subset.
-  */
-object CentroidKernelRouted {
-  def argmin(mud: ArrayData, route: Int,
-      cents: Array[Array[Array[Long]]], ids: Array[Array[Int]]): Int = {
-    val cell = cents(route)
-    val cellIds = ids(route)
-    val dim = mud.numElements()
-    var best = -1
-    var bestD = Long.MaxValue
-    var c = 0
-    while (c < cell.length) {
-      val cv = cell(c)
-      var d = 0L
-      var i = 0
-      while (i < dim && d < bestD) {
-        val diff = mud.getDouble(i).toLong - cv(i)
-        d += diff * diff
-        i += 1
-      }
-      // ids within a cell are ascending, so strict < keeps the smaller
-      // global cid on ties
-      if (i == dim && d < bestD) { bestD = d; best = cellIds(c) }
-      c += 1
-    }
-    // an empty routed cell has no argmin — loud failure beats a plausible
-    // -1 flowing into downstream joins (r8 ADVICE)
-    if (best < 0)
-      throw new IllegalStateException(s"centroid_argmin_routed: empty cell $route")
-    best
-  }
-}
-
-/** `centroid_argmin_routed(mud, route)` — route is the coarse cell id. */
-case class CentroidArgminRouted(left: Expression, right: Expression,
-    cents: Seq[Seq[Seq[Long]]], ids: Seq[Seq[Int]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  // contract (r8 ADVICE): cells and their id lists must align 1:1; an
-  // empty or misaligned table must fail at construction, not mid-scan
-  require(cents.nonEmpty && cents.length == ids.length,
-    "centroid_argmin_routed: empty or cell/ids-misaligned table")
-  require(cents.iterator.zip(ids.iterator).forall { case (c, i) => c.length == i.length },
-    "centroid_argmin_routed: cell/ids length mismatch")
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = InputChecks.all(
-    InputChecks.typed("centroid_argmin_routed mud", left, ArrayType(DoubleType)),
-    InputChecks.typed("centroid_argmin_routed route", right, IntegerType))
-  @transient private lazy val cArr: Array[Array[Array[Long]]] =
-    cents.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val idArr: Array[Array[Int]] = ids.map(_.toArray).toArray
-
-  override def nullSafeEval(mud: Any, route: Any): Any =
-    CentroidKernelRouted.argmin(
-      mud.asInstanceOf[ArrayData], route.asInstanceOf[Int], cArr, idArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("kmrCents", cArr, "long[][][]")
-    val iRef = ctx.addReferenceObj("kmrIds", idArr, "int[][]")
-    defineCodeGen(ctx, ev, (m, r) =>
-      s"graft.functions.CentroidKernelRouted.argmin($m, $r, $cRef, $iRef)")
-  }
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): CentroidArgminRouted = copy(left = l, right = r)
-  override def prettyName: String = "centroid_argmin_routed"
-}
-
-/** Column-borne cell argmin (the STAGED routed assignment, q125): same
-  * math as [[CentroidKernelRouted]], but the cell's fine-centroid table
-  * arrives as JOINED COLUMN VALUES (array<array<bigint>> + array<int>)
-  * instead of a broadcast-by-reference object — which is the whole point:
-  * the centroid table never exists on the driver or in a broadcast, so
-  * driver state is O(√K) no matter how large K grows (the ≥10⁸-vector
-  * regime where the reference-object form needs a multi-GB driver heap).
-  * ids must be ascending within the cell; strict < keeps the smaller
-  * global cid on ties, matching the routed kernel bit-for-bit.
+/** Column-borne cell argmin, the in-cell step of the routed (two-level /
+  * IVF-style) k-means assignment (q116): a row has already routed to a
+  * coarse cell and takes the argmin ONLY over that cell's fine centroids —
+  * O(k₁ + K/k₁) work per row instead of O(K), the faiss coarse-quantizer
+  * shape. The cell's fine-centroid table arrives as JOINED COLUMN VALUES
+  * (array<array<bigint>> + array<int>) instead of a broadcast-by-reference
+  * object — which is the whole point: the centroid table never exists on
+  * the driver, so driver state is O(√K) no matter how large K grows (the
+  * ≥10⁸-vector regime where a reference-object form needs a multi-GB
+  * driver heap). Returns the GLOBAL fine cid; ids must be ascending within
+  * the cell, so strict < keeps the smaller global cid on ties, matching
+  * [[CentroidKernel]] inside each routed subset.
   */
 object CellArgminKernel {
   def argmin(mud: ArrayData, cells: ArrayData, ids: ArrayData): Int = {

@@ -834,28 +834,6 @@ object SimilarityQueries {
     (cents.map(_.map(_.toLong).toSeq), members)
   }
 
-  /** ROUTED batch-built static index for [[graft.streaming.StreamingOps
-    * .streamingSemanticGateRouted]]: the q116 routed assignment's final
-    * routing tables plus per-(routed)-cell member arrays. Same contract
-    * as [[semanticStreamIndex]] with the flat centroid table replaced by
-    * [[RoutedTables]] — the gate's per-row kernel work drops from O(K)
-    * to O(√K + K/√K) while the driver/broadcast footprint stays the same
-    * ~K·Dim·8 B. Cell BOUNDARIES are the routed lane's (q116), not the
-    * flat lane's (q113) — the two gates are distinct, both oracle-checked
-    * (q126 / q127). */
-  private[graft] def semanticStreamIndexRouted(spark: SparkSession, d: String,
-      targetCell: Int = TargetCell): (RoutedTables, DataFrame) = {
-    val v = withNorm(spark, d)
-      .withColumn("mud",
-        transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
-      .repartition(col("vec_id"))
-      .transform(StagingRoots.persist)
-    val (tabs, a2) = routedAssignWithTables(v, targetCell)
-    val members = a2.groupBy(col("cid"))
-      .agg(collect_list(struct(col("vec_id"), col("e"), col("nrm"))).as("members"))
-    (tabs, members)
-  }
-
   // ---------------------------------------------------------------------------
   // q126 — the streaming semantic gate's BATCH TWIN, oracle-checked: the
   // r11 cid-range-sharded gate (StreamingOps.streamingSemanticGateSharded,
@@ -926,33 +904,33 @@ object SimilarityQueries {
     s"SELECT CAST(ceil(count(*) / $TargetCell.0) AS BIGINT) FROM md"))
 
   // ---------------------------------------------------------------------------
-  // q127 — the ROUTED streaming semantic gate's batch twin, oracle-checked:
-  // same census projection as q126 over the q116 routed cell geometry. The
-  // motivating measurement (SCALE.md r12): at 2M vectors / K = 31,250 the
-  // flat gate's assignment kernel is O(probes·K·Dim) and dominates the
-  // microbatch wall; routing the SAME assignment through the coarse
-  // quantizer (coarse argmin over √K seeds, then in-cell argmin over the
-  // routed cell's ~√K fine centroids) cuts the per-row kernel to
-  // O(2√K·Dim) with an unchanged ~16 MB broadcast footprint. Cell
-  // boundaries are the routed lane's, so the oracle is the q116 routed
-  // kmeans CTE (exact integer distances, ties → smaller ccid/cid) under
-  // the q126 census tail.
+  // q127 (and its key alias q129_semantic_gate_staged) — the ROUTED
+  // streaming semantic gate's batch twin, oracle-checked: same census
+  // projection as q126 over the q116 routed cell geometry. The motivating
+  // measurement (SCALE.md r12): at 2M vectors / K = 31,250 the flat gate's
+  // assignment kernel is O(probes·K·Dim) and dominates the microbatch
+  // wall; routing the SAME assignment through the coarse quantizer (coarse
+  // argmin over √K seeds, then in-cell argmin over the routed cell's ~√K
+  // fine centroids) cuts the per-row kernel to O(2√K·Dim). The head is the
+  // staged one ([[streamingSemanticGateStaged]]): only the O(√K) coarse
+  // table is driver state, the K-row fine table stays a frame — the form
+  // that survives K ≥ 10⁷ (SCALE.md r13). Cell boundaries are the routed
+  // lane's, so the oracle is the q116 routed kmeans CTE (exact integer
+  // distances, ties → smaller ccid/cid) under the q126 census tail.
   def q127SemanticGateRoutedCensus(spark: SparkSession, d: String): DataFrame = {
-    // production read path (r13): broadcast-head reconstruction from the
-    // staged written index (GateStaging; build cost = q_staging_gate).
-    // r16: RoutedTables come from the MEMOIZED once-per-(JVM, corpus)
-    // read (GateStaging.routedTables — the resident-tables contract), and
-    // the probe side is spread before the per-row verify fold (see q126).
+    // production read path: the gate consumes the index GateStaging wrote
+    // once per (JVM, corpus) (build cost = q_staging_gate); the coarse
+    // table is its memoized read, and the probe side is spread before the
+    // per-row verify fold (see q126)
     val idx = GateStaging.routedDir(spark, d)
-    val tabs = GateStaging.routedTables(spark, d)
     val members = spark.read.parquet(s"$idx/members.parquet")
-    gateCensusProjection(graft.streaming.StreamingOps.streamingSemanticGateRouted(
+    gateCensusProjection(graft.streaming.StreamingOps.streamingSemanticGateStaged(
       spreadIfNarrow(
         Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))),
-      tabs, members))
+      GateStaging.routedTables(spark, d), members))
   }
 
-  /** Shared census projection of the gate twins (q126/q127/q129). */
+  /** Shared census projection of the gate twins (q126/q127). */
   private def gateCensusProjection(gated: DataFrame): DataFrame =
     gated
       .select(col("vec_id"), col("cid"),
@@ -960,30 +938,6 @@ object SimilarityQueries {
         (col("best_cos") + lit(0.0)).as("best_cos"),
         col("semantic_near_dup").cast("int").as("semantic_near_dup"))
       .orderBy(col("vec_id"))
-
-  // ---------------------------------------------------------------------------
-  // q129 — the STAGED routed gate's batch twin (r13): the q127 census run
-  // through streamingSemanticGateStaged — the assignment head with the
-  // O(K) broadcast routing state replaced by the q125 staging discipline
-  // (O(√K) collected coarse table; the K-row fine table stays a
-  // distributed frame met in a shuffle-hash join). Same cell geometry and
-  // verify tail as q127, so the oracle IS q127's verbatim — the q105/q112
-  // "skew/scale-proof twin shares the oracle" pattern. Measured at
-  // 2M vectors (SCALE.md r13): 18-22 s per 100k-probe batch at
-  // K=125k-250k in 2.9-3.4 GB, vs the broadcast head's 42-57 s one
-  // doubling from OOM — this is the gate head that survives K ≥ 10⁷.
-  def q129SemanticGateStagedCensus(spark: SparkSession, d: String): DataFrame = {
-    // the staged head reads the SAME written index as q127 — only the
-    // read path differs (O(√K) coarse collect + distributed fine table)
-    val idx = GateStaging.routedDir(spark, d)
-    val staged = stagedGateTables(
-      spark.read.parquet(s"$idx/coarse.parquet"),
-      spark.read.parquet(s"$idx/fine.parquet"))
-    val members = spark.read.parquet(s"$idx/members.parquet")
-    gateCensusProjection(graft.streaming.StreamingOps.streamingSemanticGateStaged(
-      Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
-      staged, members))
-  }
 
   // ---------------------------------------------------------------------------
   // q130 — the INCREMENTAL semantic-index lifecycle, oracle-checked (r14):
@@ -1134,13 +1088,11 @@ object SimilarityQueries {
   // argmin only over that cell's fine centroids — O(√K) per row. The
   // clustering is an APPROXIMATION of q113's (exactly as IVF is of flat
   // k-means); the oracle replicates the routed algorithm precisely, and
-  // the same census runs on top. Fine-centroid→coarse routing tables are
-  // computed driver-side (K·k₁·Dim integer ops — bounded by the same
-  // codebook contract) and ship into one codegen'd kernel
-  // ([[graft.functions.CentroidArgminRouted]]) as grouped reference
-  // arrays. Non-empty restriction: a duplicate seed vector can orphan a
-  // coarse cell (its fine twin routes to the smaller ccid on the 0-0 tie);
-  // vectors route only among cells that HAVE fine centroids.
+  // the same census runs on top. The assignment is the staged routed
+  // pipeline ([[routedAssignStagedFrom]], shared with q118/q119 and the
+  // routed gate index). Non-empty restriction: a duplicate seed vector can
+  // orphan a coarse cell (its fine twin routes to the smaller ccid on the
+  // 0-0 tie); vectors route only among cells that HAVE fine centroids.
   private def kmeansAssignmentRouted(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val v = withNorm(spark, d)
@@ -1148,65 +1100,7 @@ object SimilarityQueries {
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
       .repartition(col("vec_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    routedAssignFrom(v)
-  }
-
-  /** The driver-resident routing tables of ONE routed-assignment pass —
-    * everything [[routedAssignApply]] needs to place a NEW vector in its
-    * routed fine cell: the non-empty coarse ids, their coarse (seed)
-    * vectors, and each coarse cell's fine-centroid table (cid-ascending).
-    * ~(K+√K)·Dim·8 B ≈ 16 MB at K = 31,250 — same order as the flat
-    * gate's centroid table, but the KERNEL work per row drops from O(K)
-    * to O(√K + K/√K): this is what makes the routed streaming gate's
-    * assignment head ~√K/2 cheaper than the flat one. */
-  private[graft] final case class RoutedTables(
-      nonEmpty: Seq[Int], coarse: Seq[Seq[Long]],
-      grouped: Seq[Seq[Seq[Long]]], idsOf: Seq[Seq[Int]])
-
-  /** Build [[RoutedTables]] for a fine-centroid table under the fixed
-    * coarse quantizer (the first k₁ SEEDS — fixed across passes); exact
-    * Long arithmetic, ties → smaller ccid, the routedAssignFrom rule. */
-  private def routedTablesOf(seedsL: Array[Array[Long]], k1: Int,
-      fineCents: IndexedSeq[Array[Long]]): RoutedTables = {
-    def routeOf(c: Array[Long]): Int = {
-      var best = 0
-      var bd = Long.MaxValue
-      var j = 0
-      while (j < k1) {
-        val cs = seedsL(j)
-        var dsum = 0L
-        var i = 0
-        while (i < c.length && dsum < bd) {
-          val df = c(i) - cs(i); dsum += df * df; i += 1
-        }
-        if (i == c.length && dsum < bd) { bd = dsum; best = j }
-        j += 1
-      }
-      best
-    }
-    val f2c: Array[Int] = fineCents.map(routeOf).toArray
-    val nonEmpty = f2c.distinct.sorted.toSeq
-    RoutedTables(
-      nonEmpty = nonEmpty,
-      coarse = nonEmpty.map(cc => seedsL(cc).toSeq),
-      grouped = (0 until k1).map(cc =>
-        fineCents.indices.filter(f2c(_) == cc).map(fineCents(_).toSeq)),
-      idsOf = (0 until k1).map(cc =>
-        fineCents.indices.filter(f2c(_) == cc)))
-  }
-
-  /** The gateindexr PARQUET layout of [[RoutedTables]] — (ccid, cmud)
-    * coarse rows + (ccid, cid, cmud) fine rows — ONE definition shared by
-    * the SemScale index writer and the staged-gate spec, so the written
-    * layout and [[stagedGateTables]]'s reader can never drift. */
-  private[graft] def routedTablesFrames(spark: SparkSession,
-      t: RoutedTables): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val coarse = t.nonEmpty.zip(t.coarse).toDF("ccid", "cmud")
-    val fine = t.idsOf.indices.flatMap(cc =>
-        t.idsOf(cc).zip(t.grouped(cc)).map { case (cid, cmud) => (cc, cid, cmud) })
-      .toDF("ccid", "cid", "cmud")
-    (coarse, fine)
+    routedAssignStagedFrom(v)
   }
 
   /** Write the FLAT gate-index layout (cents.parquet + members.parquet) —
@@ -1224,77 +1118,47 @@ object SimilarityQueries {
       .repartition(1).write.mode("overwrite").parquet(s"$dst/cents.parquet")
   }
 
-  /** Write the ROUTED gate-index layout (coarse/fine/members parquet) —
-    * shared by SemScale `gateindexr` and [[GateStaging]]. */
-  private[graft] def writeGateIndexRouted(spark: SparkSession, dst: String,
-      tabs: RoutedTables, members: DataFrame): Unit = {
-    members.repartitionByRange(32, col("cid")).sortWithinPartitions("cid")
-      .write.mode("overwrite").parquet(s"$dst/members.parquet")
-    val (coarseDf, fineDf) = routedTablesFrames(spark, tabs)
-    coarseDf.repartition(1).write.mode("overwrite").parquet(s"$dst/coarse.parquet")
-    fineDf.repartition(1).write.mode("overwrite").parquet(s"$dst/fine.parquet")
-  }
-
   /** Read the flat layout's centroid table back (cid-ordered). */
   private[graft] def readFlatCents(spark: SparkSession, idx: String): Seq[Seq[Long]] =
     spark.read.parquet(s"$idx/cents.parquet")
       .orderBy(col("cid")).collect().map(_.getSeq[Long](1)).toSeq
 
-  /** Reconstruct [[RoutedTables]] from the written routed layout — the
-    * BROADCAST-head reader (collects the K-row fine table; the staged
-    * reader [[stagedGateTables]] is the O(√K) alternative). Shared by
-    * SemScale's gate mode and [[GateStaging]] consumers. */
-  private[graft] def readRoutedTables(spark: SparkSession, idx: String): RoutedTables = {
-    val coarseRows = spark.read.parquet(s"$idx/coarse.parquet")
-      .orderBy(col("ccid")).collect()
-    val nonEmpty = coarseRows.map(_.getInt(0)).toSeq
-    val coarse = coarseRows.map(_.getSeq[Long](1).toSeq).toSeq
-    val fineRows = spark.read.parquet(s"$idx/fine.parquet")
-      .orderBy(col("ccid"), col("cid")).collect()
-    val k1 = fineRows.map(_.getInt(0)).max + 1
-    val byCc = fineRows.groupBy(_.getInt(0))
-    val grouped = (0 until k1).map(cc => byCc.getOrElse(cc, Array.empty)
-      .map(_.getSeq[Long](2).toSeq).toSeq)
-    val idsOf = (0 until k1).map(cc => byCc.getOrElse(cc, Array.empty)
-      .map(_.getInt(1)).toSeq)
-    RoutedTables(nonEmpty, coarse, grouped, idsOf)
-  }
-
-  /** STAGED routed-gate tables (the q125 staging discipline on the gate's
-    * routing state — r12 SCALE.md's named residual): only the O(√K)
-    * coarse table is collected; the K-row fine table stays a DISTRIBUTED
-    * frame, grouped per coarse cell, and meets probe rows in a
-    * shuffle-hash join. Driver/broadcast routing state is ~√K·Dim·8 B
-    * (~180 KB at K = 125,000) instead of [[RoutedTables]]' ~K·Dim·8 B
-    * (~16 MB at K = 31,250, O(K) — unusable at K ≥ 10⁷). */
-  /** `geom` = the index geometry version these tables were loaded under
-    * (-1 = not index-bound — build-pipeline tables that never feed the
-    * admit path's version check). */
+  /** The routing tables of the ONE routed-assignment head, staged: only
+    * the O(√K) coarse table is driver state (`nonEmpty` coarse ids and
+    * their vectors, ~180 KB at K = 125,000); the K-row fine table stays a
+    * frame, `cells`, packed one row per coarse cell as (__route, cc, ids)
+    * with cc/ids cid-ascending (the tie rule), met by probe rows in an
+    * equi join on the route. `geom` = the index geometry version these
+    * tables were loaded under (-1 = not index-bound — build-pipeline
+    * tables that never feed the admit path's version check). */
   private[graft] final case class StagedGateTables(
       nonEmpty: Seq[Int], coarse: Seq[Seq[Long]], cells: DataFrame,
       geom: Long = -1L)
 
-  /** Build [[StagedGateTables]] from the gateindexr parquet frames
-    * (coarse: (ccid, cmud); fine: (ccid, cid, cmud)). The per-cell pack
-    * is cid-ascending (sort_array on the (cid, cmud) struct), the
-    * [[routedTablesOf]] tie rule. */
-  private[graft] def stagedGateTables(coarseDf: DataFrame,
-      fineDf: DataFrame): StagedGateTables = {
-    import org.apache.spark.storage.StorageLevel
-    // O(√K): the non-empty coarse ids and their vectors — the ONLY
-    // collected routing state on this path
-    val coarseRows = coarseDf.orderBy(col("ccid")).collect()
-    val cells = fineDf
+  /** The written coarse table (ccid, cmud) as (non-empty ccids, their
+    * vectors), ccid-ascending — the head's only collected state. */
+  private[graft] def readCoarse(coarseDf: DataFrame): (Seq[Int], Seq[Seq[Long]]) = {
+    val rows = coarseDf.orderBy(col("ccid")).collect()
+    (rows.map(_.getInt(0)).toSeq, rows.map(_.getSeq[Long](1).toSeq).toSeq)
+  }
+
+  /** A fine table (ccid, cid, cmud: array<bigint>) packed into the
+    * [[StagedGateTables]] `cells` layout. */
+  private[graft] def stagedCells(fineDf: DataFrame): DataFrame =
+    fineDf
       .groupBy(col("ccid"))
       .agg(sort_array(collect_list(struct(col("cid"), col("cmud")))).as("cs"))
       .select(col("ccid").as("__route"),
         expr("transform(cs, x -> x.cmud)").as("cc"),
         expr("transform(cs, x -> x.cid)").as("ids"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    StagedGateTables(
-      nonEmpty = coarseRows.map(_.getInt(0)).toSeq,
-      coarse = coarseRows.map(_.getSeq[Long](1).toSeq).toSeq,
-      cells = cells)
+
+  /** [[StagedGateTables]] from the written coarse/fine parquet frames,
+    * with `cells` persisted: the caller owns it and unpersists it. */
+  private[graft] def stagedGateTables(coarseDf: DataFrame,
+      fineDf: DataFrame): StagedGateTables = {
+    val (nonEmpty, coarse) = readCoarse(coarseDf)
+    StagedGateTables(nonEmpty, coarse,
+      stagedCells(fineDf).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** [[stagedGateTables]] bound to a WRITTEN index dir: reads the
@@ -1312,89 +1176,37 @@ object SimilarityQueries {
       spark.read.parquet(s"$idx/fine.parquet")).copy(geom = geom)
   }
 
-  /** One STAGED routed-assignment projection over a prepared (…, mud)
-    * frame: coarse argmin (O(√K) codegen kernel) → route → shuffle-hash
-    * equi join with the grouped fine-cell frame (hinted: a broadcast
-    * would re-materialize the K-row table on the driver, defeating the
-    * staging) → in-cell argmin via the column-borne [[graft.functions
-    * .CellArgmin]] kernel. Row-for-row identical to [[routedAssignApply]]
-    * (same kernels, same cid-ascending tie rule — StreamingSpec pins the
-    * full sf0.01 replay); the trade is one route-keyed shuffle of the
-    * PROBE side per batch, the q125 contract. */
+  /** One routed-assignment projection over a prepared (…, mud) frame:
+    * coarse argmin (O(√K) codegen kernel) → route → equi join with the
+    * packed fine-cell frame → in-cell argmin via the column-borne
+    * [[graft.functions.CellArgmin]] kernel. The join strategy is Spark's
+    * size rule: a cells frame under `autoBroadcastJoinThreshold` is
+    * broadcast (no probe shuffle), a larger one is shuffled, so the
+    * K-row table never has to fit on the driver. */
   private[graft] def stagedGateAssignApply(t: StagedGateTables,
       outCol: String)(df: DataFrame): DataFrame =
     df
       .withColumn("__ridx",
         graft.functions.GraftFunctions.centroidArgmin(col("mud"), t.coarse))
       .withColumn("__route", element_at(typedLit(t.nonEmpty), col("__ridx") + 1))
-      .join(t.cells.hint("shuffle_hash"), Seq("__route"))
+      .join(t.cells, Seq("__route"))
       .withColumn(outCol,
         graft.functions.GraftFunctions.cellArgmin(col("mud"), col("cc"), col("ids")))
       .drop("__ridx", "__route", "cc", "ids")
-
-  /** One routed-assignment projection (coarse kernel → route → in-cell
-    * kernel) — map-only, stateless, shared by the batch lanes and the
-    * routed streaming gate. */
-  private[graft] def routedAssignApply(t: RoutedTables, outCol: String)(
-      df: DataFrame): DataFrame =
-    df
-      .withColumn("__ridx",
-        graft.functions.GraftFunctions.centroidArgmin(col("mud"), t.coarse))
-      .withColumn("__route", element_at(typedLit(t.nonEmpty), col("__ridx") + 1))
-      .withColumn(outCol, graft.functions.GraftFunctions.centroidArgminRouted(
-        col("mud"), col("__route"), t.grouped, t.idsOf))
-      .drop("__ridx", "__route")
-
-  /** The routed scaled-K pipeline over a prepared (vec_id, e, nrm, mud)
-    * frame — shared by q116 (whole corpus) and q118 (exact-dup reps). */
-  private def routedAssignFrom(v: DataFrame): DataFrame =
-    routedAssignWithTables(v)._2
-
-  /** As [[routedAssignFrom]], also returning the FINAL pass's routing
-    * tables — the routed streaming gate's broadcast side. */
-  private[graft] def routedAssignWithTables(v: DataFrame,
-      targetCell: Int = TargetCell): (RoutedTables, DataFrame) = {
-    val n = v.count()
-    val k = math.max(1, math.ceil(n / targetCell.toDouble).toInt)
-    val k1 = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val seedsL: Array[Array[Long]] = collectSeedRows(v, k, n)
-      .map(_.getAs[scala.collection.Seq[Double]]("mud").toArray.map(_.toLong))
-
-    def assign(fineCents: IndexedSeq[Array[Long]], outCol: String)(df: DataFrame): DataFrame =
-      routedAssignApply(routedTablesOf(seedsL, k1, fineCents), outCol)(df)
-
-    val a1 = assign(seedsL.toIndexedSeq, "c1")(v).transform(StagingRoots.persist)
-    val lanes = (0 until Dim).map(i =>
-      sum(element_at(col("mud"), i + 1).cast("long")).as(s"s$i"))
-    val sums = a1.groupBy(col("c1"))
-      .agg(count(lit(1)).as("cnt"), lanes: _*)
-      .collect()
-      .map { r =>
-        val cnt = r.getAs[Long]("cnt").toDouble
-        r.getAs[Int]("c1") -> Array.tabulate(Dim) { i =>
-          new java.math.BigDecimal(r.getAs[Long](s"s$i") / cnt)
-            .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-        }
-      }.toMap
-    val cents2 = (0 until k).map(c => sums.getOrElse(c, seedsL(c)))
-    val tables = routedTablesOf(seedsL, k1, cents2)
-    (tables,
-      routedAssignApply(tables, "cid")(a1)
-        .transform(StagingRoots.persist))
-  }
 
   def q116SemanticDedupRouted(spark: SparkSession, d: String): DataFrame =
     semDedupCensus(kmeansAssignmentRouted(spark, d))
 
   // ---------------------------------------------------------------------------
-  // q125 — STAGED routed assignment (r8 verdict "What's missing" #1): the
-  // q118 stack with the K-proportional driver state removed. In
-  // routedAssignFrom, three pieces of state scale with K on the DRIVER:
-  // the K-row seed collect, the K-row Lloyd centroid-update collect, and
-  // the K×65-long kernel reference array rebroadcast per pass — ~8 MB per
-  // million vectors (the PQ-codebook contract), but ≈8 GB at 10⁹ vectors
-  // (K ≈ 1.6·10⁷), which no driver heap survives. Here the centroid table
-  // NEVER exists on the driver or in a broadcast:
+  // The routed assignment (r8 verdict "What's missing" #1), serving q116,
+  // q118 (and its key alias q125_semantic_dedup_staged), q119 and the
+  // routed gate index, with no K-proportional state on the driver. A
+  // driver-resident form would hold three pieces of state that scale with
+  // K: the K-row seed collect, the K-row Lloyd centroid-update collect,
+  // and a K×65-long kernel reference array rebroadcast per pass — ~8 MB
+  // per million vectors, but ≈8 GB at 10⁹ vectors (K ≈ 1.6·10⁷), which
+  // no driver heap survives. Here the centroid table NEVER exists on the
+  // driver:
   //   • seeds: a 3×-expected-threshold filter on the uniform md5 rank
   //     bounds the sort to O(K) rows (exactness checked — falls back to
   //     the full sort if the band underflows), the sort is a distributed
@@ -1406,28 +1218,23 @@ object SimilarityQueries {
   //     over the K-row seed FRAME (not a driver loop).
   //   • per-cell tables: groupBy(route) packs each coarse cell's fine
   //     centroids into one row (cid-ascending for the tie rule); vectors
-  //     compute their route map-only, then meet their cell's table in a
-  //     SHUFFLE-HASH equi join on the route key (hinted: a broadcast
-  //     would collect the cells to the driver, defeating the point) and
-  //     take the argmin via the column-borne CellArgmin kernel.
+  //     compute their route map-only, then meet their cell's table in an
+  //     equi join on the route key ([[stagedGateAssignApply]]: broadcast
+  //     while the cells are small, shuffled past the broadcast threshold)
+  //     and take the argmin via the column-borne CellArgmin kernel.
   //   • Lloyd update: the per-cid lane sums stay a DataFrame and rejoin
   //     the seed frame (coalesce = empty cells keep seeds, HALF_UP mean
   //     rounding as everywhere).
-  // The TRADE vs the broadcast-kernel form, stated honestly: assignment
-  // costs a route-keyed shuffle of the corpus per pass (2 passes) instead
-  // of zero shuffles — at K ≤ ~10⁶ the kernel form (q116/q118) is
-  // strictly better; beyond that it cannot run at all, and this is the
-  // path that can. Same algorithm, bit-identical output: the oracle IS
-  // q118's, and SemDedupStagedSpec pins q125 ≡ q118 row-for-row.
+  // The oracle replays the same algorithm (routedKmeansCteSql).
   /** The staged seed frame: (cid, smud) with cid = md5-rank, built with
     * NO K-row driver materialization (banded distributed sort +
     * zipWithIndex). Shared by the staged assignment and the SemScale
     * seed-geometry census. */
-  private[graft] def stagedSeeds(v: DataFrame, k: Int): DataFrame = {
+  private[graft] def stagedSeeds(v: DataFrame, k: Int, n: Long): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
     val spark = v.sparkSession
-    val band = seedBand(v, k, v.count())
+    val band = seedBand(v, k, n)
     val seedRdd = band.orderBy(col("hk"), col("vec_id")).rdd
       .zipWithIndex()
       .filter(_._2 < k)
@@ -1454,9 +1261,10 @@ object SimilarityQueries {
   private[graft] def coarseCellCensus(spark: SparkSession, d: String,
       targetCell: Int = TargetCell): DataFrame = {
     val (_, v) = exactFirstReps(spark, d)
-    val k = math.max(1, math.ceil(v.count() / targetCell.toDouble).toInt)
+    val n = v.count()
+    val k = math.max(1, math.ceil(n / targetCell.toDouble).toInt)
     val k1 = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val seeds = stagedSeeds(v, k)
+    val seeds = stagedSeeds(v, k, n)
     val coarse = stagedCoarse(seeds, k1)
     seeds.withColumn("fr",
         graft.functions.GraftFunctions.centroidArgmin(col("smud"), coarse))
@@ -1469,53 +1277,46 @@ object SimilarityQueries {
     routedAssignStagedWithTables(v, targetCell)._3
 
   /** As [[routedAssignStagedFrom]], also returning the routing tables in
-    * their STAGED (never-collected-beyond-√K) form: the coarse table and
-    * the final fine-centroid FRAME with its coarse route attached
-    * (fr, cid, smud) — everything the staged gate-index writer
-    * ([[SemScale]] `gateindexrs`) persists as coarse/fine parquet. The
-    * geometry is bit-identical to [[routedAssignWithTables]]' (same
-    * banded md5-rank seeds, same kernels and tie rules, same HALF_UP
-    * Lloyd update — SemDedupStagedSpec pins the assignments row-for-row
-    * and the index spec pins the written tables), so a staged-built index
-    * is interchangeable with a kernel-built one. */
+    * their staged (never-collected-beyond-√K) form: the coarse table and
+    * the final fine-centroid frame in the written index layout
+    * (ccid, cid, cmud) — everything [[writeGateIndexStaged]] persists as
+    * coarse/fine parquet. */
   private[graft] def routedAssignStagedWithTables(v: DataFrame,
       targetCell: Int = TargetCell)
       : (Seq[Seq[Long]], DataFrame, DataFrame) = {
     val n = v.count()
     val k = math.max(1, math.ceil(n / targetCell.toDouble).toInt)
     val k1 = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val seeds = stagedSeeds(v, k)
+    val seeds = stagedSeeds(v, k, n)
     // the only collected state: O(√K) coarse vectors
     val coarse: Seq[Seq[Long]] = stagedCoarse(seeds, k1)
 
-    def assign(fine: DataFrame, outCol: String)(df: DataFrame): DataFrame = {
-      val cells = fine
-        .withColumn("fr",
-          graft.functions.GraftFunctions.centroidArgmin(col("smud"), coarse))
-        .groupBy(col("fr"))
-        .agg(sort_array(collect_list(struct(col("cid"), col("smud")))).as("cs"))
-        .select(col("fr"),
-          expr("transform(cs, x -> transform(x.smud, v -> CAST(v AS BIGINT)))").as("cc"),
-          expr("transform(cs, x -> x.cid)").as("ids"))
-        .transform(StagingRoots.persist)
-      // O(√K): the non-empty coarse ids (a duplicate seed can orphan a
-      // coarse cell — vectors route only among cells that HAVE fine
-      // centroids, the routedAssignFrom rule)
-      val nonEmpty: Seq[Int] = cells.select(col("fr")).collect()
-        .map(_.getInt(0)).sorted.toSeq
-      val coarseNE: Seq[Seq[Long]] = nonEmpty.map(coarse(_))
-      df
-        .withColumn("__ridx",
-          graft.functions.GraftFunctions.centroidArgmin(col("mud"), coarseNE))
-        .withColumn("__route", element_at(typedLit(nonEmpty), col("__ridx") + 1))
-        .join(cells.withColumnRenamed("fr", "__route").hint("shuffle_hash"),
-          Seq("__route"))
-        .withColumn(outCol,
-          graft.functions.GraftFunctions.cellArgmin(col("mud"), col("cc"), col("ids")))
-        .drop("__ridx", "__route", "cc", "ids")
-    }
+    // a fine table (cid, smud) routed to its coarse cells, in the written
+    // layout (ccid, cid, cmud)
+    def routed(fine: DataFrame): DataFrame =
+      fine.select(
+        graft.functions.GraftFunctions.centroidArgmin(col("smud"), coarse).as("ccid"),
+        col("cid"), expr("transform(smud, v -> CAST(v AS BIGINT))").as("cmud"))
 
-    val a1 = assign(seeds, "c1")(v).transform(StagingRoots.persist)
+    // vectors route only among coarse cells that HAVE fine centroids (a
+    // duplicate seed can orphan one)
+    def assign(fine: DataFrame, nonEmpty: Seq[Int], outCol: String)(df: DataFrame): DataFrame =
+      stagedGateAssignApply(StagedGateTables(nonEmpty, nonEmpty.map(coarse(_)),
+        stagedCells(routed(fine))), outCol)(df)
+
+    // first pass: the fine table is the seeds, whose first k1 ARE the
+    // coarse table, so seed j routes to the first coarse cell holding its
+    // vector and a later copy loses every tie to it — cell j is non-empty
+    // iff coarse(j) is its vector's first occurrence, known without a job
+    val firstOf = scala.collection.mutable.HashMap.empty[Seq[Long], Int]
+    val nonEmpty1 = coarse.indices.filter(j => firstOf.getOrElseUpdate(coarse(j), j) == j)
+    // a1 feeds both the Lloyd update and the final join, so every plan
+    // downstream would nest its whole plan twice; as a plan leaf it is one
+    // node (Spark re-describes the full plan on each adaptive re-plan,
+    // which at small input costs more than the work)
+    val a1 = org.apache.spark.sql.graftbridge.GraftBridge
+      .planLeaf(assign(seeds, nonEmpty1, "c1")(v))
+      .transform(StagingRoots.persist)
     val lanes = (0 until Dim).map(i =>
       sum(element_at(col("mud"), i + 1).cast("long")).as(s"s$i"))
     // Lloyd sums stay distributed: K rows keyed by c1, rejoined to seeds
@@ -1526,24 +1327,24 @@ object SimilarityQueries {
     val fine2 = seeds.join(sums, seeds("cid") === sums("c1"), "left")
       .select(col("cid"), coalesce(col("umud"), col("smud")).as("smud"))
       .transform(StagingRoots.persist)
-    val assigned = assign(fine2, "cid")(a1)
+    // after the Lloyd update emptiness depends on the data: collect the
+    // O(√K) non-empty ccids
+    val nonEmpty2 = routed(fine2).select(col("ccid")).distinct().collect()
+      .map(_.getInt(0)).sorted.toSeq
+    val assigned = assign(fine2, nonEmpty2, "cid")(a1)
       .transform(StagingRoots.persist)
-    val fineRouted = fine2
-      .withColumn("fr",
-        graft.functions.GraftFunctions.centroidArgmin(col("smud"), coarse))
-      .select(col("fr"), col("cid"), col("smud"))
-    (coarse, fineRouted, assigned)
+    (coarse, routed(fine2), assigned)
   }
 
-  /** STAGED gate-index build: the gateindexr layout produced with the
-    * q125 staging discipline, so the BUILD carries no O(K) driver state
-    * either — the r13 staged-gate rung moved the K-axis heap ceiling onto
-    * the kernel build (29.3 GB at K = 250k on 2M vectors); this is the
-    * build that fits the 8 g default at the same K. Returns (full coarse
-    * table — O(√K), the routed fine-centroid frame (fr, cid, smud), the
-    * per-cell member frame). Geometry is bit-identical to
-    * [[semanticStreamIndexRouted]]'s (SemDedupStagedSpec pins the written
-    * tables and the member assignment). */
+  /** The routed gate-index build: the q116 routed assignment's final
+    * routing tables plus per-(routed)-cell member arrays (vec_id, e, nrm
+    * structs per cid), built with no O(K) driver state — a driver-resident
+    * build was the K-axis heap ceiling (29.3 GB at K = 250k on 2M
+    * vectors); this one fits the 8 g default at the same K. Returns (full
+    * coarse table — O(√K), the routed fine-centroid frame
+    * (ccid, cid, cmud), the per-cell member frame). Cell BOUNDARIES are
+    * the routed lane's (q116), not the flat lane's (q113) — the two gates
+    * are distinct, both oracle-checked (q126 / q127). */
   private[graft] def semanticStreamIndexStaged(spark: SparkSession, d: String,
       targetCell: Int = TargetCell): (Seq[Seq[Long]], DataFrame, DataFrame) =
     semanticStreamIndexStagedFrom(Tables.embeddings(spark, d), targetCell)
@@ -1567,21 +1368,17 @@ object SimilarityQueries {
     (coarse, fineRouted, members)
   }
 
-  /** Write the staged-BUILT routed gate-index layout (coarse/fine/members
-    * parquet — bit-identical tables to [[writeGateIndexRouted]]'s,
-    * SemDedupStagedSpec pins it) from [[semanticStreamIndexStagedFrom]]'s
-    * frames, collecting only the O(√K) non-empty coarse ids. Returns K
-    * (the fine-cell count). ONE definition shared by SemScale
-    * `gateindexrs` and [[GateStaging]]'s q130 base index — a layout
-    * change must hit every writer or none. */
+  /** Write the routed gate-index layout (coarse/fine/members parquet)
+    * from [[semanticStreamIndexStagedFrom]]'s frames, collecting only the
+    * O(√K) non-empty coarse ids. Returns K (the fine-cell count). The one
+    * routed-index writer: SemScale `gateindexrs`, [[GateStaging]]'s routed
+    * and q130 base indexes, and the rebuild. */
   private[graft] def writeGateIndexStaged(spark: SparkSession, dst: String,
       coarse: Seq[Seq[Long]], fineRouted: DataFrame, members: DataFrame): Long = {
     import org.apache.spark.storage.StorageLevel
     members.repartitionByRange(32, col("cid")).sortWithinPartitions("cid")
       .write.mode("overwrite").parquet(s"$dst/members.parquet")
-    val fineOut = fineRouted.select(col("fr").as("ccid"), col("cid"),
-      expr("transform(smud, v -> CAST(v AS BIGINT))").as("cmud"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val fineOut = fineRouted.persist(StorageLevel.MEMORY_AND_DISK)
     fineOut.repartition(1).write.mode("overwrite").parquet(s"$dst/fine.parquet")
     // O(√K): the non-empty coarse ids — the only collected state
     val nonEmpty = fineOut.select(col("ccid")).distinct().collect()
@@ -2099,7 +1896,7 @@ object SimilarityQueries {
     * slice being read — under cid-range sharding that is 1/S of the
     * cells, map-side combinable — never on the probe side. `onlyCids`
     * prunes the SCAN to the named cells (an isin predicate the cid-sorted
-    * row-group stats of [[writeMemberDelta]]/[[writeGateIndexRouted]]'s
+    * row-group stats of [[writeMemberDelta]]/[[writeGateIndexStaged]]'s
     * layout can skip on) — the admit loop's per-batch bound: a broadcast
     * join would filter only after a full O(index) scan (r13 review). */
   private[graft] def readCellMembersMerged(spark: SparkSession,
@@ -2111,15 +1908,7 @@ object SimilarityQueries {
       .agg(flatten(collect_list(col("members"))).as("members"))
   }
 
-  /** q125 — exact-first collapse ∘ STAGED routed assignment ∘ census.
-    * Same algorithm as q118 (only the centroid table's physical placement
-    * differs), so the oracle is q118's verbatim. */
-  def q125SemanticDedupStaged(spark: SparkSession, d: String): DataFrame = {
-    val (nTotal, v) = exactFirstReps(spark, d)
-    exactFirstOutput(nTotal, v, semDedupCensus(routedAssignStagedFrom(v)))
-  }
-
-  /** Rehearsal hook (SemScale): the q125 stack at an overridden cell
+  /** Rehearsal hook (SemScale): the q118 stack at an overridden cell
     * target, so a 2M-vector fixture reaches K ≥ 10⁵ (targetCell=16 →
     * K = 125,000) without a 10⁸-vector corpus. */
   private[graft] def stagedStackRehearsal(spark: SparkSession, d: String,
@@ -2146,14 +1935,14 @@ object SimilarityQueries {
   /** The exact-first prepared frame `v` plus a ONE-ROW totals frame
     * (n_total, n_reps). n_total used to be a synchronous driver
     * `all.count()` — a full corpus-scan job paid during CONSTRUCTION of
-    * every exact-first query (q117/q118/q119/q125, ×2 under the bench's
+    * every exact-first query (q117/q118/q119, ×2 under the bench's
     * best-of-2) before any real work started (guide §5: no
     * driver-blocking actions in query paths the plan itself can
     * compute). The rep-group row count now rides `v` as `dup_cnt`
     * (8 bytes/row through the one exchange the frame already pays), so a
     * SINGLE aggregate over the persisted frame yields both totals —
     * n_total = Σ dup_cnt, n_reps = count(*) — and the census crossJoin
-    * stays the plan's only nested-loop join (the q119/q125 plan pins'
+    * stays the plan's only nested-loop join (the q118/q119 plan pins'
     * bnlj ≤ 1 rule). Values are unchanged: Σ of exact group sizes IS the
     * corpus row count. */
   private def exactFirstReps(spark: SparkSession, d: String): (DataFrame, DataFrame) = {
@@ -2201,20 +1990,17 @@ object SimilarityQueries {
   /** q118 — the full production stack in one query: exact-first collapse
     * (q117) ∘ routed assignment (q116) ∘ the shared census. This is what a
     * 100 TB run actually deploys: duplicates can't create degenerate
-    * cells, and the argmin is O(√K) per row. */
+    * cells, and the argmin is O(√K) per row with O(√K) driver state.
+    * The `q125_semantic_dedup_staged` key runs this function too. */
   def q118SemanticDedupStack(spark: SparkSession, d: String): DataFrame = {
     val (nTotal, v) = exactFirstReps(spark, d)
-    exactFirstOutput(nTotal, v, semDedupCensus(routedAssignFrom(v)))
+    exactFirstOutput(nTotal, v, semDedupCensus(routedAssignStagedFrom(v)))
   }
 
-  /** Oracle transform shared by q117/q118: redefine `md` to the reps
-    * frame (the original md body becomes an unreferenced CTE that DuckDB
-    * never executes — K's scalar subquery then counts reps, matching the
-    * engine's rule) and splice the exact scalars into the final SELECT,
-    * keeping the census column list identical to the engine's crossJoin. */
   /** Redefine `md` in a k-means CTE chain to the exact-dedup REPS frame
-    * (the original md body becomes an unreferenced CTE DuckDB never
-    * executes). */
+    * (the original md body becomes an unreferenced CTE that DuckDB never
+    * executes — K's scalar subquery then counts reps, matching the
+    * engine's rule). Shared by the q117/q118/q119 oracles. */
   private def repsChainOver(chain: String): String = chain.replace(
     "md AS (",
     """md0 AS (
@@ -2227,6 +2013,9 @@ object SimilarityQueries {
       |  SELECT md0.* FROM md0 JOIN repids USING (vec_id)),
       |md_unused AS (""".stripMargin)
 
+  /** The exact-first oracle: [[repsChainOver]] plus the exact scalars
+    * spliced into the final SELECT, keeping the census column list
+    * identical to the engine's crossJoin. */
   private def exactFirstSqlOver(chain: String): String = {
     val reChained = repsChainOver(chain)
     semDedupSqlWith(reChained).replace(
@@ -2275,7 +2064,7 @@ object SimilarityQueries {
   def q119SemanticDedupCapped(spark: SparkSession, d: String): DataFrame = {
     val (nTotal, v) = exactFirstReps(spark, d)
     exactFirstOutput(nTotal, v,
-      semDedupCensusCapped(routedAssignFrom(v), CellCap))
+      semDedupCensusCapped(routedAssignStagedFrom(v), CellCap))
   }
 
   lazy val q119Sql: String = {
@@ -3193,10 +2982,10 @@ object SimilarityQueries {
     "q116_semantic_dedup_routed" -> (q116SemanticDedupRouted _),
     "q117_semantic_dedup_exact_first" -> (q117SemanticDedupExactFirst _),
     "q118_semantic_dedup_stack" -> (q118SemanticDedupStack _),
-    "q125_semantic_dedup_staged" -> (q125SemanticDedupStaged _),
+    "q125_semantic_dedup_staged" -> (q118SemanticDedupStack _),
     "q126_semantic_gate_census" -> (q126SemanticGateCensus _),
     "q127_semantic_gate_routed" -> (q127SemanticGateRoutedCensus _),
-    "q129_semantic_gate_staged" -> (q129SemanticGateStagedCensus _),
+    "q129_semantic_gate_staged" -> (q127SemanticGateRoutedCensus _),
     "q130_semantic_index_append" -> (q130SemanticIndexAppendCensus _),
     "q119_semantic_dedup_capped" -> (q119SemanticDedupCapped _),
     "q90_diversity_sample" -> (q90DiversitySample _),
@@ -3216,9 +3005,6 @@ object SimilarityQueries {
     "q125_semantic_dedup_staged" -> q118Sql,
     "q126_semantic_gate_census" -> q126Sql,
     "q127_semantic_gate_routed" -> q127Sql,
-    // q129 shares q127's oracle verbatim: same cell geometry, same census
-    // tail — only the assignment head's physical placement differs (the
-    // q105/q112 twin-shares-the-oracle pattern)
     "q129_semantic_gate_staged" -> q127Sql,
     "q130_semantic_index_append" -> q130Sql,
     "q119_semantic_dedup_capped" -> q119Sql,

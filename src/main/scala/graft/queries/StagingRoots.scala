@@ -177,9 +177,12 @@ private[graft] object StagingRoots {
   /** Every staging chain, declared once. Each part names its consumers:
     * the queries whose construction reads what the part stages. */
   lazy val chains: Seq[Chain] = Seq(
-    Chain("dedup", Seq(Part(Set("q49_dedup_pipeline", "q61_dup_components",
-        "q79_split_leakage", "q87_components_star", "q89_cluster_rep"),
-      (s, d) => { DedupQueries.Staging.scoredAndCounts(s, d); () }))),
+    Chain("dedup", Seq(
+      Part(Set("q49_dedup_pipeline", "q61_dup_components", "q79_split_leakage",
+          "q87_components_star", "q89_cluster_rep"),
+        (s, d) => { DedupQueries.Staging.scoredAndCounts(s, d); () }),
+      Part(Set("q88_incremental_dedup"),
+        (s, d) => { DedupQueries.IncrementalIndex.of(s, d); () }))),
     Chain("eval", Seq(Part(Set("q72_signal_regularity", "q122_tamrs",
         "q123_tier_screening"), EvalStaging.build))),
     Chain("mcdm", Seq(Part(Set("q131_entropy_topsis", "q132_promethee",

@@ -478,7 +478,7 @@ object StreamingOps {
     * ([[streamingSemanticGateSharded]]) bounds each broadcast OBJECT but
     * keeps all S relations resident at once and OOMs where the
     * sequential form is comfortable. The flat assignment head is O(K)
-    * per row and grows with the corpus — [[streamingSemanticGateRouted]]
+    * per row and grows with the corpus — [[streamingSemanticGateStaged]]
     * is the √K-scaling head for large K. */
   def streamingSemanticGate(vecs: DataFrame, cents: Seq[Seq[Long]],
       cellMembers: DataFrame, minCos: Double = 0.9): DataFrame =
@@ -550,41 +550,16 @@ object StreamingOps {
     * O(K)-per-row assignment kernel replaced by the q116 coarse-quantizer
     * route (coarse argmin over ~√K seeds, then in-cell argmin over the
     * routed cell's ~√K fine centroids): O(2√K·Dim) arithmetic per
-    * arriving row at the same ~K·Dim·8 B broadcast footprint, against an
-    * index whose cells are the ROUTED lane's (built by
-    * `SimilarityQueries.semanticStreamIndexRouted`; boundaries differ
-    * from the flat q113 cells — the two gates are separate operators,
-    * oracle-checked as q126/q127). Still stateless map-only assignment +
-    * one stream-static broadcast join, so everything said about the flat
-    * gate's sharding ([[semanticGateVerifyShard]] over cid ranges)
-    * applies unchanged. */
-  def streamingSemanticGateRouted(vecs: DataFrame,
-      tables: graft.queries.SimilarityQueries.RoutedTables,
-      cellMembers: DataFrame, minCos: Double = 0.9): DataFrame =
-    semanticVerify(semanticGateAssignRouted(vecs, tables), cellMembers, minCos)
-
-  /** Routed assignment HEAD alone (see [[semanticGateAssign]] for why the
-    * head is exposed: assign-once sequential-shard consumers). */
-  def semanticGateAssignRouted(vecs: DataFrame,
-      tables: graft.queries.SimilarityQueries.RoutedTables): DataFrame =
-    graft.queries.SimilarityQueries.routedAssignApply(tables, "cid")(
-      prepGateVecs(vecs))
-
-  /** The STAGED routed semantic gate — [[streamingSemanticGateRouted]]
-    * with the O(K) broadcast routing state removed (the r12 SCALE.md
-    * residual, shipped): the assignment head reads the gateindexr-written
-    * coarse/fine parquet tables, collects ONLY the O(√K) coarse table
-    * (~180 KB at K = 125,000 vs ~16 MB→O(K) for [[RoutedTables]]), and
-    * meets the K-row fine table — still a distributed frame — in a
-    * shuffle-hash join keyed by the coarse route: the q125 staging
-    * discipline applied to the gate, the form that still fits at
-    * K ≥ 10⁷. Honest trade: the probe batch pays one route-keyed shuffle
-    * per micro-batch (probe-sized, not corpus-sized) where the broadcast
-    * head pays none. Assignment is row-for-row identical to the routed
-    * broadcast head (same kernels, same tie rules — StreamingSpec pins
-    * the full sf0.01 replay through the written parquet layout); the
-    * verify tail and its cid-range sharding ([[semanticGateVerifyShard]])
-    * apply unchanged. */
+    * arriving row, against an index whose cells are the ROUTED lane's
+    * (built by `SimilarityQueries.semanticStreamIndexStaged`; boundaries
+    * differ from the flat q113 cells — the two gates are separate
+    * operators, oracle-checked as q126/q127). The head is staged: it
+    * collects ONLY the O(√K) coarse table (~180 KB at K = 125,000) and
+    * meets the K-row fine table — still a frame — in an equi join keyed
+    * by the coarse route, so the routing state never has to fit on the
+    * driver, the form that still fits at K ≥ 10⁷. The verify tail and
+    * its cid-range sharding ([[semanticGateVerifyShard]]) apply
+    * unchanged. */
   def streamingSemanticGateStaged(vecs: DataFrame,
       tables: graft.queries.SimilarityQueries.StagedGateTables,
       cellMembers: DataFrame, minCos: Double = 0.9): DataFrame =

@@ -13,6 +13,13 @@ object GraftBridge {
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** `df`'s rows under a one-node logical plan: a leaf over the rows its
+    * physical plan produces, so a frame persisted on top of it is
+    * described by that one node instead of `df`'s whole plan. */
+  def planLeaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(df.queryExecution.toRdd.map(_.copy()), df.schema)
+
   /** slice's INVALID_PARAMETER_VALUE.LENGTH, for kernels that fuse a slice. */
   def negativeLengthError(function: String, length: Int): RuntimeException =
     org.apache.spark.sql.errors.QueryExecutionErrors

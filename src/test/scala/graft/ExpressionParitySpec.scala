@@ -192,17 +192,13 @@ class ExpressionParitySpec extends GraftSuite {
     }
   }
 
-  test("centroidArgminRouted + cellArgmin: tie to smaller ascending id, null input") {
-    val grouped = Seq(Seq(Seq(0L, 0L), Seq(4L, 4L)), Seq(Seq(10L, 10L), Seq(10L, 10L)))
-    val ids = Seq(Seq(3, 7), Seq(11, 12))
-    parity("routed_argmin") {
+  test("cellArgmin: tie to smaller ascending id, null input") {
+    parity("cell_argmin") {
       spark.range(1).select(
-        GraftFunctions.centroidArgminRouted(
-          expr("array(2.0D, 2.0D)"), lit(0), grouped, ids).as("r0"),
-        GraftFunctions.centroidArgminRouted(
-          expr("array(10.0D, 10.0D)"), lit(1), grouped, ids).as("r1_tie"),
-        GraftFunctions.centroidArgminRouted(
-          expr("cast(null as array<double>)"), lit(0), grouped, ids).as("rnul"),
+        GraftFunctions.cellArgmin(
+          expr("array(2.0D, 2.0D)"),
+          expr("array(array(0L, 0L), array(4L, 4L))"),
+          expr("array(3, 7)")).as("cell0"),
         GraftFunctions.cellArgmin(
           expr("array(10.0D, 10.0D)"),
           expr("array(array(10L, 10L), array(10L, 10L))"),

@@ -290,8 +290,8 @@ class PlanShapeSpec extends GraftSuite {
   test("q116 routed assignment: both kernel stages present, no SortAggregate, " +
     "no row explosion") {
     val p = plan(SimilarityQueries.q116SemanticDedupRouted(spark, sf))
-    assert(p.contains("centroid_argmin") && p.contains("centroid_argmin_routed"),
-      s"routing must run coarse CentroidArgmin then CentroidArgminRouted:\n$p")
+    assert(p.contains("centroid_argmin") && p.contains("cell_argmin"),
+      s"routing must run coarse CentroidArgmin then CellArgmin:\n$p")
     assert(!p.contains("SortAggregate"), s"no sort-aggregated argmin:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"assignment must not explode rows:\n$p")
@@ -309,7 +309,7 @@ class PlanShapeSpec extends GraftSuite {
   test("q119 capped census: routed kernels + broadcast cell/rep joins, " +
     "no quadratic fallback") {
     val p = plan(SimilarityQueries.q119SemanticDedupCapped(spark, sf))
-    assert(p.contains("centroid_argmin_routed"),
+    assert(p.contains("cell_argmin"),
       s"q119 rides the routed assignment:\n$p")
     assert(!p.contains("CartesianProduct"), s"no cartesian product:\n$p")
     // exactly ONE nested-loop join is allowed: the 1-row exact-scalars
@@ -346,45 +346,47 @@ class PlanShapeSpec extends GraftSuite {
   test("q127 routed gate: assignment is the coarse+routed kernel pair, " +
     "verify stays one broadcast-hash join, corpus never shuffles") {
     val p = plan(SimilarityQueries.q127SemanticGateRoutedCensus(spark, sf))
-    assert(p.contains("centroid_argmin_routed"),
-      s"in-cell assignment must run the routed kernel:\n$p")
+    assert(p.contains("cell_argmin"),
+      s"in-cell assignment must run the column-borne routed kernel:\n$p")
     assert(p.contains("centroid_argmin("),
       s"coarse routing must run the flat kernel over the √K seeds:\n$p")
-    assert("BroadcastHashJoin".r.findAllIn(p).length == 1,
-      s"unsharded routed gate = exactly one member broadcast join:\n$p")
+    // at fixture size the packed cells frame is under the broadcast
+    // threshold: one cells broadcast + the one member broadcast
+    assert("BroadcastHashJoin".r.findAllIn(p).length == 2,
+      s"unsharded routed gate = the cells join plus one member broadcast join:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct")
         && !p.contains("BroadcastNestedLoopJoin"),
       s"the probe side must never shuffle or cross-join for the gate:\n$p")
   }
 
-  test("q129 staged gate: in-cell assignment is the column-borne cell_argmin " +
-    "behind a SHUFFLE-hash cell join (no K-row broadcast), verify stays the " +
-    "one member broadcast join") {
-    val p = plan(SimilarityQueries.q129SemanticGateStagedCensus(spark, sf))
-    assert(p.contains("cell_argmin"),
-      s"staged in-cell assignment must run the column-borne kernel:\n$p")
-    assert(p.contains("ShuffledHashJoin"),
-      s"the K-row fine-cell table must meet probes in a SHUFFLE join " +
-        s"(a broadcast would re-materialize K on the driver):\n$p")
-    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct")
-        && !p.contains("BroadcastNestedLoopJoin"),
-      s"no sort-merge/cartesian anywhere in the staged gate:\n$p")
-    // the HEAD alone (no member-index lineage, whose BUILD legitimately
-    // uses the routed kernel): coarse flat kernel yes, K-row routed
-    // broadcast kernel NO, zero broadcast joins — the fine table never
-    // reaches the driver
-    val (tabs, _) = SimilarityQueries.semanticStreamIndexRouted(spark, sf)
-    val (coarseDf, fineDf) = SimilarityQueries.routedTablesFrames(spark, tabs)
-    val head = plan(graft.streaming.StreamingOps.semanticGateAssignStaged(
+  test("routed gate head: the cells join follows Spark's size rule — " +
+    "broadcast under autoBroadcastJoinThreshold, shuffled past it") {
+    // the HEAD alone (no member-index lineage): coarse flat kernel, then
+    // the in-cell kernel behind the one cells join; a broadcast would
+    // re-materialize a K-row table on the driver, so past the threshold
+    // the join must shuffle instead
+    val idx = graft.queries.GateStaging.routedDir(spark, sf)
+    def head(): String = plan(graft.streaming.StreamingOps.semanticGateAssignStaged(
       Tables.embeddings(spark, sf).select("vec_id", "embedding"),
-      SimilarityQueries.stagedGateTables(coarseDf, fineDf)))
-    assert(head.contains("centroid_argmin("),
-      s"coarse routing must run the flat kernel over the √K seeds:\n$head")
-    assert(!head.contains("centroid_argmin_routed"),
-      s"the staged head must NOT rebuild the K-row broadcast kernel:\n$head")
-    assert(!head.contains("BroadcastHashJoin"),
-      s"no broadcast join in the assignment head (the cells join must " +
-        s"shuffle):\n$head")
+      graft.queries.GateStaging.routedTables(spark, sf)))
+    val small = head()
+    assert(small.contains("centroid_argmin(") && small.contains("cell_argmin"),
+      s"coarse kernel then in-cell kernel:\n$small")
+    assert("BroadcastHashJoin".r.findAllIn(small).length == 1 && small.contains("BuildRight"),
+      s"a cells frame under the threshold is broadcast:\n$small")
+    val cellsBytes = java.nio.file.Files.walk(java.nio.file.Paths.get(idx, "fine.parquet"))
+      .filter(f => f.toString.endsWith(".parquet"))
+      .mapToLong(f => java.nio.file.Files.size(f)).sum
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (cellsBytes / 4).toString)
+    try {
+      val large = head()
+      assert(!large.contains("BroadcastHashJoin") && !large.contains("BroadcastNestedLoopJoin"),
+        s"a cells frame past the threshold must not be broadcast:\n$large")
+      assert(large.contains("SortMergeJoin") || large.contains("ShuffledHashJoin"),
+        s"past the threshold the cells join shuffles:\n$large")
+      assert(large.contains("cell_argmin"), s"in-cell kernel:\n$large")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("bucketed result tables co-locate joins: a config_id equi-join of " +

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import graft.functions.{CentroidKernel, CentroidKernelRouted}
+import graft.functions.{CellArgminKernel, CentroidKernel}
 
 /** Property-fuzz for the k-means assignment kernels at the unit level:
   * random integer-valued vectors and centroid tables (including planted
@@ -13,18 +13,8 @@ import graft.functions.{CentroidKernel, CentroidKernelRouted}
   */
 class SemDedupKernelFuzzSpec extends GraftSuite {
 
-  private def bruteArgmin(v: Array[Long], cents: Array[Array[Long]]): Int = {
-    var best = -1
-    var bd: BigInt = null
-    cents.indices.foreach { c =>
-      var d = BigInt(0)
-      v.indices.foreach { i =>
-        val diff = BigInt(v(i)) - BigInt(cents(c)(i)); d += diff * diff
-      }
-      if (bd == null || d < bd) { bd = d; best = c } // strict <: smaller cid on ties
-    }
-    best
-  }
+  private def bruteArgmin(v: Array[Long], cents: Array[Array[Long]]): Int =
+    SemDedupKernelFuzzSpec.bruteArgmin(v.toSeq, cents.map(_.toSeq).toSeq)
 
   private def toArrayData(v: Array[Long]): GenericArrayData =
     new GenericArrayData(v.map(_.toDouble))
@@ -48,7 +38,7 @@ class SemDedupKernelFuzzSpec extends GraftSuite {
     }
   }
 
-  test("CentroidArgminRouted == brute force over the routed subset, " +
+  test("CellArgmin == brute force over the routed subset, " +
     "including single-member and dense cells") {
     val rnd = new scala.util.Random(78L)
     (0 until 300).foreach { trial =>
@@ -59,19 +49,48 @@ class SemDedupKernelFuzzSpec extends GraftSuite {
       val fine = Array.fill(k)(vec())
       if (k > 2 && rnd.nextBoolean()) fine(k - 1) = fine(rnd.nextInt(k - 1)).clone()
       // random routing (cells may be empty — the kernel is only ever
-      // called with a route that HAS members, per the non-empty contract)
+      // called on a cell that HAS members, per the non-empty contract)
       val f2c = fine.map(_ => rnd.nextInt(k1))
-      val grouped: Array[Array[Array[Long]]] =
-        (0 until k1).map(cc => fine.indices.filter(f2c(_) == cc).map(fine(_)).toArray).toArray
-      val ids: Array[Array[Int]] =
-        (0 until k1).map(cc => fine.indices.filter(f2c(_) == cc).toArray).toArray
-      val nonEmpty = (0 until k1).filter(ids(_).nonEmpty)
+      val nonEmpty = (0 until k1).filter(cc => f2c.contains(cc))
       val route = nonEmpty(rnd.nextInt(nonEmpty.size))
+      // the joined row's cell table: cid-ascending, as the packed frame
+      val subset = fine.indices.filter(f2c(_) == route).toArray
       val v = vec()
-      val got = CentroidKernelRouted.argmin(toArrayData(v), route, grouped, ids)
-      val subset = ids(route)
+      val got = CellArgminKernel.argmin(toArrayData(v),
+        new GenericArrayData(subset.toSeq.map(c => new GenericArrayData(fine(c)))),
+        new GenericArrayData(subset))
       val want = subset(bruteArgmin(v, subset.map(fine(_))))
       assert(got == want, s"trial $trial dim=$dim k=$k k1=$k1 route=$route: $got != $want")
     }
+  }
+}
+
+/** Plain-Scala references for the k-means assignment kernels, every
+  * distance in BigInt. */
+object SemDedupKernelFuzzSpec {
+  /** Index of the nearest of `cents` to `v`; ties to the smaller index. */
+  def bruteArgmin(v: Seq[Long], cents: Seq[Seq[Long]]): Int = {
+    var best = -1
+    var bd: BigInt = null
+    cents.indices.foreach { c =>
+      var d = BigInt(0)
+      v.indices.foreach { i =>
+        val diff = BigInt(v(i)) - BigInt(cents(c)(i)); d += diff * diff
+      }
+      if (bd == null || d < bd) { bd = d; best = c } // strict <: smaller cid on ties
+    }
+    best
+  }
+
+  /** The routed assignment of `v`: the nearest non-empty coarse cell
+    * (`coarse` holds the first k₁ fine centroids, `f2c` each fine
+    * centroid's coarse cell), then the nearest fine centroid inside it —
+    * ties to the smaller ccid, then the smaller cid. */
+  def routedArgmin(v: Seq[Long], fine: Seq[Seq[Long]], coarse: Seq[Seq[Long]],
+      f2c: Seq[Int]): Int = {
+    val nonEmpty = f2c.distinct.sorted
+    val route = nonEmpty(bruteArgmin(v, nonEmpty.map(coarse(_))))
+    val cell = fine.indices.filter(f2c(_) == route)
+    cell(bruteArgmin(v, cell.map(fine(_))))
   }
 }

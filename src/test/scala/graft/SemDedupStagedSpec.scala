@@ -24,26 +24,13 @@ class SemDedupStagedSpec extends GraftSuite {
     assert(byArray.nonEmpty)
   }
 
-  test("q125 staged stack output equals q118 row-for-row") {
-    val staged = SimilarityQueries.q125SemanticDedupStaged(spark, sf).collect()
-    val kernel = SimilarityQueries.q118SemanticDedupStack(spark, sf).collect()
-    assert(staged.length == kernel.length && staged.nonEmpty)
-    staged.zip(kernel).foreach { case (s, k) =>
-      assert(s == k, s"staged row $s != kernel row $k")
-    }
-  }
-
-  test("q125 plan: cell_argmin kernel present, cells meet vectors in a " +
-    "shuffle join (never a broadcast that would re-materialize K on the " +
-    "driver), no quadratic fallback") {
-    val p = SimilarityQueries.q125SemanticDedupStaged(spark, sf)
+  test("q118 plan: cell_argmin kernel present, no quadratic fallback") {
+    val p = SimilarityQueries.q118SemanticDedupStack(spark, sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("cell_argmin"),
-      s"staged assignment must ride the column-borne CellArgmin kernel:\n$p")
+      s"routed assignment must ride the column-borne CellArgmin kernel:\n$p")
     assert(p.contains("centroid_argmin"),
       s"coarse routing must stay the map-only kernel:\n$p")
-    assert(p.contains("ShuffledHashJoin"),
-      s"the cells join must be the hinted shuffle-hash join:\n$p")
     assert(!p.contains("CartesianProduct"), s"no cartesian product:\n$p")
     // the 1-row exact-scalars crossJoin onto the census is the only
     // allowed nested-loop join (the q119 rule)
@@ -73,25 +60,13 @@ class SemDedupStagedSpec extends GraftSuite {
     assert(rows.map(_.getAs[Int]("fr")).distinct.length == rows.length)
   }
 
-  test("stagedGateAssignApply == routedAssignApply over random geometries " +
-    "(duplicate seeds -> orphan coarse cells, duplicate fine centroids, " +
-    "exact-tie probes) — property fuzz of the composed pipelines") {
+  test("stagedGateAssignApply == plain-Scala routed argmin over random " +
+    "geometries (duplicate seeds -> orphan coarse cells, duplicate fine " +
+    "centroids, exact-tie probes) — property fuzz of the composed pipeline") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260815)
     val dim = 4
     def randVec(): Seq[Long] = Seq.fill(dim)((rnd.nextInt(400) - 200).toLong)
-    def routeOf(c: Seq[Long], coarse: IndexedSeq[Seq[Long]]): Int = {
-      var best = -1
-      var bd: BigInt = null
-      coarse.indices.foreach { j =>
-        var d = BigInt(0)
-        c.indices.foreach { i =>
-          val df = BigInt(c(i)) - BigInt(coarse(j)(i)); d += df * df
-        }
-        if (bd == null || d < bd) { bd = d; best = j } // strict <: smaller ccid
-      }
-      best
-    }
     for (trial <- 0 until 6) {
       val k1 = 2 + rnd.nextInt(3)
       val k = k1 + rnd.nextInt(k1 * k1)
@@ -106,41 +81,35 @@ class SemDedupStagedSpec extends GraftSuite {
         b.toIndexedSeq
       }
       val coarseSeeds = fineCents.take(k1)
-      val f2c = fineCents.map(routeOf(_, coarseSeeds)).toArray
-      val nonEmpty = f2c.distinct.sorted.toSeq
-      val tabs = graft.queries.SimilarityQueries.RoutedTables(
-        nonEmpty = nonEmpty,
-        coarse = nonEmpty.map(coarseSeeds(_)),
-        grouped = (0 until k1).map(cc =>
-          fineCents.indices.filter(f2c(_) == cc).map(fineCents(_))),
-        idsOf = (0 until k1).map(cc =>
-          fineCents.indices.filter(f2c(_) == cc)))
+      val f2c = fineCents.map(SemDedupKernelFuzzSpec.bruteArgmin(_, coarseSeeds))
+      val nonEmpty = f2c.distinct.sorted
+      // the written index layout: (ccid, cmud) non-empty coarse rows and
+      // (ccid, cid, cmud) fine rows
+      val coarseDf = nonEmpty.map(cc => (cc, coarseSeeds(cc))).toDF("ccid", "cmud")
+      val fineDf = fineCents.indices.map(c => (f2c(c), c, fineCents(c)))
+        .toDF("ccid", "cid", "cmud")
       // probes: random + exact centroid copies (tie bait) + duplicates
-      val probes: Seq[(Long, Seq[Double])] = (0 until 40).map { i =>
+      val probes: Seq[(Long, Seq[Long])] = (0 until 40).map { i =>
         val v =
           if (i % 5 == 0) fineCents(rnd.nextInt(k))
           else if (i % 7 == 0) coarseSeeds(rnd.nextInt(k1))
           else randVec()
-        (i.toLong, v.map(_.toDouble))
+        (i.toLong, v)
       }
-      val probeDf = probes.toDF("vec_id", "mud")
-      def cids(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-        df.select("vec_id", "cid").collect()
-          .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val viaRouted = cids(graft.queries.SimilarityQueries
-        .routedAssignApply(tabs, "cid")(probeDf))
-      val (coarseDf, fineDf) = graft.queries.SimilarityQueries
-        .routedTablesFrames(spark, tabs)
-      val staged = graft.queries.SimilarityQueries
-        .stagedGateTables(coarseDf, fineDf)
-      val viaStaged = cids(graft.queries.SimilarityQueries
-        .stagedGateAssignApply(staged, "cid")(probeDf))
+      val probeDf = probes.map { case (id, v) => (id, v.map(_.toDouble)) }
+        .toDF("vec_id", "mud")
+      val staged = graft.queries.SimilarityQueries.stagedGateTables(coarseDf, fineDf)
+      val viaStaged = graft.queries.SimilarityQueries
+        .stagedGateAssignApply(staged, "cid")(probeDf)
+        .select("vec_id", "cid").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
       staged.cells.unpersist()
-      assert(viaStaged.keySet == viaRouted.keySet,
+      assert(viaStaged.keySet == probes.map(_._1).toSet,
         s"trial $trial: coverage differs (k1=$k1, k=$k)")
-      viaRouted.foreach { case (id, c) =>
-        assert(viaStaged(id) == c,
-          s"trial $trial: probe $id staged=${viaStaged(id)} routed=$c " +
+      probes.foreach { case (id, v) =>
+        val want = SemDedupKernelFuzzSpec.routedArgmin(v, fineCents, coarseSeeds, f2c)
+        assert(viaStaged(id) == want,
+          s"trial $trial: probe $id staged=${viaStaged(id)} brute=$want " +
             s"(k1=$k1, k=$k, nonEmpty=$nonEmpty)")
       }
     }
@@ -160,9 +129,9 @@ class SemDedupStagedSpec extends GraftSuite {
       val arrivals = all.filter(c("vec_id") % 5 === 0)
       // build + write the routed index from the BASE corpus only
       base.select(c("vec_id"), c("embedding")).write.parquet(s"$baseDir/embeddings.parquet")
-      val (tabs, members) = graft.queries.SimilarityQueries
-        .semanticStreamIndexRouted(spark, baseDir)
-      graft.queries.SimilarityQueries.writeGateIndexRouted(spark, dir, tabs, members)
+      val (coarse, fine, members) = graft.queries.SimilarityQueries
+        .semanticStreamIndexStaged(spark, baseDir)
+      graft.queries.SimilarityQueries.writeGateIndexStaged(spark, dir, coarse, fine, members)
       val filesBefore = new java.io.File(s"$dir/members.parquet")
         .listFiles().map(_.getName).toSet
       val nBase = graft.queries.SimilarityQueries
@@ -229,8 +198,8 @@ class SemDedupStagedSpec extends GraftSuite {
       val base = all.filter(c("vec_id") % 5 =!= 0)
       base.select(c("vec_id"), c("embedding"))
         .write.parquet(s"$baseDir/embeddings.parquet")
-      val (tabs, members) = SimilarityQueries.semanticStreamIndexRouted(spark, baseDir)
-      SimilarityQueries.writeGateIndexRouted(spark, dir, tabs, members)
+      val (coarse, fine, members) = SimilarityQueries.semanticStreamIndexStaged(spark, baseDir)
+      SimilarityQueries.writeGateIndexStaged(spark, dir, coarse, fine, members)
       def memberFiles(): Map[String, Long] =
         new java.io.File(s"$dir/members.parquet").listFiles()
           .filter(_.getName.endsWith(".parquet"))
@@ -304,8 +273,8 @@ class SemDedupStagedSpec extends GraftSuite {
     try {
       val vecs = Tables.embeddings(spark, sf001)
         .select(c("vec_id"), c("embedding"))
-      val (tabs, members) = SimilarityQueries.semanticStreamIndexRouted(spark, sf001)
-      SimilarityQueries.writeGateIndexRouted(spark, dir, tabs, members)
+      val (coarse, fine, members) = SimilarityQueries.semanticStreamIndexStaged(spark, sf001)
+      SimilarityQueries.writeGateIndexStaged(spark, dir, coarse, fine, members)
       assert(SimilarityQueries.appendGenerationCount(dir) == 0)
       // a pristine index is never compacted by the policy
       assert(!SimilarityQueries.maintainIndex(spark, dir, maxGens = 1))
@@ -374,8 +343,8 @@ class SemDedupStagedSpec extends GraftSuite {
     try {
       val vecs = Tables.embeddings(spark, sf001)
         .select(c("vec_id"), c("embedding"))
-      val (tabs, members) = SimilarityQueries.semanticStreamIndexRouted(spark, sf001)
-      SimilarityQueries.writeGateIndexRouted(spark, dir, tabs, members)
+      val (coarse, fine, members) = SimilarityQueries.semanticStreamIndexStaged(spark, sf001)
+      SimilarityQueries.writeGateIndexStaged(spark, dir, coarse, fine, members)
       assert(SimilarityQueries.semanticIndexAppend(spark, dir,
         vecs.filter(c("vec_id") % 7 === 0)
           .select((c("vec_id") + lit(1000000000L)).as("vec_id"), c("embedding"))) > 0)
@@ -434,43 +403,6 @@ class SemDedupStagedSpec extends GraftSuite {
     } finally {
       queries.StagingRoots.deleteRecursively(java.nio.file.Paths.get(dir))
     }
-  }
-
-  test("staged gate-index build writes the SAME tables as the kernel build " +
-    "(coarse, fine, member assignment) — the indexes are interchangeable") {
-    val sf001 = "/root/testdata/sf0.01"
-    val (tabs, membersR) = SimilarityQueries.semanticStreamIndexRouted(spark, sf001)
-    val (coarseDfR, fineDfR) = SimilarityQueries.routedTablesFrames(spark, tabs)
-    val (coarseS, fineS, membersS) =
-      SimilarityQueries.semanticStreamIndexStaged(spark, sf001)
-    // fine tables: same (ccid, cid, centroid) triples
-    def fineKey(rows: Array[org.apache.spark.sql.Row], vecIdx: Int,
-        toLong: Any => Long): Set[(Int, Int, Seq[Long])] =
-      rows.map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Any](vecIdx).map(toLong))).toSet
-    val fineKernel = fineKey(fineDfR.collect(), 2, _.asInstanceOf[Long])
-    val fineStaged = fineKey(fineS.collect(), 2,
-      v => v.asInstanceOf[Double].toLong)
-    assert(fineStaged == fineKernel,
-      s"fine tables drifted: ${(fineStaged diff fineKernel).take(2)} / " +
-        s"${(fineKernel diff fineStaged).take(2)}")
-    // coarse tables: the kernel build writes only NON-EMPTY cells; the
-    // staged writer derives the same restriction from the fine routes
-    val nonEmptyS = fineStaged.map(_._1).toSeq.distinct.sorted
-    val kernelCoarse = coarseDfR.collect()
-      .map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
-    assert(nonEmptyS == kernelCoarse.keySet.toSeq.sorted)
-    nonEmptyS.foreach(cc => assert(coarseS(cc) == kernelCoarse(cc).toSeq,
-      s"coarse vector drifted at ccid $cc"))
-    // member ASSIGNMENT: every vector in the same fine cell in both builds
-    def assignMap(m: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-      m.select(col("cid"), explode(col("members")).as("mm"))
-        .select(col("mm.vec_id"), col("cid")).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val aR = assignMap(membersR)
-    val aS = assignMap(membersS)
-    assert(aS == aR, s"assignments drifted: ${(aS.toSet diff aR.toSet).take(3)}")
-    assert(aR.nonEmpty)
   }
 
   test("q130 lifecycle census is chunking-invariant: two vec_id-monotone " +

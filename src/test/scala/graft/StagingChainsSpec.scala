@@ -55,6 +55,17 @@ class StagingChainsSpec extends GraftSuite {
     other.unpersist()
   }
 
+  test("the routed gate's read path leaves no cached frame behind: " +
+    "running q127 and q129 twice adds no persistent RDD") {
+    // stage the index and warm the coarse-table memo first
+    queries.GateStaging.build(spark, sf, flat = false, routed = true)
+    val before = persistedIds
+    for (_ <- 1 to 2; q <- Seq("q127_semantic_gate_routed", "q129_semantic_gate_staged"))
+      SparkEntry.queries(q)(spark, sf).collect()
+    assert((persistedIds -- before).isEmpty,
+      s"gate reads left ${persistedIds -- before} cached")
+  }
+
   test("declared consumers are queries, and a part's build stages " +
     "everything its consumers read") {
     val declared = StagingRoots.chains.flatMap(_.consumers).toSet

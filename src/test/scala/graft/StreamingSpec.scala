@@ -445,33 +445,35 @@ class StreamingSpec extends GraftSuite {
     } finally membersCached.unpersist()
   }
 
-  test("streamingSemanticGateRouted: full sf0.01 replay matches batch, and " +
+  test("streamingSemanticGateStaged: full sf0.01 replay matches batch, and " +
     "every probe lands in its index-assigned routed cell") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val sf001 = "/root/testdata/sf0.01"
-    val (tabs, members) = graft.queries.SimilarityQueries
-      .semanticStreamIndexRouted(spark, sf001)
-    val membersCached = members.cache()
-    val query0 = {
-      val mem = MemoryStream[(Long, Seq[Float])]
-      (mem, StreamingOps.streamingSemanticGateRouted(
-          mem.toDS().toDF("vec_id", "embedding"), tabs, membersCached)
-        .writeStream.format("memory").queryName("semantic_gate_routed_out")
-        .outputMode("append").start())
-    }
-    val (mem, query) = query0
+    val dir = java.nio.file.Files.createTempDirectory("graft_staged_gate").toString
+    val (coarse, fine, members) = graft.queries.SimilarityQueries
+      .semanticStreamIndexStaged(spark, sf001)
+    graft.queries.SimilarityQueries.writeGateIndexStaged(spark, dir, coarse, fine, members)
+    val membersCached = spark.read.parquet(s"$dir/members.parquet").cache()
+    // REAL parquet round-trip: the head reads the layout the index
+    // writer produced, not an in-memory shortcut
+    val tabs = graft.queries.SimilarityQueries.stagedGateTablesAt(spark, dir)
+    val mem = MemoryStream[(Long, Seq[Float])]
+    val query = StreamingOps.streamingSemanticGateStaged(
+        mem.toDS().toDF("vec_id", "embedding"), tabs, membersCached)
+      .writeStream.format("memory").queryName("semantic_gate_staged_out")
+      .outputMode("append").start()
     try {
-      val batch = StreamingOps.streamingSemanticGateRouted(
-          Tables.embeddings(spark, sf001).select(col("vec_id"), col("embedding")),
-          tabs, membersCached)
-        .collect()
-        .map(r => r.getAs[Long]("vec_id") ->
+      def gateKey(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getAs[Long]("vec_id") ->
           ((r.getAs[Int]("cid"), r.getAs[Int]("n_cell_members"),
             r.getAs[Double]("best_cos"), r.getAs[Boolean]("semantic_near_dup"))))
-        .toMap
+          .toMap
+      val batch = gateKey(StreamingOps.streamingSemanticGateStaged(
+        Tables.embeddings(spark, sf001).select(col("vec_id"), col("embedding")),
+        tabs, membersCached))
       // routing determinism: a replayed corpus vector must land in the
-      // cell the index build assigned it (same kernel, same tables)
+      // cell the index build assigned it (same kernels, same tables)
       val indexCid = membersCached
         .select(col("cid"), explode(col("members")).as("m"))
         .select(col("m.vec_id"), col("cid")).collect()
@@ -480,99 +482,72 @@ class StreamingSpec extends GraftSuite {
       batch.foreach { case (k, b) =>
         assert(b._1 == indexCid(k), s"vec $k routed to ${b._1}, index has ${indexCid(k)}")
       }
+      // stream ≡ batch on a full replay (the head is a stream-static join
+      // — exercise it under the streaming engine, not just the planner)
       val all = Tables.embeddings(spark, sf001)
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getAs[Long]("vec_id"),
-          r.getAs[scala.collection.Seq[Float]]("embedding")))
+          r.getAs[scala.collection.Seq[Float]]("embedding").toSeq))
       all.grouped(120).foreach { chunk =>
-        mem.addData(chunk.map { case (id, e) => (id, e.toSeq) }.toIndexedSeq)
+        mem.addData(chunk.toIndexedSeq)
         query.processAllAvailable()
       }
-      val streamed = spark.table("semantic_gate_routed_out").collect()
-        .map(r => r.getAs[Long]("vec_id") ->
-          ((r.getAs[Int]("cid"), r.getAs[Int]("n_cell_members"),
-            r.getAs[Double]("best_cos"), r.getAs[Boolean]("semantic_near_dup"))))
-        .toMap
+      val streamed = gateKey(spark.table("semantic_gate_staged_out"))
       assert(streamed.keySet == batch.keySet,
         s"coverage differs: ${streamed.size} vs ${batch.size}")
       batch.foreach { case (k, b) =>
         assert(streamed(k) == b, s"vec $k: streamed=${streamed(k)} batch=$b")
       }
-    } finally { query.stop(); membersCached.unpersist() }
+    } finally {
+      query.stop()
+      tabs.cells.unpersist()
+      membersCached.unpersist()
+      queries.StagingRoots.deleteRecursively(java.nio.file.Paths.get(dir))
+    }
   }
 
-  test("streamingSemanticGateStaged: staged assignment == broadcast routed " +
-    "assignment row-for-row on the sf0.01 replay, through the written " +
-    "parquet layout, with O(√K) collected routing state") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
+  test("streamingSemanticGateStaged: assignment through the written parquet " +
+    "layout == plain-Scala routed argmin on the sf0.01 replay, with O(√K) " +
+    "collected routing state") {
     val sf001 = "/root/testdata/sf0.01"
-    val (tabs, members) = graft.queries.SimilarityQueries
-      .semanticStreamIndexRouted(spark, sf001)
-    val membersCached = members.cache()
-    val dir = java.nio.file.Files.createTempDirectory("graft_staged_gate").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_staged_assign").toString
     try {
-      // REAL parquet round-trip: the staged head must read the exact
-      // layout SemScale's gateindexr writer produces (shared frames
-      // helper), not an in-memory shortcut
-      val (coarseDf, fineDf) = graft.queries.SimilarityQueries
-        .routedTablesFrames(spark, tabs)
-      coarseDf.write.parquet(s"$dir/coarse.parquet")
-      fineDf.write.parquet(s"$dir/fine.parquet")
-      val staged = graft.queries.SimilarityQueries.stagedGateTables(
-        spark.read.parquet(s"$dir/coarse.parquet"),
-        spark.read.parquet(s"$dir/fine.parquet"))
-      // the staged head's collected routing state is the coarse table
-      // alone: O(√K) entries, strictly fewer than K fine centroids
-      val kFine = tabs.grouped.map(_.size).sum
-      assert(staged.coarse.length == tabs.nonEmpty.length &&
-        staged.coarse.length <= math.ceil(math.sqrt(kFine.toDouble)).toInt,
+      val (coarse0, fine0, members) = graft.queries.SimilarityQueries
+        .semanticStreamIndexStaged(spark, sf001)
+      val kFine = graft.queries.SimilarityQueries
+        .writeGateIndexStaged(spark, dir, coarse0, fine0, members)
+      val staged = graft.queries.SimilarityQueries.stagedGateTablesAt(spark, dir)
+      // the head's collected routing state is the coarse table alone:
+      // O(√K) entries, strictly fewer than K fine centroids
+      assert(staged.coarse.length <= math.ceil(math.sqrt(kFine.toDouble)).toInt,
         s"staged coarse table ${staged.coarse.length} rows vs K=$kFine")
+      // reference tables straight from the written parquet
+      val fineRows = spark.read.parquet(s"$dir/fine.parquet").collect()
+        .map(r => (r.getInt(1), (r.getInt(0), r.getSeq[Long](2).toSeq)))
+        .sortBy(_._1)
+      assert(fineRows.map(_._1).toSeq == (0 until kFine.toInt))
+      val coarseOf = spark.read.parquet(s"$dir/coarse.parquet").collect()
+        .map(r => r.getInt(0) -> r.getSeq[Long](1).toSeq).toMap
+      val coarseByCc = (0 to coarseOf.keys.max).map(coarseOf.getOrElse(_, Seq.empty[Long]))
+      val fine = fineRows.map(_._2._2).toSeq
+      val f2c = fineRows.map(_._2._1).toSeq
       val vecs = Tables.embeddings(spark, sf001)
         .select(col("vec_id"), col("embedding"))
-      def cidMap(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-        df.select(col("vec_id"), col("cid")).collect()
-          .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val stagedAssign = cidMap(StreamingOps.semanticGateAssignStaged(vecs, staged))
-      val routedAssign = cidMap(StreamingOps.semanticGateAssignRouted(vecs, tabs))
-      assert(stagedAssign.keySet == routedAssign.keySet,
-        s"coverage differs: ${stagedAssign.size} vs ${routedAssign.size}")
-      routedAssign.foreach { case (k, c) =>
-        assert(stagedAssign(k) == c, s"vec $k: staged=${stagedAssign(k)} routed=$c")
-      }
-      // full gate output parity (verify tail shared, so this pins the
-      // composed operator too)
-      def gateKey(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => r.getAs[Long]("vec_id") ->
-          ((r.getAs[Int]("cid"), r.getAs[Int]("n_cell_members"),
-            r.getAs[Double]("best_cos"), r.getAs[Boolean]("semantic_near_dup"))))
-          .toMap
-      val batchStaged = gateKey(StreamingOps.streamingSemanticGateStaged(
-        vecs, staged, membersCached))
-      val batchRouted = gateKey(StreamingOps.streamingSemanticGateRouted(
-        vecs, tabs, membersCached))
-      assert(batchStaged == batchRouted)
-      // stream ≡ batch on a full replay (the staged head is a stream-static
-      // shuffle join — exercise it under the streaming engine, not just
-      // the batch planner)
-      val mem = MemoryStream[(Long, Seq[Float])]
-      val query = StreamingOps.streamingSemanticGateStaged(
-          mem.toDS().toDF("vec_id", "embedding"), staged, membersCached)
-        .writeStream.format("memory").queryName("semantic_gate_staged_out")
-        .outputMode("append").start()
       try {
-        val all = vecs.collect().map(r => (r.getAs[Long]("vec_id"),
-          r.getAs[scala.collection.Seq[Float]]("embedding").toSeq))
-        all.grouped(200).foreach { chunk =>
-          mem.addData(chunk.toIndexedSeq)
-          query.processAllAvailable()
+        val got = StreamingOps.semanticGateAssignStaged(vecs, staged)
+          .select(col("vec_id"), col("cid")).collect()
+          .map(r => r.getLong(0) -> r.getInt(1)).toMap
+        // the engine's quantization, then the plain-Scala argmin
+        val mud = vecs.select(col("vec_id"),
+            transform(col("embedding"), x => round(x * lit(1e6)).cast("long")))
+          .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq)
+        assert(got.keySet == mud.map(_._1).toSet)
+        mud.foreach { case (id, v) =>
+          val want = SemDedupKernelFuzzSpec.routedArgmin(v, fine, coarseByCc, f2c)
+          assert(got(id) == want, s"vec $id: staged=${got(id)} brute=$want")
         }
-        val streamed = gateKey(spark.table("semantic_gate_staged_out"))
-        assert(streamed == batchStaged,
-          s"stream drifted from batch: ${streamed.size} vs ${batchStaged.size}")
-      } finally query.stop()
+      } finally staged.cells.unpersist()
     } finally {
-      membersCached.unpersist()
       queries.StagingRoots.deleteRecursively(java.nio.file.Paths.get(dir))
     }
   }
@@ -583,9 +558,9 @@ class StreamingSpec extends GraftSuite {
     val sf001 = "/root/testdata/sf0.01"
     def freshIdx(): String = {
       val dir = java.nio.file.Files.createTempDirectory("graft_admit").toString
-      val (tabs, members) = graft.queries.SimilarityQueries
-        .semanticStreamIndexRouted(spark, sf001)
-      graft.queries.SimilarityQueries.writeGateIndexRouted(spark, dir, tabs, members)
+      val (coarse, fine, members) = graft.queries.SimilarityQueries
+        .semanticStreamIndexStaged(spark, sf001)
+      graft.queries.SimilarityQueries.writeGateIndexStaged(spark, dir, coarse, fine, members)
       // start from an EMPTY membership under the frozen tables: the admit
       // loop itself populates the index
       members.limit(0).write.mode("overwrite").parquet(s"$dir/members.parquet")
@@ -674,9 +649,9 @@ class StreamingSpec extends GraftSuite {
     import spark.implicits._
     val sf001 = "/root/testdata/sf0.01"
     val dir = java.nio.file.Files.createTempDirectory("graft_admit_replay").toString
-    val (tabs0, members0) = graft.queries.SimilarityQueries
-      .semanticStreamIndexRouted(spark, sf001)
-    graft.queries.SimilarityQueries.writeGateIndexRouted(spark, dir, tabs0, members0)
+    val (coarse0, fine0, members0) = graft.queries.SimilarityQueries
+      .semanticStreamIndexStaged(spark, sf001)
+    graft.queries.SimilarityQueries.writeGateIndexStaged(spark, dir, coarse0, fine0, members0)
     members0.limit(0).write.mode("overwrite").parquet(s"$dir/members.parquet")
     val tabs = graft.queries.SimilarityQueries.stagedGateTables(
       spark.read.parquet(s"$dir/coarse.parquet"),
@@ -727,9 +702,9 @@ class StreamingSpec extends GraftSuite {
     val sf001 = "/root/testdata/sf0.01"
     def freshIdx(): String = {
       val dir = java.nio.file.Files.createTempDirectory("graft_admit_fb").toString
-      val (tabs, members) = graft.queries.SimilarityQueries
-        .semanticStreamIndexRouted(spark, sf001)
-      graft.queries.SimilarityQueries.writeGateIndexRouted(spark, dir, tabs, members)
+      val (coarse, fine, members) = graft.queries.SimilarityQueries
+        .semanticStreamIndexStaged(spark, sf001)
+      graft.queries.SimilarityQueries.writeGateIndexStaged(spark, dir, coarse, fine, members)
       members.limit(0).write.mode("overwrite").parquet(s"$dir/members.parquet")
       dir
     }
