@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR through a noop sink and emits ONE JSON line.
@@ -18,41 +17,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.cpus
     // dev-loop extra: optional comma-separated query filter (same contract
     // as Verify; the driver passes no args, so its runs are unaffected)
     val only: Option[Set[String]] = args.headOption.map(_.split(',').toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(s"[bench] unknown query names: ${unknown.mkString(",")}")
-        sys.exit(2)
-      }
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Shuffle partitions are sized from the INPUT BYTES, not the core
-      // count (guide §2; SparkEntry.scaledShufflePartitions has the full
-      // rationale + measurements). SPARK_GRAFT_SHUFFLE is the dev A/B
-      // override that found the win; SPARK_GRAFT_PARFIRST flips AQE's
-      // coalesce-vs-parallelism preference (measured: reduce-side-only
-      // coalescing recovers less than half of the sized-map-side win).
-      // The driver sets neither env, so its runs keep the derived default.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          SparkEntry.scaledShufflePartitions(sfDir, cpus.toInt).toString))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "true"))
-      // dev knob for A/B-ing AQE's stage-materialization latency on the
-      // bench surface (the driver sets neither env, so its runs keep the
-      // default); scale-dependent, so the DEFAULT stays AQE on
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", SparkEntry.codegenCacheEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.selectOrExit(only)
+    val spark = SparkEntry.session(sfDir, cpus)
     // untimed warmup: pay JVM/codegen/scheduler startup once, not inside
     // whichever query happens to run first
     spark.range(1L << 20).selectExpr("sum(id) AS s")
@@ -72,7 +42,7 @@ object Bench {
         // sharing one cluster would be sized to — instead of N chains each
         // assuming the whole machine (4 chains x 32-partition stages
         // quadruple scheduler pressure for frames this small).
-        val chainParts = math.max(2, cpus.toInt / stagingChains.size)
+        val chainParts = math.max(2, cpus / stagingChains.size)
         val w0 = System.nanoTime()
         val rows = graft.queries.StagingRoots.all(stagingChains.map { c => () =>
           // per-chain session clone: confs are session-local, so the
@@ -88,12 +58,7 @@ object Bench {
         rows :+ (("q_staging_wall", (System.nanoTime() - w0) / 1e9,
           None: Option[String]))
       }
-    def once(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Option[String]) = {
-      // §1.5: label every job with its query so the event log / UI can
-      // attribute stages (profiling only; no timing effect)
-      spark.sparkContext.setJobDescription(name)
+    def once(name: String, fn: SparkEntry.Query): (Double, Option[String]) = {
       // isolate queries: a predecessor's cached frames are not this query's
       // head start (CacheManager matches canonicalized plans ACROSS queries,
       // so two queries persisting the same bar frame would otherwise share
@@ -103,33 +68,26 @@ object Bench {
       System.gc()
       val t0 = System.nanoTime()
       // noop sink: forces full evaluation of every output column (a bare
-      // count() lets Catalyst prune projections and undercounts the work).
-      // NonFatal only: an OutOfMemoryError/LinkageError leaves the JVM in
-      // an undefined state — continuing would record garbage timings for
-      // every later query as if they were real (r13 review)
-      val err =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
-        catch { case scala.util.control.NonFatal(e) => Some(jsonEscape(e.toString)) }
-        finally spark.sparkContext.setJobDescription(null)
-      ((System.nanoTime() - t0) / 1e9, err)
+      // count() lets Catalyst prune projections and undercounts the work)
+      val err = SparkEntry.run(spark, name, fn, sfDir)(
+        _.write.format("noop").mode("overwrite").save())
+      ((System.nanoTime() - t0) / 1e9, err.map(e => jsonEscape(e.toString)))
     }
-    val results = allStaging ++ SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        val (t1, err1) = once(name, fn)
-        // best-of-2 for everything non-trivial: a long 115-query session
-        // accumulates GC/JIT crowding that read as phantom 1.5–2×
-        // regressions in r7 — a second isolated run separates a real plan
-        // regression from session noise (measured: the r7 common-set
-        // "1.17× regression" became 0.87× under best-of-2)
-        if (err1.isEmpty && t1 >= 1.0) {
-          val (t2, err2) = once(name, fn)
-          // a second-run failure COUNTS: dropping err2 reported a flaky
-          // query as a clean pass with t1 — "a bench that cannot fail is
-          // not a bench" applies to the rerun too (r13 review)
-          (name, if (err2.isEmpty) math.min(t1, t2) else t1, err2)
-        } else (name, t1, err1)
-      }
+    val results = allStaging ++ selected.map { case (name, fn) =>
+      val (t1, err1) = once(name, fn)
+      // best-of-2 for everything non-trivial: a long 115-query session
+      // accumulates GC/JIT crowding that read as phantom 1.5–2×
+      // regressions in r7 — a second isolated run separates a real plan
+      // regression from session noise (measured: the r7 common-set
+      // "1.17× regression" became 0.87× under best-of-2)
+      if (err1.isEmpty && t1 >= 1.0) {
+        val (t2, err2) = once(name, fn)
+        // a second-run failure COUNTS: dropping err2 reported a flaky
+        // query as a clean pass with t1 — "a bench that cannot fail is
+        // not a bench" applies to the rerun too
+        (name, if (err2.isEmpty) math.min(t1, t2) else t1, err2)
+      } else (name, t1, err1)
+    }
     // 3-decimal seconds: ms precision is all the comparison needs, and the
     // shorter line keeps the whole record inside the round driver's bounded
     // log-tail capture (r5/r6 both lost the line's head to truncation)

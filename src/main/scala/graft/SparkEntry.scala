@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -19,15 +20,6 @@ object SparkEntry {
   def ensureConfs(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // NOTE (r16): an AQE coalescing-floor experiment
-    // (minPartitionSize 1 MiB → 48 KiB, to keep CPU-dense sub-MiB
-    // shuffles parallel) was tried here and REVERTED: the apparent 4×
-    // win on single-task window stages did not survive quiet-machine
-    // reruns (it was measurement contamination from concurrent gate
-    // runs), and q71-class multi-join chains got slightly slower from
-    // the extra scheduled tasks. Order-dependent aggregates are rounded
-    // on the 1e-6 lattice, so the experiment was result-safe — it just
-    // wasn't a win.
     // the rolling-quantile planner strategy, so every engine path (driver
     // smoke, Verify, Bench, user sessions routed through the registry)
     // plans sliding exclusive-quantile windows incrementally
@@ -35,14 +27,75 @@ object SparkEntry {
     spark
   }
 
-  /** Size of Spark's compiled-codegen class cache for the sessions the
-    * program's mains build (Bench, Verify, Explain). Spark's default of
+  /** Size of Spark's compiled-codegen class cache for the session the
+    * program's mains build ([[session]]). Spark's default of
     * 100 is below one sweep's footprint (91–95 generated classes per
     * `Sweep.run`) and far below a query mix's (~216 for eight queries),
     * so at 100 every pass evicts and recompiles classes it just used.
     * A static conf — it must be set on the builder, before the session
     * exists; `ensureConfs` cannot set it. */
   val codegenCacheEntries: String = "2000"
+
+  /** Cores of the program mains' session: SPARK_GRAFT_CPUS, else the
+    * host's processor count. */
+  def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+
+  /** The one session Bench, Verify and Explain run in: `local[cpus]`,
+    * shuffle partitions sized from the input bytes, the codegen cache
+    * sized for a query mix, then [[ensureConfs]]. Every other conf keeps
+    * Spark's default; an A/B of one passes it as a system property
+    * (`-Dspark.sql.adaptive.enabled=false`), which the builder reads.
+    * SPARK_GRAFT_EVENTLOG=<dir> writes Spark's event log there for
+    * stage-level profiling (tools/profile_stages.sh). */
+  def session(sfDir: String, cpus: Int): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", scaledShufflePartitions(sfDir, cpus).toString)
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+    val spark = sys.env.get("SPARK_GRAFT_EVENTLOG").fold(builder) { dir =>
+      new java.io.File(dir).mkdirs()
+      builder.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", dir)
+    }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    ensureConfs(spark)
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The registered queries a run over `only` covers (None: all of them).
+    * An unknown name throws, naming it: a misspelled filter would
+    * otherwise run nothing and read as a clean run. */
+  def select(only: Option[Set[String]]): Seq[(String, Query)] = {
+    val unknown = only.fold(Set.empty[String])(_ -- queries.keySet)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(",")}")
+    queries.toSeq.filter { case (name, _) => only.forall(_.contains(name)) }
+  }
+
+  /** [[select]] for a program main: an unknown name exits 2. */
+  def selectOrExit(only: Option[Set[String]]): Seq[(String, Query)] =
+    try select(only) catch { case e: IllegalArgumentException =>
+      System.err.println(e.getMessage)
+      sys.exit(2)
+    }
+
+  /** One query end to end: builds `fn` over `sfDir` and consumes the frame
+    * with `sink`, under the job description `name` (the event log and UI
+    * attribute stages by it) and inside a [[graft.queries.StagingRoots
+    * .owningCaches]] scope, so every frame the query persisted is released
+    * when the run ends, whether it succeeded or not. Returns the failure.
+    * NonFatal only: an OutOfMemoryError or LinkageError leaves the JVM in
+    * an undefined state, and a session that went on would record garbage
+    * for every later query. */
+  def run(spark: SparkSession, name: String, fn: Query, sfDir: String)(
+      sink: DataFrame => Unit): Option[Throwable] = {
+    spark.sparkContext.setJobDescription(name)
+    try { graft.queries.StagingRoots.owningCaches(sink(fn(spark, sfDir))); None }
+    catch { case NonFatal(e) => Some(e) }
+    finally spark.sparkContext.setJobDescription(null)
+  }
 
   /** Input-size-derived default shuffle-partition count (guide §2:
     * "make partitioning scale-adaptive — derive from input size — rather
@@ -85,7 +138,7 @@ object SparkEntry {
     math.max(2L, math.min(byBytes, 4L * cores.toLong)).toInt
   }
 
-  private lazy val packs: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+  private lazy val packs: Seq[(Map[String, Query], Map[String, String])] =
     Seq(
       (graft.queries.CoreQueries.all, graft.queries.CoreQueries.oracles),
       (graft.queries.QuantQueries.all, graft.queries.QuantQueries.oracles),
@@ -113,7 +166,7 @@ object SparkEntry {
     queries("q40_champion")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
+  lazy val queries: Map[String, Query] = {
     // duplicate keys across packs would SILENTLY shadow an earlier
     // pack's query under ++ — and queries/oracleSql could even disagree
     // about which pack won, pairing query A with oracle B without any

@@ -647,7 +647,7 @@ object CoreQueries {
     val ev0 = Tables.events(spark, d)
     val ev = ev0.select(col("user_id"), Tables.tsUs(ev0).as("ts_us"),
       col("event_type"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val s1 = ev.groupBy(col("user_id"))
       .agg(min(when(col("event_type") === "view", col("ts_us"))).as("t_view"))
     val s2 = ev.join(s1, "user_id")

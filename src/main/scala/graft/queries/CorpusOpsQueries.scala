@@ -40,7 +40,7 @@ object CorpusOpsQueries {
       .select(col("doc_id"), col("lang"), col("is_bench"), col("gh"))
     val benchGrams = docs.filter(col("is_bench"))
       .select(explode(col("gh")).as("g")).distinct()
-      .persist()
+      .transform(StagingRoots.persist)
     // index build: one count + one aggregation over the (benchmark-sized,
     // corpus-independent) gram set — the driver holds only the sketch
     val nBench = benchGrams.count()
@@ -468,10 +468,8 @@ object CorpusOpsQueries {
         """transform(sequence(1, size(tok) - 1),
           |  i -> concat(element_at(tok, i), ' ', element_at(tok, i + 1)))"""
           .stripMargin)).as("term"))
-      // persists for the count + candidate + confirm passes; re-invocation
-      // re-persists the SAME canonical plan, which CacheManager dedupes
-      // (one resident copy per corpus, dropped by any clearCache)
-      .persist()
+      // persisted for the count + candidate + confirm passes
+      .transform(StagingRoots.persist)
     val nTotal = terms.count()
     val cap = MgCap
     val candidates = terms.select(col("term"))

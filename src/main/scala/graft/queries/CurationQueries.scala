@@ -415,7 +415,6 @@ object CurationQueries {
   private val LmPairBuckets = 4096
 
   def q77PerplexityFilter(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // persisted: the hashed-bigram projection feeds both the training
     // aggregation and the scoring pass — without it the corpus is
     // tokenized twice (measured 8.0 s → ~5 s at sf0.1)
@@ -438,7 +437,7 @@ object CurationQueries {
         (md5Int(col("pr.p")) % lit(LmCtxBuckets)).as("cb"),
         (md5Int(concat(col("pr.p"), lit(" "), col("pr.w")))
           % lit(LmPairBuckets)).as("pb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     // ONE corpus-side aggregation: context counts are the pair counts
     // summed over pb (every bigram contributes to exactly one pair key),
     // so the second stage runs on the bounded (cb, pb) table

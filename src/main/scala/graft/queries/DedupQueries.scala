@@ -444,7 +444,6 @@ object DedupQueries {
   // localCheckpoint() per round truncates lineage so the plan does not
   // grow with iterations (the classic iterative-DataFrame trap).
   def q61DupComponents(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val (scored, _) = Staging.scoredAndCounts(spark, d)
     // the union below references the edge list twice; both branches now
     // read the WRITTEN staging table (jac filter pushed into the parquet
@@ -453,7 +452,7 @@ object DedupQueries {
       .select(col("d1"), col("d2"))
     val adj = edges.union(edges.select(col("d2"), col("d1")))
       .toDF("node", "nbr")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     var labels = adj.select(col("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint()
@@ -587,12 +586,11 @@ object DedupQueries {
   }
 
   def q88IncrementalDedup(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val (exDigests, exBands, exSketches) = IncrementalIndex.of(spark, d)
     val docs = Tables.documents(spark, d)
     val inc = docs.filter(md5Int(col("doc_id").cast("string")) % 5 === 0)
       .withColumn("th", md5(col("text")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     // exact lane: index digest probe, then within-batch digest grouping
     val stayed = inc.join(exDigests, Seq("th"), "left_anti")
     val repsI = stayed.groupBy(col("th")).agg(min(col("doc_id")).as("doc_id"))
@@ -600,9 +598,9 @@ object DedupQueries {
     val skI = stayed.join(repsI, "doc_id")
       .select(col("doc_id"),
         graft.functions.GraftFunctions.hashedWordBigrams(col("text")).as("shset"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val bandsI = minhashBands(skI, nLanes = 16, perBand = 2)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     // near lane: batch bands probe the index bands (candidates vs
     // existing) and self-join (candidates within the batch)
     val candE = bandsI.select(col("band"), col("band_key"), col("doc_id").as("d1"))
@@ -610,14 +608,14 @@ object DedupQueries {
         col("doc_id").as("d2")),
         col("band") === col("band_r") && col("band_key") === col("band_key_r"))
       .select(col("d1"), col("d2")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val candI = bandsI.select(col("band"), col("band_key"), col("doc_id").as("d1"))
       .join(bandsI.select(col("band").as("band_r"), col("band_key").as("band_key_r"),
         col("doc_id").as("d2")),
         col("band") === col("band_r") && col("band_key") === col("band_key_r") &&
           col("d1") < col("d2"))
       .select(col("d1"), col("d2")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     // verify: batch sketches on d1; (index ∪ batch) sketches on d2 —
     // existing text is NOT read, its sketches come from the written index
     val sk2 = exSketches.union(skI)
@@ -642,8 +640,8 @@ object DedupQueries {
         .select(col("d1"), col("d2"), col("jac"))
         .filter(col("jac") >= JaccardThreshold)
     }
-    val verE = score(candE).persist(StorageLevel.MEMORY_AND_DISK)
-    val verI = score(candI).persist(StorageLevel.MEMORY_AND_DISK)
+    val verE = StagingRoots.persist(score(candE))
+    val verI = StagingRoots.persist(score(candI))
     val removed = verE.select(col("d1")).union(verI.select(col("d2"))).distinct()
     val census = inc.agg(count(lit(1)).as("n_incoming"))
       .crossJoin(exDigests.agg(count(lit(1)).as("n_existing_reps")))
@@ -871,7 +869,6 @@ object DedupQueries {
     * (reps, shingled, bands, occ). */
   private def scaledLshFrames(spark: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val docs = Tables.documents(spark, d)
     val reps = docs.withColumn("th", md5(col("text")))
       .groupBy(col("th")).agg(min(col("doc_id")).as("doc_id"))
@@ -879,12 +876,12 @@ object DedupQueries {
     val shingled = docs.join(reps, "doc_id")
       .select(col("doc_id"),
         graft.functions.GraftFunctions.hashedWordBigrams(col("text")).as("shset"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val bands = minhashBands(shingled, nLanes = 48, perBand = 3)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val occ = bands.groupBy(col("band"), col("band_key"))
       .agg(count(lit(1)).as("cnt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     (reps, shingled, bands, occ)
   }
 

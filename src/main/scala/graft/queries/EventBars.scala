@@ -106,14 +106,12 @@ object EventBars {
     // and sweep stages; MEMORY_AND_DISK spills instead of recomputing when
     // the bar frame outgrows executor storage.
     //
-    // Cache lifetime: no unpersist handle BY DESIGN — this is the S8
-    // shared-frame fast path every barrier/sweep query of a session
-    // reuses. CacheManager dedupes persists of the same canonical plan
-    // (re-invocations attach to the ONE resident copy per corpus dir,
-    // they do not stack), so residency is bounded by the number of
-    // distinct corpora a session touches; clearCache() releases them
-    // (r13 review).
-    val shared = bars.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Cache lifetime: the frame lives for one run. Inside
+    // SparkEntry.run (or a staging build) the owning scope releases it
+    // when the run ends; outside every scope it is a plain persist, which
+    // CacheManager dedupes per canonical plan, so repeated calls on one
+    // corpus attach to one resident copy.
+    val shared = StagingRoots.persist(bars)
     forwardArraysFor(shared.filter(isSignal), shared, k)
   }
 

@@ -49,9 +49,9 @@ private[graft] object GateStaging {
   // StreamingOps.scala "frozen routing tables" contract); re-collecting
   // per constructed batch query was startup accounting, not gate cost.
   // Memoized per (JVM, corpus) — pure immutable driver objects (no
-  // DataFrame, so Bench's per-rep clearCache() cannot invalidate anything
-  // and no cached frame outlives the query that built it), keyed next to
-  // the staged dirs they were read from. The QUERY still computes its
+  // DataFrame, so no cache release can invalidate them and no cached frame
+  // outlives the run that built it), keyed next to the staged dirs they
+  // were read from. The QUERY still computes its
   // result from the parquet corpus every run; only the index-table load
   // is amortized, the same line the r13 staging split drew for the index
   // BUILD.

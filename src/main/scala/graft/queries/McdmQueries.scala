@@ -134,8 +134,8 @@ object McdmQueries {
       // materializes its subtree independently — uncached, the events
       // window pass re-ran per broadcast (measured: q135 16.8 s → the
       // fact scan ~10× over). The frame is O(barriers × fold cells)
-      // (1,920 rows), so the cache is trivial; Bench clears caches
-      // between queries.
+      // (1,920 rows), so the cache is trivial; its owner (the staging
+      // build or the query run) releases it.
       .transform(StagingRoots.persist)
   }
 
@@ -207,7 +207,7 @@ object McdmQueries {
       .filter(MetricNames.map(m => col(s"med_$m").isNotNull).reduce(_ && _))
       .withColumn("rep", lit(0L))
       // O(barriers) rows, read by every broadcast subtree downstream
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
   }
 
   private val duckMedCte: String = {

@@ -88,7 +88,7 @@ object ReconstructQueries {
       // read by the stats aggregation, the champion pick and the final
       // trade-log join — one materialization (trivially bounded:
       // |signals| x 4 configs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val maxRun = trades.filter(col("uw") === 1)
       .withColumn("grp", col("trade_n") - row_number().over(
         Window.partitionBy(col("cfg_id")).orderBy(col("trade_n"))))

@@ -342,11 +342,10 @@ object SimilarityQueries {
     * frame (vec_id, e, nrm, mud, c1, cid). Shared by q63 (within-cluster
     * near-dup census) and q90 (cluster-balanced diversity sampling). */
   private def kmeansAssignment(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val v = withNorm(spark, d)
       .withColumn("mud",
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     // deterministic "random" seeds: the K smallest (md5(vec_id), vec_id)
     val seeds: Array[Array[Double]] = v
       .select(col("vec_id"), col("mud"))
@@ -388,7 +387,7 @@ object SimilarityQueries {
     // a cluster whose seed lost an argmin tie can be empty: keep its seed
     val cents2 = (0 until KClusters).map(c => sums.getOrElse(c, seeds(c))).toArray
     assign(cents2, "cid")(a1)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
   }
 
   def q63SemanticDedup(spark: SparkSession, d: String): DataFrame =
@@ -749,7 +748,6 @@ object SimilarityQueries {
     math.max(1, math.ceil(n / TargetCell.toDouble).toInt)
 
   private def kmeansAssignmentScaled(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // repartition BEFORE persist: the dominant stage is the ×K candidate
     // explosion on the crossJoin's STREAM side, which otherwise inherits
     // the corpus parquet's split count (2 at the 10× fixture — 30 of 32
@@ -759,7 +757,7 @@ object SimilarityQueries {
       .withColumn("mud",
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
       .repartition(col("vec_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     scaledAssignFrom(v)
   }
 
@@ -1094,12 +1092,11 @@ object SimilarityQueries {
   // orphan a coarse cell (its fine twin routes to the smaller ccid on the
   // 0-0 tie); vectors route only among cells that HAVE fine centroids.
   private def kmeansAssignmentRouted(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val v = withNorm(spark, d)
       .withColumn("mud",
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
       .repartition(col("vec_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     routedAssignStagedFrom(v)
   }
 
@@ -1153,12 +1150,13 @@ object SimilarityQueries {
         expr("transform(cs, x -> x.cid)").as("ids"))
 
   /** [[StagedGateTables]] from the written coarse/fine parquet frames,
-    * with `cells` persisted: the caller owns it and unpersists it. */
+    * with `cells` persisted through [[StagingRoots.persist]]: the open
+    * owning scope releases it, and outside every scope the caller
+    * unpersists it. */
   private[graft] def stagedGateTables(coarseDf: DataFrame,
       fineDf: DataFrame): StagedGateTables = {
     val (nonEmpty, coarse) = readCoarse(coarseDf)
-    StagedGateTables(nonEmpty, coarse,
-      stagedCells(fineDf).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    StagedGateTables(nonEmpty, coarse, StagingRoots.persist(stagedCells(fineDf)))
   }
 
   /** [[stagedGateTables]] bound to a WRITTEN index dir: reads the
@@ -1372,25 +1370,24 @@ object SimilarityQueries {
     * from [[semanticStreamIndexStagedFrom]]'s frames, collecting only the
     * O(√K) non-empty coarse ids. Returns K (the fine-cell count). The one
     * routed-index writer: SemScale `gateindexrs`, [[GateStaging]]'s routed
-    * and q130 base indexes, and the rebuild. */
+    * and q130 base indexes, and the rebuild. The fine table is persisted
+    * for its three reads and released when the writer returns or throws. */
   private[graft] def writeGateIndexStaged(spark: SparkSession, dst: String,
-      coarse: Seq[Seq[Long]], fineRouted: DataFrame, members: DataFrame): Long = {
-    import org.apache.spark.storage.StorageLevel
-    members.repartitionByRange(32, col("cid")).sortWithinPartitions("cid")
-      .write.mode("overwrite").parquet(s"$dst/members.parquet")
-    val fineOut = fineRouted.persist(StorageLevel.MEMORY_AND_DISK)
-    fineOut.repartition(1).write.mode("overwrite").parquet(s"$dst/fine.parquet")
-    // O(√K): the non-empty coarse ids — the only collected state
-    val nonEmpty = fineOut.select(col("ccid")).distinct().collect()
-      .map(_.getInt(0)).sorted.toSeq
-    import spark.implicits._
-    nonEmpty.map(cc => (cc, coarse(cc)))
-      .toDF("ccid", "cmud")
-      .repartition(1).write.mode("overwrite").parquet(s"$dst/coarse.parquet")
-    val k = fineOut.count()
-    fineOut.unpersist()
-    k
-  }
+      coarse: Seq[Seq[Long]], fineRouted: DataFrame, members: DataFrame): Long =
+    StagingRoots.owningCaches {
+      members.repartitionByRange(32, col("cid")).sortWithinPartitions("cid")
+        .write.mode("overwrite").parquet(s"$dst/members.parquet")
+      val fineOut = StagingRoots.persist(fineRouted)
+      fineOut.repartition(1).write.mode("overwrite").parquet(s"$dst/fine.parquet")
+      // O(√K): the non-empty coarse ids — the only collected state
+      val nonEmpty = fineOut.select(col("ccid")).distinct().collect()
+        .map(_.getInt(0)).sorted.toSeq
+      import spark.implicits._
+      nonEmpty.map(cc => (cc, coarse(cc)))
+        .toDF("ccid", "cmud")
+        .repartition(1).write.mode("overwrite").parquet(s"$dst/coarse.parquet")
+      fineOut.count()
+    }
 
   /** INCREMENTAL gate-index maintenance — the q88 snapshot-dedup
     * discipline applied to the semantic index: admit a batch of NEW
@@ -1407,28 +1404,27 @@ object SimilarityQueries {
     * per cid (one per append generation), so it must be read through
     * [[readCellMembersMerged]]; the pristine-build readers stay scan-only. */
   private[graft] def semanticIndexAppend(spark: SparkSession, idx: String,
-      vecs: DataFrame): Long = {
-    import org.apache.spark.storage.StorageLevel
+      vecs: DataFrame): Long = StagingRoots.owningCaches {
     // heal FIRST: after a compact crashed between its two renames the
     // live members dir is missing (held in members.precompact.parquet),
     // and SaveMode.Append would CREATE a fresh members.parquet holding
     // only this delta — a later heal would then see live+pre and delete
     // the pre dir carrying the entire base index (r13 review)
     withIndexLock(idx)(healInterruptedCompact(idx))
+    // the staged cells and the assignment are released when the append
+    // returns or throws (the owning scope)
     val staged = stagedGateTables(
       spark.read.parquet(s"$idx/coarse.parquet"),
       spark.read.parquet(s"$idx/fine.parquet"))
     val assigned = graft.streaming.StreamingOps
       .semanticGateAssignStaged(vecs, staged)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val n = assigned.count()
     // an empty batch must not mark the index as appended (r13 review)
     if (n > 0)
       writeMemberDelta(assigned.groupBy(col("cid"))
         .agg(collect_list(struct(col("vec_id"), col("e"), col("nrm"))).as("members")),
         idx)
-    assigned.unpersist()
-    staged.cells.unpersist()
     n
   }
 
@@ -1946,7 +1942,6 @@ object SimilarityQueries {
     * bnlj ≤ 1 rule). Values are unchanged: Σ of exact group sizes IS the
     * corpus row count. */
   private def exactFirstReps(spark: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val all = withNorm(spark, d)
       .withColumn("mud",
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
@@ -1965,7 +1960,7 @@ object SimilarityQueries {
     val vc = all.join(repIds, "vec_id")
       .select(col("vec_id"), col("e"), col("nrm"), col("mud"), col("dup_cnt"))
       .repartition(col("vec_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     val totals = vc.agg(
       coalesce(sum(col("dup_cnt")), lit(0L)).as("n_total"),
       count(lit(1)).as("n_reps"))
@@ -2445,12 +2440,7 @@ object SimilarityQueries {
     cbs.flatten.map(_.toSeq).toSeq
 
   // training is deterministic per corpus dir, so q103 and q106 SHARE one
-  // trained codebook and one persisted micro-unit frame per (session, dir)
-  // instead of re-running the seed/Lloyd jobs and stacking caches (the
-  // IncrementalIndex computeIfAbsent pattern; the frame cache is
-  // session-keyed because a DataFrame is bound to the session that built it)
-  private val pqMuCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
+  // trained codebook per dir instead of re-running the seed/Lloyd jobs
   private val pqCbCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Long]]]]()
 
@@ -2460,12 +2450,11 @@ object SimilarityQueries {
     * division is one IEEE op per element, and micro-unit rounding
     * re-enters exact integer arithmetic for everything downstream. */
   private def pqMicroUnits(spark: SparkSession, d: String): DataFrame =
-    pqMuCache.computeIfAbsent((System.identityHashCode(spark), d), _ =>
-      withNorm(spark, d)
-        .select(col("vec_id"), expr(
-          """transform(e, x -> CAST(round(CAST(x AS DOUBLE) / nrm * 1000000.0)
-            |  AS BIGINT))""".stripMargin).as("mud"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    withNorm(spark, d)
+      .select(col("vec_id"), expr(
+        """transform(e, x -> CAST(round(CAST(x AS DOUBLE) / nrm * 1000000.0)
+          |  AS BIGINT))""".stripMargin).as("mud"))
+      .transform(StagingRoots.persist)
 
   private def pqCodebook(mu: DataFrame, d: String): Array[Array[Array[Long]]] =
     pqCbCache.computeIfAbsent(d, _ => pqTrain(mu))

@@ -11,12 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * line. [[chains]] declares which queries read which chain; Bench derives
   * its `q_staging_*` rows from it.
   *
-  * Cache ownership: a build persists corpus-sized frames for its
-  * multi-pass plans, and nothing reads them once the staged parquet is
-  * written. Builds persist through [[persist]], which records the frame in
-  * the calling thread's innermost [[owningCaches]] scope; the scope
-  * unpersists exactly those frames when it closes. A persist made on any
-  * other thread, or outside every scope, is never touched. */
+  * Cache ownership: every frame the program persists for a multi-pass
+  * plan goes through [[persist]], which records it in the calling
+  * thread's innermost [[owningCaches]] scope; the scope unpersists exactly
+  * those frames when it closes, on success or failure. Each query run
+  * (`SparkEntry.run`) is one scope and each staged build another, so a
+  * query's frames live for that run and a build's until its parquet is
+  * written. A persist made on any other thread, or outside every scope,
+  * is a plain persist and is never touched. */
 private[graft] object StagingRoots {
   import java.nio.file.{Files, Path}
 
@@ -135,14 +137,16 @@ private[graft] object StagingRoots {
   }
 
   /** Runs `body`, then unpersists exactly the frames it [[persist]]ed on
-    * this thread (nested scopes release their own frames). */
+    * this thread (nested scopes release their own frames). Newest first:
+    * a frame cached on top of an older one goes before it, so no release
+    * re-plans a frame that is about to go too. */
   def owningCaches[A](body: => A): A = {
     val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     scopes.set(mine :: scopes.get)
     try body
     finally {
       scopes.set(scopes.get.tail)
-      mine.foreach(_.unpersist(blocking = false))
+      mine.reverseIterator.foreach(_.unpersist(blocking = false))
     }
   }
 

@@ -759,13 +759,12 @@ object TextQueries {
     * production tokenizer train step. */
   private[graft] def bpeSegmentation(spark: SparkSession, d: String)
       : (DataFrame, Seq[(Int, String, Long, Long)]) = {
-    import org.apache.spark.storage.StorageLevel
     val words = Tables.documents(spark, d)
       .select(explode(toks(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .withColumn("seg",
         concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(StagingRoots.persist)
     var seg = words
     val out = Seq.newBuilder[(Int, String, Long, Long)]
     // U+0001 as the internal pair delimiter, NOT '+': symbols come from

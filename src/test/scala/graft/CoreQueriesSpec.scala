@@ -4,22 +4,57 @@ import org.apache.spark.sql.functions._
 
 class CoreQueriesSpec extends GraftSuite {
 
+  private def cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    .sharedState.cacheManager
+
   test("every registered query has rows at sf0.001 and a matching oracle key") {
     val qs = SparkEntry.queries
     assert(qs.nonEmpty)
+    // the runner's cache contract: a run releases every frame its query
+    // persisted, also on a rerun with the staging memo warm. Counted on
+    // the CacheManager, not getPersistentRDDs: the localCheckpoint RDDs of
+    // q61, q87 and StarComponents belong to Spark's ContextCleaner.
+    spark.catalog.clearCache()
+    def rows(name: String): Long = {
+      var n = -1L
+      SparkEntry.run(spark, name, qs(name), sf)(df => n = df.count()).foreach(e => throw e)
+      assert(cacheManager.isEmpty, s"$name left cached frames")
+      n
+    }
     // q56's WFO folds are legitimately empty on sf0.001's short series
     // (n < purge + 2·testSize, the reference's own early-return) — its
     // rows>0 smoke runs at sf0.01 below, where folds exist.
-    qs.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      if (name != "q56_wfo_fold_metrics")
-        assert(df.count() > 0, s"$name returned 0 rows")
+    qs.keys.foreach { name =>
+      val n = rows(name)
+      if (name != "q56_wfo_fold_metrics") assert(n > 0, s"$name returned 0 rows")
     }
+    Seq("q116_semantic_dedup_routed", "q118_semantic_dedup_stack",
+      "q119_semantic_dedup_capped").foreach(rows)
     assert(qs("q56_wfo_fold_metrics")(spark, "/root/testdata/sf0.01").count() > 0)
     // Every oracle key must point at an existing query.
     SparkEntry.oracleSql.keys.foreach { k =>
       assert(qs.contains(k), s"oracle $k has no query")
     }
+  }
+
+  test("run returns a failing query's error and releases only its frames; " +
+    "select names an unknown query") {
+    spark.catalog.clearCache()
+    val outsider = spark.range(7).toDF("x").persist()
+    var mine: org.apache.spark.sql.DataFrame = null
+    val boom = new IllegalStateException("boom")
+    val err = SparkEntry.run(spark, "boom", (s, _) => {
+      mine = queries.StagingRoots.persist(s.range(100).toDF("id"))
+      assert(mine.count() == 100)
+      throw boom
+    }, sf)(_ => fail("the sink ran after the query threw"))
+    assert(err.contains(boom))
+    assert(mine.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(outsider.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    outsider.unpersist()
+    assert(cacheManager.isEmpty)
+    val e = intercept[IllegalArgumentException](SparkEntry.select(Some(Set("nope"))))
+    assert(e.getMessage.contains("nope"))
   }
 
   test("entry() smoke") {

@@ -838,4 +838,37 @@ class SemDedupStagedSpec extends GraftSuite {
     staged0.cells.unpersist()
     staged1.cells.unpersist()
   }
+
+  test("a failed index write or append throws and leaves no cached plan") {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val good = java.nio.file.Files.createTempDirectory("graft_idx_fail").toString
+    val other = java.nio.file.Files.createTempDirectory("graft_idx_fail2").toString
+    val file = java.nio.file.Files.createTempFile("graft_idx", ".file")
+    try {
+      val (coarse, fine, members) = SimilarityQueries.semanticStreamIndexStaged(spark, sf)
+      SimilarityQueries.writeGateIndexStaged(spark, good, coarse, fine, members)
+      // the build's own frames were persisted outside any scope
+      spark.catalog.clearCache()
+      intercept[Exception] {
+        SimilarityQueries.writeGateIndexStaged(spark, s"$file/idx", coarse, fine, members)
+      }
+      assert(cm.isEmpty, "a write under a regular file left a cached plan")
+      // the fine table fails on its first read, after the writer persisted it
+      val badFine = fine.withColumn("ccid",
+        expr("if(ccid >= 0, raise_error('bad fine table'), ccid)"))
+      intercept[Exception] {
+        SimilarityQueries.writeGateIndexStaged(spark, other, coarse, badFine, members)
+      }
+      assert(cm.isEmpty, "a failed fine-table write left a cached plan")
+      val badVecs = Tables.embeddings(spark, sf).select(col("vec_id"),
+        expr("if(vec_id >= 0, raise_error('bad arrival'), embedding)").as("embedding"))
+      intercept[Exception](SimilarityQueries.semanticIndexAppend(spark, good, badVecs))
+      assert(cm.isEmpty, "a failed append left a cached plan")
+    } finally {
+      Seq(good, other).foreach(d =>
+        queries.StagingRoots.deleteRecursively(java.nio.file.Paths.get(d)))
+      java.nio.file.Files.deleteIfExists(file)
+    }
+  }
 }

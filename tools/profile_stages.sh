@@ -2,11 +2,14 @@
 # Profile one query's stage timeline: runs graft.Explain <q> <sf> run2 with
 # the event log on, then prints stages >0.2s with task counts — the fast way
 # to spot single-task straggler stages (AQE over-coalescing before a fan-out).
-# Usage: tools/profile_stages.sh <query> [sfDir] [cpus]
+# Usage: tools/profile_stages.sh <query> <sfDir> [cpus]
+# Without a cpus argument the session's own default applies
+# (SPARK_GRAFT_CPUS, else the host's processor count).
 set -euo pipefail
-Q="$1"; SF="${2:-/root/testdata/sf0.1}"; CPUS="${3:-32}"
+Q="$1"; SF="${2:?usage: tools/profile_stages.sh <query> <sfDir> [cpus]}"
+if [ $# -ge 3 ]; then export SPARK_GRAFT_CPUS="$3"; fi
 EV=$(mktemp -d /tmp/evprof_XXXX)
-SPARK_GRAFT_EVENTLOG="$EV" SPARK_GRAFT_CPUS="$CPUS" \
+SPARK_GRAFT_EVENTLOG="$EV" \
   "$(dirname "$0")/runjvm.sh" graft.Explain "$Q" "$SF" run2 2>/dev/null | grep '\[explain\]' || true
 for z in "$EV"/eventlog_v2_local-*/events_1_local-*.zstd; do
   zstd -d -c "$z" 2>/dev/null
