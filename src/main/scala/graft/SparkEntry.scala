@@ -45,20 +45,18 @@ object SparkEntry {
     * shuffle partitions sized from the input bytes, the codegen cache
     * sized for a query mix, then [[ensureConfs]]. Every other conf keeps
     * Spark's default; an A/B of one passes it as a system property
-    * (`-Dspark.sql.adaptive.enabled=false`), which the builder reads.
-    * SPARK_GRAFT_EVENTLOG=<dir> writes Spark's event log there for
-    * stage-level profiling (tools/profile_stages.sh). */
+    * (`-Dspark.sql.adaptive.enabled=false`), which the builder reads;
+    * the event log is switched on the same way
+    * (`-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=file:///...`,
+    * see tools/profile_stages.sh). */
   def session(sfDir: String, cpus: Int): SparkSession = {
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", scaledShufflePartitions(sfDir, cpus).toString)
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_EVENTLOG").fold(builder) { dir =>
-      new java.io.File(dir).mkdirs()
-      builder.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", dir)
-    }.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ensureConfs(spark)
   }

@@ -9,10 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet file locally, a partitioned Delta/parquet lake in production)
   * is swappable in one place. Filters and projections applied by callers
   * push down to the parquet scan via Catalyst.
+  *
+  * Every read goes through [[graft.sources.ResultSink.read]], which infers
+  * each table's schema once per JVM and passes it to later reads, so only
+  * the first read of a table launches Spark's footer-reading job. That
+  * memo is invalidated by a change in any data file's name, length or
+  * mtime; an in-place rewrite that keeps all three is not seen.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.sources.ResultSink.read(spark, s"$sfDir/$name.parquet")
 
   /** Microseconds-since-epoch for the events `ts` column, robust to the
     * physical type the fixture was written with: TIMESTAMP(NANOS) read as

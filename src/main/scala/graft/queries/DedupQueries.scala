@@ -668,7 +668,7 @@ object DedupQueries {
     // (r13 review; the IncrementalIndex cache correctly persists across
     // batches — that is the INDEX, not batch scratch)
     val row = census.collect()
-    Seq(skI, bandsI, candE, candI, verE, verI).foreach(_.unpersist(false))
+    Seq(inc, skI, bandsI, candE, candI, verE, verI).foreach(_.unpersist(false))
     spark.createDataFrame(
       spark.sparkContext.parallelize(row.toSeq), census.schema)
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.ResultSink
 
 /** Staged gate indexes (the EvalStaging discipline on the gate axis): the
   * semantic-gate batch twins consume a WRITTEN index — the production
@@ -71,10 +72,10 @@ private[graft] object GateStaging {
     val idx = routedDir(spark, d)
     val (nonEmpty, coarse) =
       StagingRoots.memoized(s"gate_routedcoarse_${StagingRoots.pathKey(d)}") {
-        SimilarityQueries.readCoarse(spark.read.parquet(s"$idx/coarse.parquet"))
+        SimilarityQueries.readCoarse(ResultSink.read(spark, s"$idx/coarse.parquet"))
       }
     SimilarityQueries.StagedGateTables(nonEmpty, coarse,
-      SimilarityQueries.stagedCells(spark.read.parquet(s"$idx/fine.parquet")))
+      SimilarityQueries.stagedCells(ResultSink.read(spark, s"$idx/fine.parquet")))
   }
 
   /** PRISTINE staged index over the q130 BASE slice (vec_id % 4 != 0 of

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.sources.ResultSink
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   * cosine near-duplicate census, brute-force cosine top-k (the exact
@@ -858,7 +859,7 @@ object SimilarityQueries {
     // twice — the final orderBy's range sampler re-evaluates its child).
     val idx = GateStaging.flatDir(spark, d)
     val cents = GateStaging.flatCents(spark, d)
-    val members = spark.read.parquet(s"$idx/members.parquet")
+    val members = ResultSink.read(spark, s"$idx/members.parquet")
     // + 0.0 in the shared projection normalizes a rounded -0.0 (the
     // compare.py discipline)
     gateCensusProjection(graft.streaming.StreamingOps.streamingSemanticGateSharded(
@@ -921,7 +922,7 @@ object SimilarityQueries {
     // table is its memoized read, and the probe side is spread before the
     // per-row verify fold (see q126)
     val idx = GateStaging.routedDir(spark, d)
-    val members = spark.read.parquet(s"$idx/members.parquet")
+    val members = ResultSink.read(spark, s"$idx/members.parquet")
     gateCensusProjection(graft.streaming.StreamingOps.streamingSemanticGateStaged(
       spreadIfNarrow(
         Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))),
@@ -962,8 +963,8 @@ object SimilarityQueries {
     // compact mutate the dir in place, and a re-run must start pristine
     val idx = GateStaging.appendWorkdir(spark, d)
     val staged = stagedGateTables(
-      spark.read.parquet(s"$idx/coarse.parquet"),
-      spark.read.parquet(s"$idx/fine.parquet"))
+      ResultSink.read(spark, s"$idx/coarse.parquet"),
+      ResultSink.read(spark, s"$idx/fine.parquet"))
     val arrivals = Tables.embeddings(spark, d)
       .filter(col("vec_id") % 4 === 0)
       .select(col("vec_id"), col("embedding"))
@@ -974,7 +975,7 @@ object SimilarityQueries {
     // pristine layout BEFORE the census read — the census then checks
     // compaction's rewrite, not just the merged-read view
     semanticIndexCompact(spark, idx)
-    val admitted = spark.read.parquet(s"$idx/members.parquet")
+    val admitted = ResultSink.read(spark, s"$idx/members.parquet")
       .select(col("cid"), explode(col("members")).as("m"))
       .select(col("m.vec_id").as("vec_id"), col("cid"))
     val cellSz = admitted.groupBy(col("cid"))
@@ -1117,7 +1118,7 @@ object SimilarityQueries {
 
   /** Read the flat layout's centroid table back (cid-ordered). */
   private[graft] def readFlatCents(spark: SparkSession, idx: String): Seq[Seq[Long]] =
-    spark.read.parquet(s"$idx/cents.parquet")
+    ResultSink.read(spark, s"$idx/cents.parquet")
       .orderBy(col("cid")).collect().map(_.getSeq[Long](1)).toSeq
 
   /** The routing tables of the ONE routed-assignment head, staged: only
@@ -1170,8 +1171,8 @@ object SimilarityQueries {
       : StagedGateTables = {
     val geom = indexGeometryVersion(idx)
     stagedGateTables(
-      spark.read.parquet(s"$idx/coarse.parquet"),
-      spark.read.parquet(s"$idx/fine.parquet")).copy(geom = geom)
+      ResultSink.read(spark, s"$idx/coarse.parquet"),
+      ResultSink.read(spark, s"$idx/fine.parquet")).copy(geom = geom)
   }
 
   /** One routed-assignment projection over a prepared (…, mud) frame:
@@ -1414,8 +1415,8 @@ object SimilarityQueries {
     // the staged cells and the assignment are released when the append
     // returns or throws (the owning scope)
     val staged = stagedGateTables(
-      spark.read.parquet(s"$idx/coarse.parquet"),
-      spark.read.parquet(s"$idx/fine.parquet"))
+      ResultSink.read(spark, s"$idx/coarse.parquet"),
+      ResultSink.read(spark, s"$idx/fine.parquet"))
     val assigned = graft.streaming.StreamingOps
       .semanticGateAssignStaged(vecs, staged)
       .transform(StagingRoots.persist)
@@ -1897,7 +1898,7 @@ object SimilarityQueries {
     * join would filter only after a full O(index) scan (r13 review). */
   private[graft] def readCellMembersMerged(spark: SparkSession,
       idx: String, onlyCids: Option[Seq[Int]] = None): DataFrame = {
-    val base = spark.read.parquet(s"$idx/members.parquet")
+    val base = ResultSink.read(spark, s"$idx/members.parquet")
     val pruned = onlyCids.fold(base)(cs => base.filter(col("cid").isin(cs: _*)))
     pruned
       .groupBy(col("cid"))

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Result-table sinks (SURVEY.md §2.1 S2–S6/S9): the reference's MergeTree
   * result tables + NDJSON/TSV artifact files restated as partitioned
@@ -36,7 +38,59 @@ object ResultSink {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  /** The one parquet reader of every lake, staged, index and result
+    * table. Spark infers a parquet schema with a one-task job that reads
+    * a footer, and it does so on every `spark.read.parquet`; this reader
+    * lets Spark infer it once per JVM and passes the result as the read
+    * schema afterwards, so later reads launch no job. Only the
+    * `StructType` is kept, never a DataFrame: every read still builds a
+    * fresh relation with fresh attribute ids, so a self-join of two reads
+    * resolves as before.
+    *
+    * The memo is keyed by the qualified path and the session's
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs (e.g.
+    * nanosAsLong changes the inferred `ts` type). Each entry carries a
+    * stamp, the (name, length, modification time) of every leaf data file
+    * under the path, taken before inference; a read whose stamp differs
+    * re-infers and replaces the entry, so there is one entry per distinct
+    * (path, confs). Limit: a rewrite that keeps every file's name, length
+    * and millisecond mtime is not detected. Spark's writers name part
+    * files with a fresh UUID per write, and the fixture tools write to new
+    * directories, so no writer in this program does that. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qp = fs.makeQualified(p)
+    val st = try Some(stamp(fs, fs.getFileStatus(qp)))
+      catch { case _: java.io.FileNotFoundException => None }
+    val key = (qp.toString, spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.toSeq.sorted)
+    Option(schemas.get(key)) match {
+      case Some((s, schema)) if st.contains(s) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        // a missing path falls through to Spark, which names it
+        val df = spark.read.parquet(path)
+        st.foreach(s => schemas.put(key, (s, df.schema)))
+        df
+    }
+  }
+
+  private type Stamp = Seq[(String, Long, Long)]
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[(String, String)]), (Stamp, StructType)]()
+
+  /** The leaf data files under `s`, skipping the names Spark's file index
+    * skips (`_SUCCESS`, `.crc`, `_temporary`, ...). */
+  private def stamp(fs: FileSystem, s: FileStatus): Stamp = {
+    def leaves(s: FileStatus): Iterator[FileStatus] =
+      if (!s.isDirectory) Iterator(s)
+      else fs.listStatus(s.getPath).iterator
+        .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+        .flatMap(leaves)
+    leaves(s).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+  }
 
   /** S5: headered TSV (the sweep queries' stdout format). */
   def writeTsv(df: DataFrame, path: String): Unit =

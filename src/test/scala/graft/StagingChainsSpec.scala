@@ -66,6 +66,19 @@ class StagingChainsSpec extends GraftSuite {
       s"gate reads left ${persistedIds -- before} cached")
   }
 
+  test("q88 run outside any owning scope releases every frame it persisted, " +
+    "its incoming batch included") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    // the staged index: its build scope releases the build's persists,
+    // and its tables are read back from parquet, uncached
+    queries.DedupQueries.IncrementalIndex.of(spark, sf)
+    assert(cacheManager.isEmpty, "the incremental index build left cached frames")
+    assert(SparkEntry.queries("q88_incremental_dedup")(spark, sf).collect().length == 1)
+    assert(cacheManager.isEmpty, "q88 left cached frames")
+  }
+
   test("declared consumers are queries, and a part's build stages " +
     "everything its consumers read") {
     val declared = StagingRoots.chains.flatMap(_.consumers).toSet

@@ -1,7 +1,9 @@
 #!/usr/bin/env bash
 # Profile one query's stage timeline: runs graft.Explain <q> <sf> run2 with
-# the event log on, then prints stages >0.2s with task counts — the fast way
-# to spot single-task straggler stages (AQE over-coalescing before a fan-out).
+# Spark's event log on, then prints stages >0.2s with task counts — the fast
+# way to spot single-task straggler stages (AQE over-coalescing before a
+# fan-out). The log is switched on by spark.* system properties, which the
+# session builder reads; the program has no knob of its own for it.
 # Usage: tools/profile_stages.sh <query> <sfDir> [cpus]
 # Without a cpus argument the session's own default applies
 # (SPARK_GRAFT_CPUS, else the host's processor count).
@@ -9,7 +11,7 @@ set -euo pipefail
 Q="$1"; SF="${2:?usage: tools/profile_stages.sh <query> <sfDir> [cpus]}"
 if [ $# -ge 3 ]; then export SPARK_GRAFT_CPUS="$3"; fi
 EV=$(mktemp -d /tmp/evprof_XXXX)
-SPARK_GRAFT_EVENTLOG="$EV" \
+JAVA_TOOL_OPTIONS="${JAVA_TOOL_OPTIONS:-} -Dspark.eventLog.enabled=true -Dspark.eventLog.dir=file://$EV" \
   "$(dirname "$0")/runjvm.sh" graft.Explain "$Q" "$SF" run2 2>/dev/null | grep '\[explain\]' || true
 for z in "$EV"/eventlog_v2_local-*/events_1_local-*.zstd; do
   zstd -d -c "$z" 2>/dev/null
