@@ -5,59 +5,27 @@ import org.apache.spark.sql.functions._
 
 /** Component-algorithm scaling rehearsal (dev tool): times the two
   * connected-components loops — q61's min-label propagation with pointer
-  * jump (twin of `queries/DedupQueries.q61DupComponents`'s loop, same
-  * operators round for round) and `operators/StarComponents`'s
-  * large-star/small-star contraction — on adversarial synthetic graphs far
-  * larger than any fixture's verified-pair set: a million-node CHAIN
-  * (worst case for plain propagation, the shape a drifting page's crawl
-  * snapshots produce), clique clusters (the common near-dup case), and a
-  * sparse random graph. Labels are asserted equal before a timing is
-  * reported. SCALE.md records the curves.
+  * jump (`operators/PropagationComponents`) and q87's large-star/small-star
+  * contraction (`operators/StarComponents`) — on adversarial synthetic
+  * graphs far larger than any fixture's verified-pair set: a million-node
+  * CHAIN (worst case for plain propagation, the shape a drifting page's
+  * crawl snapshots produce), clique clusters (the common near-dup case),
+  * and a sparse random graph. The two censuses must agree before a timing
+  * is reported. SCALE.md records the curves.
+  *
+  * The graphs are generated in the session, so the rehearsal reads no
+  * files and its shuffle width is the session's floor
+  * ([[SparkEntry.scaledShufflePartitions]] of no input).
   *
   * Usage: runMain graft.GraphScale [nChain] [nCliques] [nRandEdges]
   */
 object GraphScale {
 
-  /** q61's loop, verbatim shape: per-round full-edge-list join + min
-    * aggregation + pointer jump after round 2 + localCheckpoint. Kept as a
-    * twin here (rather than exported from the query) so the rehearsal pins
-    * the LOOP cost, free of the query's staging input. */
-  private def propagationLabels(edges: DataFrame, maxRounds: Int = 60): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val adj = edges.union(edges.select(col("d2"), col("d1")))
-      .toDF("node", "nbr")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = adj.select(col("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxRounds) {
-      val nbrMin = adj
-        .join(labels.select(col("node").as("nbr"), col("label").as("nl")), "nbr")
-        .groupBy(col("node")).agg(min(col("nl")).as("nbr_label"))
-      val stepped = labels
-        .join(nbrMin, Seq("node"), "left")
-        .select(col("node"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("lbl"))
-      val jumped =
-        if (iter < 2) stepped.withColumnRenamed("lbl", "label")
-        else stepped
-          .join(stepped.select(col("node").as("jn"), col("lbl").as("jl")),
-            col("lbl") === col("jn"), "left")
-          .select(col("node"), col("old"),
-            least(col("lbl"), coalesce(col("jl"), col("lbl"))).as("label"))
-      val next = jumped
-        .withColumn("changed", col("label") =!= col("old"))
-        .localCheckpoint()
-      converged = next.filter(col("changed")).isEmpty
-      labels = next.select(col("node"), col("label"))
-      iter += 1
-    }
-    require(converged, s"propagation did not converge in $iter rounds")
-    System.err.println(s"[graph-scale] propagation rounds: $iter")
-    adj.unpersist()
-    labels
+  /** One graph's census and the seconds each algorithm took. */
+  final case class Result(graph: String, components: Long, nodes: Long,
+      starS: Double, propagationS: Double, propagationRounds: Int) {
+    def json: String =
+      f"""{"graph":"$graph","components":$components,"nodes":$nodes,"star_s":$starS%.1f,"propagation_s":$propagationS%.1f,"propagation_rounds":$propagationRounds}"""
   }
 
   private def time[A](f: => A): (A, Double) = {
@@ -66,52 +34,56 @@ object GraphScale {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
+  /** (components, nodes) of a (node, label) frame. */
+  private def census(labels: DataFrame): (Long, Long) = {
+    val r = labels.groupBy(col("label")).agg(count(lit(1)).as("n"))
+      .agg(count(lit(1)), sum(col("n"))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Both algorithms over one edge frame (d1, d2). */
+  private def measure(name: String, edges: DataFrame): Result = {
+    val e = edges.toDF("d1", "d2").localCheckpoint()
+    val (star, starS) = time(census(graft.operators.StarComponents.labels(e)))
+    val ((prop, rounds), propS) = time {
+      val (labels, rounds) = graft.operators.PropagationComponents.labels(e)
+      (census(labels), rounds)
+    }
+    require(star == prop, s"$name census mismatch: star=$star propagation=$prop")
+    Result(name, star._1, star._2, starS, propS, rounds)
+  }
+
+  def run(spark: SparkSession, nChain: Int, nCliques: Int, nRandEdges: Int): Seq[Result] = {
+    import spark.implicits._
+    // chain: diameter = nChain — propagation's worst case
+    val chain = spark.range(0L, nChain - 1L).select(
+      col("id").as("d1"), (col("id") + 1).as("d2"))
+    // clique clusters of 10 — the common near-dup shape
+    val cliques = spark.range(0L, nCliques.toLong).as[Long].flatMap { c =>
+      val base = c * 10
+      for (a <- 0 until 10; b <- (a + 1) until 10)
+        yield (base + a, base + b)
+    }.toDF("d1", "d2")
+    // sparse random graph (deterministic hash edges)
+    val nNodes = nRandEdges / 2
+    val random = spark.range(0L, nRandEdges.toLong).select(
+      pmod(xxhash64(col("id")), lit(nNodes.toLong)).as("d1"),
+      pmod(xxhash64(col("id") + 7777777L), lit(nNodes.toLong)).as("d2"))
+      .filter(col("d1") =!= col("d2"))
+    Seq("chain" -> chain, "cliques" -> cliques, "random" -> random).map {
+      case (name, edges) =>
+        val r = measure(name, edges)
+        println(r.json)
+        r
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val nChain = args.lift(0).map(_.toInt).getOrElse(1000000)
     val nCliques = args.lift(1).map(_.toInt).getOrElse(50000)
     val nRandEdges = args.lift(2).map(_.toInt).getOrElse(2000000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    def run(name: String, edges: DataFrame): Unit = {
-      val e = edges.toDF("d1", "d2").localCheckpoint()
-      val (starL, starS) = time {
-        graft.operators.StarComponents.labels(e)
-          .groupBy(col("label")).agg(count(lit(1)).as("n"))
-          .agg(count(lit(1)), sum(col("n"))).collect()(0)
-      }
-      val (propL, propS) = time {
-        propagationLabels(e)
-          .groupBy(col("label")).agg(count(lit(1)).as("n"))
-          .agg(count(lit(1)), sum(col("n"))).collect()(0)
-      }
-      require(starL == propL,
-        s"$name census mismatch: star=$starL propagation=$propL")
-      println(f"""{"graph":"$name","components":${starL.getLong(0)},"nodes":${starL.getLong(1)},"star_s":$starS%.1f,"propagation_s":$propS%.1f}""")
-    }
-
-    // chain: diameter = nChain — propagation's worst case
-    run("chain", spark.range(0L, nChain - 1L).select(
-      col("id").as("d1"), (col("id") + 1).as("d2")))
-    // clique clusters of 10 — the common near-dup shape
-    run("cliques", spark.range(0L, nCliques.toLong).as[Long].flatMap { c =>
-      val base = c * 10
-      for (a <- 0 until 10; b <- (a + 1) until 10)
-        yield (base + a, base + b)
-    }.toDF("d1", "d2"))
-    // sparse random graph (deterministic hash edges)
-    val nNodes = nRandEdges / 2
-    run("random", spark.range(0L, nRandEdges.toLong).select(
-      pmod(xxhash64(col("id")), lit(nNodes.toLong)).as("d1"),
-      pmod(xxhash64(col("id") + 7777777L), lit(nNodes.toLong)).as("d2"))
-      .filter(col("d1") =!= col("d2")))
-    spark.stop()
+    val spark = SparkEntry.session("", SparkEntry.cpus)
+    try run(spark, nChain, nCliques, nRandEdges)
+    finally spark.stop()
   }
 }

@@ -24,6 +24,8 @@ import org.apache.spark.sql.functions._
   * deterministic per-replica perturbation for the same reason.
   *
   * All arithmetic is seed-free and closed-form: same inputs, same fixture.
+  * Row counts: `region` and `nation` are copied as they are; every other
+  * table holds `seriesK × timeK` times its source rows.
   *
   * Usage: runMain graft.ScaleFixture <srcDir> <dstDir> [seriesK] [timeK] [opt...]
   *   opt `skew=<pct>`  — remap <pct>% of ALL events to one hot user
@@ -41,10 +43,17 @@ object ScaleFixture {
 
   def main(args: Array[String]): Unit = {
     val src = args(0)
-    val dst = args(1)
-    val seriesK = args.lift(2).map(_.toInt).getOrElse(5)
-    val timeK = args.lift(3).map(_.toInt).getOrElse(2)
-    val opts = args.drop(4).toSet
+    val spark = SparkEntry.session(src, SparkEntry.cpus)
+    try run(spark, src, args(1),
+      seriesK = args.lift(2).map(_.toInt).getOrElse(5),
+      timeK = args.lift(3).map(_.toInt).getOrElse(2),
+      opts = args.drop(4).toSet)
+    finally spark.stop()
+  }
+
+  /** Writes the `seriesK × timeK` fixture of `src` under `dst`. */
+  def run(spark: SparkSession, src: String, dst: String, seriesK: Int, timeK: Int,
+      opts: Set[String]): Unit = {
     val skewPct = opts.collectFirst { case o if o.startsWith("skew=") =>
       o.stripPrefix("skew=").toInt }.getOrElse(0)
     val corpusOnly = opts.contains("corpus-only")
@@ -82,15 +91,6 @@ object ScaleFixture {
         "other 0) or the residue windows [0,dup) and [50,50+near) overlap")
     val eventsOnly = opts.contains("events-only")
     val k = seriesK * timeK
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def write(df: DataFrame, name: String): Unit = {
       df.coalesce(8).write.mode("overwrite").parquet(s"$dst/$name.parquet")
@@ -189,7 +189,6 @@ object ScaleFixture {
     if (!eventsOnly) writeCorpus(spark, src, dst, reps, write, hotShinglePct, dupVecPct, nearVecPct)
 
     println(s"[scale] done: $src -> $dst at ${seriesK}x${timeK} = ${k}x")
-    spark.stop()
   }
 
   /** documents (half-splice expansion: new docs with realistic

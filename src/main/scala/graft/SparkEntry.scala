@@ -41,7 +41,7 @@ object SparkEntry {
   def cpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
 
-  /** The one session Bench, Verify and Explain run in: `local[cpus]`,
+  /** The one session every program main runs in: `local[cpus]`,
     * shuffle partitions sized from the input bytes, the codegen cache
     * sized for a query mix, then [[ensureConfs]]. Every other conf keeps
     * Spark's default; an A/B of one passes it as a system property
@@ -121,11 +121,12 @@ object SparkEntry {
     * REPARTITION_BY_NUM) and are unaffected. Result-safe by the engine's
     * rounding discipline: order-dependent double aggregates are rounded
     * on the 1e-6 lattice before comparison/output (re-proven by the full
-    * DuckDB oracle at both SFs on this change). */
+    * DuckDB oracle at both SFs on this change). A missing path, or an
+    * empty one (a session that reads no files), sizes at the floor. */
   def scaledShufflePartitions(sfDir: String, cores: Int): Int = {
     val root = java.nio.file.Paths.get(sfDir)
     val bytes: Long =
-      if (java.nio.file.Files.isDirectory(root)) {
+      if (sfDir.nonEmpty && java.nio.file.Files.isDirectory(root)) {
         val s = java.nio.file.Files.list(root)
         try s.mapToLong(p =>
           try java.nio.file.Files.size(p) catch { case _: Exception => 0L }

@@ -9,10 +9,12 @@ import org.apache.spark.sql.SparkSession
   * that ONE Spark job's wall-clock is decoupled from the config count —
   * the curve (configs ×720, wall ×·) is the evidence SCALE.md records.
   *
-  * Usage: runMain graft.SweepScale <sfDir> <outDir> [big]
+  * Usage: runMain graft.SweepScale <sfDir> <outDir> [big] [gen800|gen800only]
   *   `big` appends the gen600-width step (302,400 configs ≈ the
   *   reference's 300,960 sed-generated files) — ~10× the 30k step's
   *   wall, so it is opt-in rather than part of the dev loop.
+  *   `gen800` appends the 86,400-config Laguerre-gated step;
+  *   `gen800only` runs only that step.
   */
 object SweepScale {
 
@@ -43,39 +45,58 @@ object SweepScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/sweep_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sizes =
+      if (args.contains("gen800only")) Nil
+      else steps ++ (if (args.contains("big")) Seq(gen600) else Nil)
+    val spark = SparkEntry.session(sfDir, SparkEntry.cpus)
+    try run(spark, sfDir, outDir, sizes,
+      gen800 = args.contains("gen800") || args.contains("gen800only"))
+    finally spark.stop()
+  }
 
-    val steps = Seq(
-      ("sweep42", 1, 1, 1),      // 14 × 3 × 1   =     42 configs
-      ("sweep1k", 4, 3, 2),      // 14 × 3 × 24  =  1,008 (gen520's n)
-      ("sweep30k", 10, 9, 8)) ++ // 14 × 3 × 720 = 30,240
-      // gen600 width: 14 × 3 × 7,200 = 302,400 ≈ the reference's 300,960
-      // (scripts/gen600/generate.sh:107-176)
-      (if (args.contains("big")) Seq(("sweep300k", 20, 18, 20)) else Seq.empty)
-    if (!args.contains("gen800only")) steps.foreach { case (gen, nTp, nSl, nMb) =>
+  /** One barrier-grid size: nTp × nSl × nMb profiles, each run against
+    * every formation and gate. */
+  final case class Step(gen: String, nTp: Int, nSl: Int, nMb: Int)
+
+  val steps: Seq[Step] = Seq(
+    Step("sweep42", 1, 1, 1),     // 14 × 3 × 1   =     42 configs
+    Step("sweep1k", 4, 3, 2),     // 14 × 3 × 24  =  1,008 (gen520's n)
+    Step("sweep30k", 10, 9, 8))   // 14 × 3 × 720 = 30,240
+
+  // gen600 width: 14 × 3 × 7,200 = 302,400 ≈ the reference's 300,960
+  // (scripts/gen600/generate.sh:107-176)
+  val gen600: Step = Step("sweep300k", 20, 18, 20)
+
+  /** One step's config count, result rows and wall seconds. */
+  final case class Result(step: String, nConfigs: Long, resultRows: Long, wallS: Double) {
+    def json: String =
+      f"""{"step":"$step","n_configs":$nConfigs,"result_rows":$resultRows,"wall_s":$wallS%.1f}"""
+  }
+
+  private def timed(step: String, nCfg: Long)(sweep: => org.apache.spark.sql.DataFrame): Result = {
+    val t0 = System.nanoTime()
+    val n = sweep.count()
+    val r = Result(step, nCfg, n, (System.nanoTime() - t0) / 1e9)
+    println(r.json)
+    r
+  }
+
+  /** Runs each of `sizes`, then the gen800-width Laguerre step if
+    * `gen800`; prints and returns one result per step. */
+  def run(spark: SparkSession, sfDir: String, outDir: String, sizes: Seq[Step],
+      gen800: Boolean): Seq[Result] = {
+    val stepResults = sizes.map { case Step(gen, nTp, nSl, nMb) =>
       val g = grid(nTp, nSl, nMb)
       val spec = Sweep.SweepSpec(gen, formations, g, regimeGates = gates)
-      val t0 = System.nanoTime()
-      val out = Sweep.run(spark, sfDir, spec, outDir)
-      val n = out.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val nCfg = formations.size * gates.size * g.size
-      println(f"""{"step":"$gen","n_configs":$nCfg,"result_rows":$n,"wall_s":$wall%.1f}""")
+      timed(gen, formations.size.toLong * gates.size * g.size)(
+        Sweep.run(spark, sfDir, spec, outDir))
     }
     // gen800 width (scripts/gen800_sweep.py:6): 288 Laguerre configs ×
     // (5 patterns × 3 gates × 20 barriers) = 86,400 configs. The Laguerre
     // axis costs its 12 DISTINCT recursions once per series
     // (Laguerre.attachRsis); thresholds and gates fan out columnar after
     // the barrier scan, so the scan never multiplies by the 288.
-    if (args.contains("gen800") || args.contains("gen800only")) {
+    stepResults ++ (if (!gen800) Nil else {
       val lagGrid = for {
         ap <- Seq(14, 32, 64, 100)
         lu <- Seq(0.60, 0.65, 0.70, 0.75, 0.80, 0.85)
@@ -96,14 +117,8 @@ object SweepScale {
       val g = grid(5, 2, 2) // 20 barrier profiles
       val spec = Sweep.SweepSpec("gen800", five, g,
         regimeGates = gates800, laguerreGrid = lagGrid)
-      val t0 = System.nanoTime()
-      val out = Sweep.run(spark, sfDir, spec, outDir)
-      val n = out.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val nCfg = five.size * gates800.size * g.size * lagGrid.size
-      println(f"""{"step":"gen800","n_configs":$nCfg,"n_laguerre":${lagGrid.size},""" +
-        f""""result_rows":$n,"wall_s":$wall%.1f}""")
-    }
-    spark.stop()
+      Seq(timed("gen800", five.size.toLong * gates800.size * g.size * lagGrid.size)(
+        Sweep.run(spark, sfDir, spec, outDir)))
+    })
   }
 }

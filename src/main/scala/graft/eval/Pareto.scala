@@ -88,7 +88,7 @@ object Pareto {
     * with no per-cell point scans and no tuple materialization — the
     * previous form enumerated every grid tuple and Pareto-filtered the
     * attained set quadratically, which OOM'd / spun for minutes at a
-    * 64-candidate x 8-fold input (the EvalScale rehearsal).
+    * 64-candidate x 8-fold input.
     */
   private final case class Eaf(axes: Array[Array[Double]], counts: Array[Int],
       strides: Array[Int], nCells: Int)

@@ -431,65 +431,23 @@ object DedupQueries {
   // representative" — and the two disagree exactly when a middle document
   // links two pairs whose endpoints never shared an LSH bucket.
   //
-  // Algorithm: iterative min-label propagation. labels start as node ids;
-  // each round every node takes min(own label, neighbors' labels); fixpoint
-  // = every node holds its component's min doc_id. Each round is one
-  // equi-join + one groupBy on the EDGE LIST ONLY (the corpus is never in
-  // the loop — at 100 TB the edge list is orders of magnitude smaller than
-  // the corpus since it holds only LSH-verified pairs), and rounds are
-  // bounded by component diameter: near-dup clusters at Jaccard ≥ 0.5 are
-  // near-cliques (diameter 2-3). For adversarial chain graphs the same
-  // join shape upgrades to large-star/small-star (O(log n) rounds); the
-  // loop fails loudly rather than emit a non-fixpoint labeling.
-  // localCheckpoint() per round truncates lineage so the plan does not
-  // grow with iterations (the classic iterative-DataFrame trap).
+  // Algorithm: iterative min-label propagation with a pointer jump
+  // (operators/PropagationComponents). Each round is one equi-join + one
+  // groupBy on the EDGE LIST ONLY (the corpus is never in the loop — at
+  // 100 TB the edge list is orders of magnitude smaller than the corpus
+  // since it holds only LSH-verified pairs), and near-dup clusters at
+  // Jaccard ≥ 0.5 are near-cliques (diameter 2-3), so they converge in a
+  // few rounds. For adversarial chain graphs the same join shape upgrades
+  // to large-star/small-star (q87).
   def q61DupComponents(spark: SparkSession, d: String): DataFrame = {
     val (scored, _) = Staging.scoredAndCounts(spark, d)
-    // the union below references the edge list twice; both branches now
-    // read the WRITTEN staging table (jac filter pushed into the parquet
+    // the loop's adjacency unions the edge list with its reverse; both
+    // branches read the WRITTEN staging table (jac filter pushed into the parquet
     // scan) instead of re-running the LSH+verify chain per branch
     val edges = scored.filter(col("jac") >= JaccardThreshold)
       .select(col("d1"), col("d2"))
-    val adj = edges.union(edges.select(col("d2"), col("d1")))
-      .toDF("node", "nbr")
-      .transform(StagingRoots.persist)
-    var labels = adj.select(col("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 20) {
-      val nbrMin = adj
-        .join(labels.select(col("node").as("nbr"), col("label").as("nl")), "nbr")
-        .groupBy(col("node")).agg(min(col("nl")).as("nbr_label"))
-      val stepped = labels
-        .join(nbrMin, Seq("node"), "left")
-        .select(col("node"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("lbl"))
-      // pointer jump (path compression): label ← label(label). A label is
-      // always a node of the same component, so the jump stays in-component
-      // and monotone; chain depth halves per round, so chain-shaped
-      // components (the 10× fixture's half-splice dups) converge in
-      // O(log diameter) rounds instead of O(diameter). Engaged only once
-      // plain propagation hasn't converged in 2 rounds: near-clique dup
-      // graphs (the common case) finish before paying the jump's join.
-      val jumped =
-        if (iter < 2) stepped.withColumnRenamed("lbl", "label")
-        else stepped
-          .join(stepped.select(col("node").as("jn"), col("lbl").as("jl")),
-            col("lbl") === col("jn"), "left")
-          .select(col("node"), col("old"),
-            least(col("lbl"), coalesce(col("jl"), col("lbl"))).as("label"))
-      val next = jumped
-        .withColumn("changed", col("label") =!= col("old"))
-        .localCheckpoint()
-      converged = next.filter(col("changed")).isEmpty
-      labels = next.select(col("node"), col("label"))
-      iter += 1
-    }
-    require(converged, s"q61 label propagation did not converge in $iter rounds")
-    System.err.println(s"[q61] converged in $iter rounds")
-    adj.unpersist()
+    val (labels, rounds) = graft.operators.PropagationComponents.labels(edges)
+    System.err.println(s"[q61] converged in $rounds rounds")
     labels.groupBy(col("label").as("cluster_root"))
       .agg(count(lit(1)).as("n_members"), max(col("node")).as("max_doc_id"))
       .orderBy(col("cluster_root"))
@@ -532,8 +490,8 @@ object DedupQueries {
   // per-round physical shape (one groupBy + one join, corpus never in the
   // loop). Shares the q61 oracle — the two algorithms must agree exactly,
   // and the driver checks both against DuckDB's transitive closure.
-  // GraphScale (dev main) measures both loops on adversarial chain/clique
-  // graphs far larger than any fixture; StarComponentsSpec pins equality.
+  // GraphScale measures both loops on adversarial chain/clique graphs far
+  // larger than any fixture; StarComponentsSpec pins equality.
   def q87ComponentsStar(spark: SparkSession, d: String): DataFrame = {
     val (scored, _) = Staging.scoredAndCounts(spark, d)
     val edges = scored.filter(col("jac") >= JaccardThreshold)

@@ -5,17 +5,16 @@ import graft.sources.ResultSink
 
 /** Staged gate indexes (the EvalStaging discipline on the gate axis): the
   * semantic-gate batch twins consume a WRITTEN index — the production
-  * contract (a streaming gate reads the `gateindex`/`gateindexrs` parquet a
+  * contract (a streaming gate reads the flat or routed index parquet a
   * one-time build job wrote; it never rebuilds the corpus clustering per
-  * micro-batch; SemScale's `gate` mode measures exactly this read path at
-  * 2M vectors) — built once per (JVM, corpus) and read back by every
+  * micro-batch) — built once per (JVM, corpus) and read back by every
   * consumer. Before r13 each twin rebuilt its index inline per run (the
   * r12 verdict's INFO #2: 4.4–5.3 s/row of build cost misread as gate
   * cost); now Bench reports the two builds as their own `q_staging_gate`
-  * row and q126/q127 report gate cost. The layouts are the SemScale
-  * writers' verbatim ([[SimilarityQueries.writeGateIndexFlat]] /
-  * [[SimilarityQueries.writeGateIndexStaged]] — one definition), so the
-  * dev-tool, bench and production lanes can never drift; staging changes
+  * row and q126/q127 report gate cost. The layouts are the one index
+  * writers' ([[SimilarityQueries.writeGateIndexFlat]] /
+  * [[SimilarityQueries.writeGateIndexStaged]]), so the streaming, bench
+  * and production lanes can never drift; staging changes
   * where the tables are read from, never what they are (centroids are
   * exact longs, member vectors round-trip parquet bit-exactly — the
   * DuckDB oracles replay the full clustering from the corpus and still

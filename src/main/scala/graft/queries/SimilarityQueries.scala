@@ -770,10 +770,9 @@ object SimilarityQueries {
 
   /** As [[scaledAssignFrom]], also returning the final (post-Lloyd)
     * centroid table — the streaming gate's broadcast side. */
-  private def scaledAssignWithCents(v: DataFrame,
-      targetCell: Int = TargetCell): (IndexedSeq[Array[Double]], DataFrame) = {
+  private def scaledAssignWithCents(v: DataFrame): (IndexedSeq[Array[Double]], DataFrame) = {
     val n = v.count()
-    val k = math.max(1, math.ceil(n / targetCell.toDouble).toInt)
+    val k = scaledK(n)
     // same deterministic seed rule as q63: the K smallest (md5(vec_id), vec_id)
     val seeds: Array[Array[Double]] = collectSeedRows(v, k, n)
       .map(_.getAs[scala.collection.Seq[Double]]("mud").toArray)
@@ -820,14 +819,14 @@ object SimilarityQueries {
     * Long form for the kernel) and the per-cell member arrays
     * (vec_id, e, nrm structs per cid) a streamed vector is verified
     * against. */
-  private[graft] def semanticStreamIndex(spark: SparkSession, d: String,
-      targetCell: Int = TargetCell): (Seq[Seq[Long]], DataFrame) = {
+  private[graft] def semanticStreamIndex(spark: SparkSession, d: String)
+      : (Seq[Seq[Long]], DataFrame) = {
     val v = withNorm(spark, d)
       .withColumn("mud",
         transform(col("e"), x => round(x * lit(1e6)).cast("long").cast("double")))
       .repartition(col("vec_id"))
       .transform(StagingRoots.persist)
-    val (cents, a2) = scaledAssignWithCents(v, targetCell)
+    val (cents, a2) = scaledAssignWithCents(v)
     val members = a2.groupBy(col("cid"))
       .agg(collect_list(struct(col("vec_id"), col("e"), col("nrm"))).as("members"))
     (cents.map(_.map(_.toLong).toSeq), members)
@@ -1101,8 +1100,8 @@ object SimilarityQueries {
     routedAssignStagedFrom(v)
   }
 
-  /** Write the FLAT gate-index layout (cents.parquet + members.parquet) —
-    * shared by SemScale `gateindex` and [[GateStaging]]. Members are
+  /** Write the FLAT gate-index layout (cents.parquet + members.parquet)
+    * that [[GateStaging]] stages. Members are
     * range-partitioned by cid so each cid-range verify shard's broadcast
     * build scans only ITS files/row-groups (measured r12: 8 unpruned
     * concurrent 519 MB scans OOM'd an 8 g gate JVM the pruned layout
@@ -1227,9 +1226,8 @@ object SimilarityQueries {
   // The oracle replays the same algorithm (routedKmeansCteSql).
   /** The staged seed frame: (cid, smud) with cid = md5-rank, built with
     * NO K-row driver materialization (banded distributed sort +
-    * zipWithIndex). Shared by the staged assignment and the SemScale
-    * seed-geometry census. */
-  private[graft] def stagedSeeds(v: DataFrame, k: Int, n: Long): DataFrame = {
+    * zipWithIndex). */
+  private def stagedSeeds(v: DataFrame, k: Int, n: Long): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
     val spark = v.sparkSession
@@ -1248,32 +1246,13 @@ object SimilarityQueries {
   }
 
   /** The O(√K) coarse table — the staged path's ONLY collected state. */
-  private[graft] def stagedCoarse(seeds: DataFrame, k1: Int): Seq[Seq[Long]] =
+  private def stagedCoarse(seeds: DataFrame, k1: Int): Seq[Seq[Long]] =
     seeds.filter(col("cid") < k1)
       .orderBy(col("cid")).collect()
       .map(_.getAs[scala.collection.Seq[Double]]("smud").map(_.toLong).toSeq).toSeq
 
-  /** Rehearsal hook (SemScale): fine-centroids-per-coarse-cell census for
-    * the routed lane's seed geometry — (fr, n_fine) ordered worst-first.
-    * This is the distribution that decides routed task balance: a coarse
-    * cell holding m fine centroids costs every vector routed there O(m). */
-  private[graft] def coarseCellCensus(spark: SparkSession, d: String,
-      targetCell: Int = TargetCell): DataFrame = {
-    val (_, v) = exactFirstReps(spark, d)
-    val n = v.count()
-    val k = math.max(1, math.ceil(n / targetCell.toDouble).toInt)
-    val k1 = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val seeds = stagedSeeds(v, k, n)
-    val coarse = stagedCoarse(seeds, k1)
-    seeds.withColumn("fr",
-        graft.functions.GraftFunctions.centroidArgmin(col("smud"), coarse))
-      .groupBy(col("fr")).agg(count(lit(1)).as("n_fine"))
-      .orderBy(col("n_fine").desc, col("fr"))
-  }
-
-  private def routedAssignStagedFrom(v: DataFrame,
-      targetCell: Int = TargetCell): DataFrame =
-    routedAssignStagedWithTables(v, targetCell)._3
+  private def routedAssignStagedFrom(v: DataFrame): DataFrame =
+    routedAssignStagedWithTables(v)._3
 
   /** As [[routedAssignStagedFrom]], also returning the routing tables in
     * their staged (never-collected-beyond-√K) form: the coarse table and
@@ -1344,9 +1323,9 @@ object SimilarityQueries {
     * (ccid, cid, cmud), the per-cell member frame). Cell BOUNDARIES are
     * the routed lane's (q116), not the flat lane's (q113) — the two gates
     * are distinct, both oracle-checked (q126 / q127). */
-  private[graft] def semanticStreamIndexStaged(spark: SparkSession, d: String,
-      targetCell: Int = TargetCell): (Seq[Seq[Long]], DataFrame, DataFrame) =
-    semanticStreamIndexStagedFrom(Tables.embeddings(spark, d), targetCell)
+  private[graft] def semanticStreamIndexStaged(spark: SparkSession, d: String)
+      : (Seq[Seq[Long]], DataFrame, DataFrame) =
+    semanticStreamIndexStagedFrom(Tables.embeddings(spark, d))
 
   /** [[semanticStreamIndexStaged]] over an arbitrary (vec_id, embedding)
     * frame instead of the whole corpus — the q130 incremental-lifecycle
@@ -1370,7 +1349,7 @@ object SimilarityQueries {
   /** Write the routed gate-index layout (coarse/fine/members parquet)
     * from [[semanticStreamIndexStagedFrom]]'s frames, collecting only the
     * O(√K) non-empty coarse ids. Returns K (the fine-cell count). The one
-    * routed-index writer: SemScale `gateindexrs`, [[GateStaging]]'s routed
+    * routed-index writer: [[GateStaging]]'s routed
     * and q130 base indexes, and the rebuild. The fine table is persisted
     * for its three reads and released when the writer returns or throws. */
   private[graft] def writeGateIndexStaged(spark: SparkSession, dst: String,
@@ -1795,7 +1774,7 @@ object SimilarityQueries {
     * cannot escape (a cell ballooned by drifted arrivals stays ballooned
     * under compaction forever).
     *
-    * `targetCell` defaults to the index's OBSERVED median cell size —
+    * The cell target is the index's OBSERVED median cell size —
     * robust to the very skew that triggered the rebuild (the ballooned
     * cell inflates the mean, not the median; the same argument as
     * [[rebuildDue]]'s base) — so a rebuild preserves the original
@@ -1820,16 +1799,13 @@ object SimilarityQueries {
     * admit whose routing tables predate the rebuild is refused with
     * [[StaleRoutingTablesException]] (reload + replay, nothing
     * committed). Returns the rebuilt fine-cell count K. */
-  private[graft] def semanticIndexRebuild(spark: SparkSession, idx: String,
-      targetCell: Option[Int] = None): Long = {
+  private[graft] def semanticIndexRebuild(spark: SparkSession, idx: String): Long = {
     healInterruptedRebuild(idx)
     withIndexLock(idx) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       healInterruptedCompact(idx)
-      val tc = targetCell.getOrElse {
-        val (_, med) = indexCellBalance(spark, idx)
-        math.max(1, math.rint(med).toInt)
-      }
+      val (_, med) = indexCellBalance(spark, idx)
+      val tc = math.max(1, math.rint(med).toInt)
       val vecs = readCellMembersMerged(spark, idx)
         .select(explode(col("members")).as("m"))
         .select(col("m.vec_id").as("vec_id"), col("m.e").as("embedding"))
@@ -1903,16 +1879,6 @@ object SimilarityQueries {
     pruned
       .groupBy(col("cid"))
       .agg(flatten(collect_list(col("members"))).as("members"))
-  }
-
-  /** Rehearsal hook (SemScale): the q118 stack at an overridden cell
-    * target, so a 2M-vector fixture reaches K ≥ 10⁵ (targetCell=16 →
-    * K = 125,000) without a 10⁸-vector corpus. */
-  private[graft] def stagedStackRehearsal(spark: SparkSession, d: String,
-      targetCell: Int): DataFrame = {
-    val (nTotal, v) = exactFirstReps(spark, d)
-    exactFirstOutput(nTotal, v,
-      semDedupCensus(routedAssignStagedFrom(v, targetCell)))
   }
 
   // ---------------------------------------------------------------------------

@@ -174,8 +174,15 @@ private[graft] object StagingRoots {
   /** A staging chain: independent parts, built concurrently. */
   final case class Chain(name: String, parts: Seq[Part]) {
     def consumers: Set[String] = parts.flatMap(_.consumers).toSet
-    def build(spark: SparkSession, d: String): Unit =
-      all(parts.map(p => () => p.build(spark, d)))
+
+    /** Builds every part under the job description `q_staging_<name>`, so
+      * the event log attributes the chain's jobs. The parts' pool threads
+      * are created inside the call and inherit Spark's local properties. */
+    def build(spark: SparkSession, d: String): Unit = {
+      spark.sparkContext.setJobDescription(s"q_staging_$name")
+      try all(parts.map(p => () => p.build(spark, d)))
+      finally spark.sparkContext.setJobDescription(null)
+    }
   }
 
   /** Every staging chain, declared once. Each part names its consumers:

@@ -146,38 +146,6 @@ object ResultSink {
       .option("ignoreNullFields", "false")
       .option("compression", "gzip").json(path)
 
-  /** BUCKETED result table — the co-located-join layout the 100 TB
-    * design doc promises (SURVEY "Scale design": repeated joins on one
-    * key, e.g. per-config trade logs joined to per-config eval records
-    * on config_id, should shuffle NEITHER side). `bucketBy` persists a
-    * Murmur3 hash layout in the table metadata, so any later equi-join
-    * or aggregation on the bucket key reads co-located buckets with NO
-    * Exchange on either side (PlanShapeSpec pins the shuffle-free plan).
-    * The frame is pre-repartitioned by the same hash so each bucket is
-    * ONE file (otherwise every write task emits its own file per bucket
-    * and small-file count multiplies by the task count); `sortBy` stores
-    * the in-bucket order, the MergeTree ORDER BY role. Catalog tables
-    * only — Spark's bucket metadata lives in the catalog, not in the
-    * parquet footers (a plain `.parquet(path)` read of the same files is
-    * correct but unbucketed). */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-      bucketCol: String, nBuckets: Int, sortCols: Seq[String] = Seq.empty): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    df.repartition(nBuckets, org.apache.spark.sql.functions.col(bucketCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("path", path)
-      .bucketBy(nBuckets, bucketCol)
-      .sortBy(bucketCol, sortCols: _*)
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** Read a bucketed result table back WITH its bucket layout (the
-    * catalog read path — see [[writeBucketed]]). */
-  def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** S7: Arrow IPC stream export (ref exports Arrow for the Python eval
     * layer; here each task writes one `part-N.arrows` IPC-stream shard —
     * the layout a downstream reader mmaps shard-parallel). Rows never

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import graft.sources.ResultSink
 import graft.Sweep.{BarrierCfg, SweepSpec}
@@ -16,36 +15,10 @@ class ParquetReadMemoSpec extends GraftSuite {
   private def tmp(): String =
     Files.createTempDirectory("graft_read").toString + "/t"
 
-  /** `body`'s result and the number of Spark jobs it started. The count
-    * runs between two marker jobs; the listener bus delivers job starts
-    * in order, so once the closing marker is seen every job `body`
-    * started has been seen too. */
+  /** `body`'s result and the number of Spark jobs it started. */
   private def jobsDuring[A](body: => A): (A, Int) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    val tag = s"read-memo-${System.nanoTime()}"
-    def mark(m: String): Unit = {
-      sc.setJobDescription(m)
-      try spark.range(1).collect() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(l)
-    try {
-      mark(s"$tag-open")
-      val out = body
-      mark(s"$tag-close")
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(s"$tag-close") && System.nanoTime() < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      val all = seen.asScala.toSeq
-      assert(all.contains(s"$tag-open") && all.contains(s"$tag-close"), all)
-      val between = all.dropWhile(_ != s"$tag-open").drop(1).takeWhile(_ != s"$tag-close")
-      (out, between.count(d => !d.startsWith(tag)))
-    } finally sc.removeSparkListener(l)
+    val (out, jobs) = jobDescriptionsDuring(body)
+    (out, jobs.size)
   }
 
   test("a second read of a table launches no Spark job") {

@@ -389,48 +389,6 @@ class PlanShapeSpec extends GraftSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("bucketed result tables co-locate joins: a config_id equi-join of " +
-    "two bucketed tables runs with NO exchange on either side") {
-    // the other half of the §1.6 MergeTree-key mapping: repeated joins on
-    // one key (per-config trade logs × per-config eval records) should
-    // shuffle NEITHER side once both tables persist the same bucket
-    // layout — at 100 TB this turns every config_id join from two
-    // corpus-wide exchanges into a file-local zip
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucket_pin").toString
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val trades = (0 until 20000)
-        .map(i => (i % 128, i.toLong, (i % 37) * 0.5))
-        .toDF("config_id", "trade_id", "ret")
-      val evals = (0 until 128).map(i => (i, i * 1.0)).toDF("config_id", "score")
-      graft.sources.ResultSink.writeBucketed(
-        trades, "graft_bkt_trades", s"$dir/trades", "config_id", 8,
-        sortCols = Seq("trade_id"))
-      graft.sources.ResultSink.writeBucketed(
-        evals, "graft_bkt_evals", s"$dir/evals", "config_id", 8)
-      val j = graft.sources.ResultSink.readTable(spark, "graft_bkt_trades")
-        .join(graft.sources.ResultSink.readTable(spark, "graft_bkt_evals"),
-          "config_id")
-      val p = plan(j)
-      assert(!p.contains("Exchange"),
-        s"bucketed equi-join must not shuffle either side:\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p)
-      assert(p.contains("Bucketed: true"),
-        s"catalog read lost the bucket layout:\n$p")
-      // and the join is still the right join
-      assert(j.count() == 20000)
-      assert(j.filter(col("config_id") === 5).count() == 20000 / 128 + 1)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.sql("DROP TABLE IF EXISTS graft_bkt_trades")
-      spark.sql("DROP TABLE IF EXISTS graft_bkt_evals")
-      queries.StagingRoots.deleteRecursively(java.nio.file.Paths.get(dir))
-    }
-  }
-
   test("ResultSink-written (symbol, threshold) tables prune partitions and " +
     "skip row groups on close_time_ms — the §1.6 MergeTree-key mapping") {
     // SURVEY §1.6 maps the reference's MergeTree key layout

@@ -39,27 +39,6 @@ class SemDedupStagedSpec extends GraftSuite {
     assert(!p.contains("SortAggregate"), s"no sort-aggregated argmin:\n$p")
   }
 
-  test("coarseCellCensus is a total partition of the fine seeds (the " +
-    "SemScale rehearsal hook's invariant)") {
-    // every fine centroid routes to exactly one coarse cell: the census
-    // must sum to K = ceil(nReps / targetCell) with every route id inside
-    // [0, k1); worst-cell inspection (SCALE.md r11) is only meaningful if
-    // this partition property holds
-    val targetCell = 16
-    val rows = SimilarityQueries.coarseCellCensus(spark, sf, targetCell).collect()
-    val nReps = Tables.embeddings(spark, sf)
-      .withColumn("mud",
-        expr("transform(embedding, x -> CAST(round(x * 1000000.0) AS BIGINT))"))
-      .select(col("mud")).distinct().count()
-    val k = math.ceil(nReps / targetCell.toDouble).toLong
-    val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
-    assert(rows.map(_.getAs[Long]("n_fine")).sum == k,
-      s"census must cover all $k fine seeds")
-    assert(rows.forall(r => r.getAs[Int]("fr") >= 0 && r.getAs[Int]("fr") < k1),
-      s"route ids must lie in [0, $k1)")
-    assert(rows.map(_.getAs[Int]("fr")).distinct.length == rows.length)
-  }
-
   test("stagedGateAssignApply == plain-Scala routed argmin over random " +
     "geometries (duplicate seeds -> orphan coarse cells, duplicate fine " +
     "centroids, exact-tie probes) — property fuzz of the composed pipeline") {
@@ -696,13 +675,13 @@ class SemDedupStagedSpec extends GraftSuite {
     "the OS when the holder is SIGKILLed (the cross-process half the " +
     "same-JVM latch tests cannot see)") {
     // the repeatable form of the SCALE.md r14 rehearsal: spawn
-    // `SemScale lockhold` in a child JVM (no Spark session — the mode is
-    // pure java.nio), then contend from THIS JVM's withIndexLock
+    // IndexLockHolder in a child JVM (no Spark session — it is pure
+    // java.nio), then contend from THIS JVM's withIndexLock
     val idxDir = java.nio.file.Files.createTempDirectory("graft_lock_spec")
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
     val holder = new ProcessBuilder(
-      javaBin, "-cp", cp, "graft.SemScale", "lockhold", idxDir.toString, "60000")
+      javaBin, "-cp", cp, "graft.IndexLockHolder", idxDir.toString, "60000")
       .redirectErrorStream(true).start()
     try {
       // wait for the child to actually HOLD the lock
@@ -743,7 +722,7 @@ class SemDedupStagedSpec extends GraftSuite {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
     val holder = new ProcessBuilder(
-      javaBin, "-cp", cp, "graft.SemScale", "lockhold", idxDir.toString, "60000")
+      javaBin, "-cp", cp, "graft.IndexLockHolder", idxDir.toString, "60000")
       .redirectErrorStream(true).start()
     try {
       val br = new java.io.BufferedReader(

@@ -79,6 +79,22 @@ class StagingChainsSpec extends GraftSuite {
     assert(cacheManager.isEmpty, "q88 left cached frames")
   }
 
+  test("every job a chain's build starts carries the chain's job " +
+    "description, its parts' pool threads included") {
+    // a fresh corpus path, so the per-JVM memo builds instead of returning
+    // what an earlier test staged
+    val alias = java.nio.file.Files.createTempDirectory("graft_chain_desc")
+      .resolve("sf")
+    java.nio.file.Files.createSymbolicLink(alias, java.nio.file.Paths.get(sf))
+    val eval = StagingRoots.chains.find(_.name == "eval").get
+    val (_, jobs) = jobDescriptionsDuring(eval.build(spark, alias.toString))
+    assert(jobs.nonEmpty, "the eval build started no job")
+    assert(jobs.forall(_ == "q_staging_eval"),
+      s"other job descriptions: ${jobs.filter(_ != "q_staging_eval").distinct.map(d => if (d.isEmpty) "<none>" else d)}")
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null,
+      "the build left its description on the calling thread")
+  }
+
   test("declared consumers are queries, and a part's build stages " +
     "everything its consumers read") {
     val declared = StagingRoots.chains.flatMap(_.consumers).toSet

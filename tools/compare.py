@@ -26,6 +26,7 @@ self-contained recursive-CTE oracle does not finish in practical time.
 import glob
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -68,10 +69,23 @@ def materialize_prereq(con, spec):
     return lambda: con.unregister(spec["table"])
 
 
+def limit_to_machine(con):
+    """Caps DuckDB at 60 % of the machine's memory and half its cores.
+    Uncapped, DuckDB sizes itself for the whole machine, and at sf0.1 the
+    kernel's OOM killer ended a run with no summary line. At 40 %, q119's
+    oracle fails at sf0.01 with DuckDB's own out-of-memory error."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    con.execute(f"SET memory_limit='{int(kb * 0.6) // 1024}MB'")
+    con.execute(f"SET threads={max(1, len(os.sched_getaffinity(0)) // 2)}")
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     skip = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else set()
     con = duckdb.connect()
+    limit_to_machine(con)
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -92,12 +106,12 @@ def main():
     n_pass = n_fail = n_skip = 0
     for name, sql in sorted(oracle.items()):
         if name in skip:
-            print(f"SKIP {name} (requested)")
+            print(f"SKIP {name} (requested)", flush=True)
             n_skip += 1
             continue
         if name in verify_failures:
             print(f"FAIL {name}: query threw during Verify: "
-                  f"{verify_failures[name]}")
+                  f"{verify_failures[name]}", flush=True)
             n_fail += 1
             continue
         if not glob.glob(f"{out_dir}/{name}/*.parquet"):
@@ -113,7 +127,7 @@ def main():
                 note = f" [precomputed {prereq[name]['kind']}]"
             want = con.execute(sql).fetch_df()
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}")
+            print(f"FAIL {name}: oracle SQL error: {e}", flush=True)
             n_fail += 1
             continue
         finally:
@@ -123,17 +137,17 @@ def main():
             got = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").fetch_df()
         except Exception as e:
-            print(f"FAIL {name}: spark result missing: {e}")
+            print(f"FAIL {name}: spark result missing: {e}", flush=True)
             n_fail += 1
             continue
         want = want.reindex(sorted(want.columns), axis=1)
         got = got.reindex(sorted(got.columns), axis=1)
         if list(want.columns) != list(got.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
+            print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}", flush=True)
             n_fail += 1
             continue
         if len(want) != len(got):
-            print(f"FAIL {name}: rows {len(got)} != {len(want)}")
+            print(f"FAIL {name}: rows {len(got)} != {len(want)}", flush=True)
             n_fail += 1
             continue
         wrows = sorted([tuple(str(norm(v)) for v in r)
@@ -141,14 +155,14 @@ def main():
         grows = sorted([tuple(str(norm(v)) for v in r)
                         for r in got.itertuples(index=False)])
         if wrows == grows:
-            print(f"PASS {name} ({len(want)} rows){note}")
+            print(f"PASS {name} ({len(want)} rows){note}", flush=True)
             n_pass += 1
         else:
             bad = sum(1 for a, b in zip(wrows, grows) if a != b)
-            print(f"FAIL {name}: {bad}/{len(wrows)} sorted rows differ")
+            print(f"FAIL {name}: {bad}/{len(wrows)} sorted rows differ", flush=True)
             for a, b in list(zip(wrows, grows))[:2000]:
                 if a != b:
-                    print(f"   oracle: {a}\n   spark : {b}")
+                    print(f"   oracle: {a}\n   spark : {b}", flush=True)
                     break
             n_fail += 1
     # the oracle loop only sees names present in oracle_sql.json; a query
@@ -159,11 +173,11 @@ def main():
         if name in skip:
             # a skipped crashed query must still appear in the summary —
             # mirroring the main loop's SKIP accounting (r14 advice)
-            print(f"SKIP {name} (requested)")
+            print(f"SKIP {name} (requested)", flush=True)
             n_skip += 1
             continue
         print(f"FAIL {name}: query threw during Verify (no oracle row): "
-              f"{verify_failures[name]}")
+              f"{verify_failures[name]}", flush=True)
         n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} skipped")
     sys.exit(1 if n_fail else 0)
