@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Barriers, BarFrame}
-import graft.queries.EventBars
+import graft.queries.{EventBars, StagingRoots}
 import graft.sources.ResultSink
 
 /** Sweep orchestrator (SURVEY.md §7.1.9 / §3.1): the replacement for the
@@ -55,7 +55,10 @@ object Sweep {
 
   /** Run a sweep and write results + telemetry under `outDir`. Returns the
     * per-(formation, regime_gate, profile) metrics frame. */
-  def run(spark: SparkSession, sfDir: String, spec: SweepSpec, outDir: String): DataFrame = {
+  def run(spark: SparkSession, sfDir: String, spec: SweepSpec,
+      outDir: String): DataFrame = StagingRoots.owningCaches {
+    // what the run persists is released when it ends, on failure too and
+    // whether or not a caller owns a scope
     import spark.implicits._
     val t0 = System.nanoTime()
     val w = BarFrame.series(Seq(col("event_type")), col("ts_us"), col("event_id"))
@@ -81,9 +84,8 @@ object Sweep {
       .withColumn("dir_2", lag(col("dir_0"), 2).over(w))
     val anySignal = col("rn") > spec.warmupBars &&
       spec.formations.map { case (_, p) => expr(p) }.reduce(_ || _)
-    val sig = queries.EventBars.entryFiltered(
-      queries.EventBars.signalForwardArrays(flagged, anySignal, spec.forwardBars))
-      .cache() // the shared frame every config reads
+    val sig = StagingRoots.persist( // the shared frame every config reads
+      EventBars.entryFiltered(EventBars.signalForwardArrays(flagged, anySignal, spec.forwardBars)))
 
     val stackExpr = spec.formations.map { case (name, p) =>
       s"'$name', CASE WHEN $p THEN 1 ELSE 0 END"
@@ -168,17 +170,15 @@ object Sweep {
           .escapePathName(spec.generation))
     val fs = genPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(genPath)) fs.delete(genPath, true)
-    try {
-      ResultSink.overwritePartitions(metrics, s"$outDir/results",
-        Seq("generation", "formation"))
-      val wallS = (System.nanoTime() - t0) / 1e9
-      val telemetry = Seq((spec.generation, spec.formations.size, spec.grid.size,
-        spec.regimeGates.size, math.max(1, spec.laguerreGrid.size), wallS,
-        java.time.Instant.now().toString))
-        .toDF("generation", "n_formations", "n_barriers", "n_regime_gates",
-          "n_laguerre", "wall_s", "finished_at")
-      ResultSink.appendJsonl(telemetry, s"$outDir/telemetry")
-    } finally sig.unpersist() // finally: a failed write must not leak the cache
+    ResultSink.overwritePartitions(metrics, s"$outDir/results",
+      Seq("generation", "formation"))
+    val wallS = (System.nanoTime() - t0) / 1e9
+    val telemetry = Seq((spec.generation, spec.formations.size, spec.grid.size,
+      spec.regimeGates.size, math.max(1, spec.laguerreGrid.size), wallS,
+      java.time.Instant.now().toString))
+      .toDF("generation", "n_formations", "n_barriers", "n_regime_gates",
+        "n_laguerre", "wall_s", "finished_at")
+    ResultSink.appendJsonl(telemetry, s"$outDir/telemetry")
     metrics
   }
 

@@ -63,13 +63,4 @@ object BarFrame {
   def expandingExclusiveQuantile(x: Column, q: Double, w: WindowSpec): Column =
     GraftFunctions.exclusiveQuantileAgg(x, q)
       .over(w.rowsBetween(Window.unboundedPreceding, -1))
-
-  /** Forward array of the next `k` values, current row excluded — the
-    * window form of the signals×bars band join (ref J2/W7 "AP-14:
-    * window-based, NOT self-join", sql/gen600_2down_template.sql:45-56:
-    * `arraySlice(groupArray(x) OVER (ROWS BETWEEN CURRENT ROW AND k+1
-    * FOLLOWING), 2, k)`). Avoids the O(N·K) non-equi join and its shuffle.
-    */
-  def forwardArray(x: Column, k: Int, w: WindowSpec): Column =
-    slice(collect_list(x).over(w.rowsBetween(0, k)), 2, k)
 }

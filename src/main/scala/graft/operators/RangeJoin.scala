@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * p.t BETWEEN iv.s AND iv.e`) plans as an equi-join on the key with the
   * band condition as a post-filter, which is fine per key but degenerates
   * to a per-key cross product when keys are coarse (or absent); the
-  * classic fix — used by every interval-join engine and by this repo's
-  * signals×bars band join (EventBars.forwardArraysFor) — is to make the
-  * time axis part of the equi key:
+  * classic fix, used by every interval-join engine, is to make the time
+  * axis part of the equi key (q107's interval attribution runs on it; the
+  * signals×bars forward arrays need no join at all, see
+  * EventBars.signalForwardArrays):
   *
   *  - points get ONE bucket `⌊t/B⌋`;
   *  - each interval explodes to the buckets it spans (⌈len/B⌉+1 rows —

@@ -213,7 +213,7 @@ object AdaptiveQueries {
     import spark.implicits._
     val sig = EventBars.forwardArraysFor(
       adaptiveSignals(spark, d), EventBars.bars(spark, d), K)
-      // the post-band-join frame is SMALL and AQE coalesces it to ~1
+      // the signal frame is SMALL and AQE coalesces it to ~1
       // partition; the grid crossJoin below would inherit that and
       // serialize the whole barrier scan onto one core — the sibling
       // sweeps (q43/q47/q51, Sweep.run) all pin this; q46 had dropped it

@@ -7,7 +7,8 @@ import graft.operators.Barriers
 /** Barrier-simulation operator coverage (SURVEY.md §2.9 B1/B3/B5/B6 +
   * the gen200 metrics aggregate). Signals are every 25th bar of the
   * events-derived OHLC series (deterministic, oracle-expressible); entry is
-  * next-bar open (B5); forward arrays are the AP-14 window form.
+  * next-bar open (B5); forward arrays are the AP-14 window form's arrays,
+  * built for signal rows only.
   *
   * The DuckDB oracle replays the identical array arithmetic with list
   * functions — including the 0-not-found guards, SL-wins-ties rule and
@@ -32,8 +33,8 @@ object BarrierQueries {
   private def signalsWithArrays(spark: SparkSession, d: String): DataFrame = {
     // Formation: every 25th bar (deterministic stand-in for P5 predicates);
     // entry at next bar open with P3-style validity guards. Forward arrays
-    // are collected ONLY for signal rows (banded join — AUDIT #3), not for
-    // every bar; see EventBars.signalForwardArrays.
+    // are collected ONLY for signal rows (AUDIT #3), in one streaming pass
+    // per series, not for every bar; see EventBars.signalForwardArrays.
     EventBars.signalForwardArrays(EventBars.bars(spark, d), col("rn") % 25 === 0, K)
       .withColumn("entry_price", try_element_at(col("fwd_opens"), lit(1)))
       .filter(col("entry_price").isNotNull && col("entry_price") > 0)

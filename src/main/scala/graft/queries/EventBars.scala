@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.immutable.ArraySeq
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import graft.Tables
 
 /** Deterministic synthetic OHLC bar series derived from the events table —
@@ -77,97 +79,91 @@ object EventBars {
       .drop("__fwd")
   }
 
-  /** Signals-only forward-array collection — the reference's AUDIT #3
-    * lesson (sql/gen200_triple_barrier.sql:16-19: "filter 1.4M bars → ~1k
-    * signals BEFORE collecting forward arrays") restated as a *bucketed
-    * band join*, because the window form (withForwardArrays) materializes
-    * k-element arrays for EVERY bar before the signal filter can apply
-    * (Catalyst cannot push a non-partition-key predicate through a Window).
-    *
-    * Shape: bars get a chunk id (rn div k); each signal explodes to the
-    * 2–3 chunks its forward window can touch; the join is then a pure
-    * equi-join on (event_type, chunk) with the band condition as a cheap
-    * post-filter, and per-signal arrays come from a sorted collect_list.
-    * Cost scales with |signals|·k, not |bars|·k — at a 1/25 signal rate
-    * that is a ~10× win locally and the difference between "fits" and
-    * "OOM" at the 100 TB end (the reference's gen600 OOMs were exactly
-    * this: 200-element arrays × all bars).
-    *
-    * Emits the same schema as withForwardArrays restricted to signal rows
-    * (verified row-for-row in ForwardArraysSpec).
-    */
-  def signalForwardArrays(bars: DataFrame, isSignal: Column, k: Int): DataFrame = {
-    // The band join reads `bars` from three subtrees (the signal filter, the
-    // chunked array source, and the join-back of the signal payload).
-    // Without a shared materialization Catalyst plans an independent
-    // scan + shuffle + sort + window stack per subtree — observed as 3×
-    // parquet scans in the q43 plan. Persisting the frame is the local form
-    // of the stage checkpoint a 100 TB run would write between the bar-prep
-    // and sweep stages; MEMORY_AND_DISK spills instead of recomputing when
-    // the bar frame outgrows executor storage.
-    //
-    // Cache lifetime: the frame lives for one run. Inside
-    // SparkEntry.run (or a staging build) the owning scope releases it
-    // when the run ends; outside every scope it is a plain persist, which
-    // CacheManager dedupes per canonical plan, so repeated calls on one
-    // corpus attach to one resident copy.
-    val shared = StagingRoots.persist(bars)
-    forwardArraysFor(shared.filter(isSignal), shared, k)
-  }
+  /** Signals-only forward arrays — the reference's AUDIT #3 lesson
+    * (sql/gen200_triple_barrier.sql:16-19: "filter 1.4M bars → ~1k signals
+    * BEFORE collecting forward arrays"): the window form materializes
+    * k-element arrays for EVERY bar (Catalyst cannot push a non-partition-
+    * key predicate through a Window); this builds them for signal rows
+    * only, in one [[replay]] per series. Rows and arrays equal the window
+    * form's on the signal rows with at least one forward bar
+    * (ForwardArraysSpec): `event_type`, `rn`, the other `bars` columns in
+    * order, then the four arrays; a null `event_type` produces no rows. */
+  def signalForwardArrays(bars: DataFrame, isSignal: Column, k: Int): DataFrame =
+    replay(bars.withColumn(SignalFlag, isSignal), bars.schema, Ohlc, k)
 
-  /** Banded-join forward-array attachment for an ALREADY-FILTERED signal
-    * frame (the general form of [[signalForwardArrays]]): `signals` needs
-    * (event_type, rn); `bars` supplies the OHLC series. Used by the
-    * gen600-faithful chain where signals emerge from a multi-stage
-    * filter+window pipeline, not a single predicate over bars.
-    *
-    * Equivalence note (vs the window form): signals whose forward window is
-    * empty (last bar of a series) produce no row here (inner join) — the
-    * contract is equivalence AFTER the P3 entry filter (`entry_price IS NOT
-    * NULL` implies ≥1 forward bar), which every caller applies upstream.
-    * (event_type, rn) must uniquely key `signals` rows.
-    */
+  /** [[signalForwardArrays]] for an ALREADY-FILTERED signal frame, as in
+    * the gen600-faithful chain, whose signals come from a multi-stage
+    * filter+window pipeline: `signals` needs a unique (event_type, rn);
+    * `bars` supplies the OHLC series, is marked with the signals by one
+    * left join of the small signal frame, and is replayed. Output:
+    * `event_type`, `rn`, the other `signals` columns, the four arrays. */
   def forwardArraysFor(signals: DataFrame, bars: DataFrame, k: Int): DataFrame = {
-    // shuffle-width discipline: the band join fans every signal out to ~k
-    // bar rows, so ONLY the join key (event_type, rn) rides through the
-    // fan-out and the array aggregation — the full signal payload would be
-    // duplicated k× through two shuffles otherwise. Arrays are built on the
-    // narrow frame and joined back to the (much smaller, un-fanned) signal
-    // frame at the end.
-    val s = signals.select(col("event_type"), col("rn"))
-      .withColumn("s_chunk",
-        explode(expr(s"sequence(rn div $k, (rn + $k) div $k)")))
-    val barsC = bars.select(
-      col("event_type").as("b_et"), col("rn").as("b_rn"),
-      col("high").as("b_high"), col("low").as("b_low"),
-      col("open").as("b_open"), col("close").as("b_close"))
-      .withColumn("b_chunk", expr(s"b_rn div $k"))
-    val arrays = s.join(barsC,
-      col("event_type") === col("b_et") && col("s_chunk") === col("b_chunk") &&
-        col("b_rn") > col("rn") && col("b_rn") <= col("rn") + k)
-      .groupBy(col("event_type"), col("rn"))
-      .agg(sort_array(collect_list(struct(
-        col("b_rn"), col("b_high"), col("b_low"), col("b_open"), col("b_close"))))
-        .as("fwd"))
-    // field extraction from the struct array (GetArrayStructFields) is
-    // codegen'd; a `transform(fwd, x -> x.b_high)` lambda is not
-    signals.join(arrays, Seq("event_type", "rn"))
-      .withColumn("fwd_highs", col("fwd").getField("b_high"))
-      .withColumn("fwd_lows", col("fwd").getField("b_low"))
-      .withColumn("fwd_opens", col("fwd").getField("b_open"))
-      .withColumn("fwd_closes", col("fwd").getField("b_close"))
-      .drop("fwd")
+    val barSide = bars.select(col("event_type") +: col("rn") +:
+      Ohlc.map(c => col(c).as(BarPrefix + c)): _*)
+    val marked = barSide.join(signals.withColumn(SignalFlag, lit(true)),
+      Seq("event_type", "rn"), "left")
+    replay(marked, signals.schema, Ohlc.map(BarPrefix + _), k)
   }
 
-  /** Shared post-band-join sweep-signal tail (q43/q47/q51/Sweep.run —
-    * four verbatim copies had to stay in sync by hand, and the drift this
-    * invites already happened once: q46 rebuilt the chain and dropped the
+  private val Ohlc = Seq("high", "low", "open", "close")
+  private val FwdCols = Seq("fwd_highs", "fwd_lows", "fwd_opens", "fwd_closes")
+  private val SignalFlag = "__fwd_signal"
+  private val BarPrefix = "__fwd_bar_"
+
+  /** One streaming pass per series (`event_type`, in `rn` order) over
+    * `marked`, whose [[SignalFlag]] column marks the signal rows. State is
+    * a ring of the last `k` bars' `ohlc` values and a FIFO of pending
+    * signals: a signal leaves, as its `payload` columns plus the four
+    * arrays, when its k-th following bar arrives, or with the bars it has
+    * when the series ends. Null OHLC values keep their slots. Grouping on
+    * the column itself replays a frame already partitioned by series (the
+    * bars window, the sweep's lags) in place, with no exchange.
+    */
+  private def replay(marked: DataFrame, payload: StructType, ohlc: Seq[String],
+      k: Int): DataFrame = {
+    if (k < 1)
+      throw new IllegalArgumentException(s"forward window k must be at least 1, got $k")
+    val keys = Seq("event_type", "rn")
+    val in = marked.schema
+    val outFields = keys.map(payload(_)) ++ payload.filterNot(f => keys.contains(f.name))
+    val outSchema = StructType(outFields ++ FwdCols.zip(ohlc).map { case (name, c) =>
+      StructField(name, ArrayType(in(c).dataType, in(c).nullable), nullable = false)
+    })
+    val payloadIdx = outFields.map(f => in.fieldIndex(f.name))
+    val ohlcIdx = ohlc.map(in.fieldIndex)
+    val flagIdx = in.fieldIndex(SignalFlag)
+    marked.filter(col("event_type").isNotNull)
+      .groupBy(col("event_type")).as[String, Row](Encoders.STRING, Encoders.row(in))
+      .flatMapSortedGroups(col("rn")) { (_: String, bars: Iterator[Row]) =>
+        val ring = ohlcIdx.map(_ => new Array[Any](k))
+        val pending = new java.util.ArrayDeque[(Row, Long)]() // (signal, bar index)
+        var n = 0L // bars seen in this series
+        // the signal at bar index i with its next `len` bars, all in the ring
+        def emit(sig: Row, i: Long, len: Int): Row = Row.fromSeq(payloadIdx.map(sig.get) ++
+          ring.map(r => ArraySeq.tabulate[Any](len)(j => r(((i + 1 + j) % k).toInt))))
+        bars.flatMap { bar =>
+          ohlcIdx.indices.foreach(c => ring(c)((n % k).toInt) = bar.get(ohlcIdx(c)))
+          val done = if (!pending.isEmpty && pending.peekFirst()._2 == n - k)
+            Some(pending.removeFirst()) else None
+          if (!bar.isNullAt(flagIdx) && bar.getBoolean(flagIdx)) pending.addLast((bar, n))
+          n += 1
+          done.map { case (sig, i) => emit(sig, i, k) }
+        } ++ Iterator.continually(pending.pollFirst()).takeWhile(_ != null).collect {
+          case (sig, i) if i < n - 1 => emit(sig, i, (n - 1 - i).toInt)
+        }
+      }(Encoders.row(outSchema))
+      .toDF()
+  }
+
+  /** Shared sweep-signal tail (q43/q47/q51/Sweep.run — four verbatim
+    * copies had to stay in sync by hand, and the drift this invites
+    * already happened once: q46 rebuilt the chain and dropped the
     * repartition, r13 review): next-bar-open entry price, the P3 entry
     * filter, and the AQE-stable REPARTITION_BY_NUM that pins the grid
-    * fan-out's parallelism — AQE coalesces the small post-band-join frame
-    * to ~1 partition and the grid × signal explosion inherits it
-    * (observed: 1 of 32 cores busy for 10 minutes at the 30k-config
-    * rehearsal; REPARTITION_BY_NUM is never coalesced). */
+    * fan-out's parallelism — AQE coalesces the small signal frame to ~1
+    * partition and the grid × signal explosion inherits it (observed: 1
+    * of 32 cores busy for 10 minutes at the 30k-config rehearsal;
+    * REPARTITION_BY_NUM is never coalesced). */
   def entryFiltered(sig: DataFrame): DataFrame =
     sig
       .withColumn("entry_price", try_element_at(col("fwd_opens"), lit(1)))

@@ -12,7 +12,7 @@ import graft.operators.{Barriers, BarFrame, Formations, Laguerre}
   * table once per config (§3.1 step 1-2; 66,960 rescans of the same
   * series). Here the scan+window work happens once: formation flags are
   * computed per bar, forward arrays are collected only for rows that fire
-  * ANY formation (banded join), the barrier grid is a broadcast literal,
+  * ANY formation (streaming replay), the barrier grid is a broadcast literal,
   * and the barrier scan + metrics aggregate fan out columnar — the
   * structural win that makes the sweep latency independent of the number
   * of configs (up to the grid's aggregate cost).

@@ -13,9 +13,10 @@ class PlanShapeSpec extends GraftSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String = {
     // plan shapes must be asserted cache-free: CacheManager substitutes
     // InMemoryRelation into ANY later plan whose subtree matches a frame a
-    // previous suite persisted (e.g. signalForwardArrays' shared bar
-    // frame), which moves exchanges around and makes these assertions
-    // depend on suite ordering
+    // previous suite persisted outside an owning scope (e.g. a query
+    // frame cached through StagingRoots.persist when a spec calls the
+    // query directly), which moves exchanges around and makes these
+    // assertions depend on suite ordering
     spark.catalog.clearCache()
     df.queryExecution.executedPlan.toString
   }
@@ -44,13 +45,19 @@ class PlanShapeSpec extends GraftSuite {
     assert(p.contains("BroadcastNestedLoopJoin"), s"grid not broadcast:\n$p")
   }
 
-  test("q18 banded signal join: equi-join on (event_type, chunk), no BNLJ") {
-    val p = plan(BarrierQueries.q18TripleBarrier(spark, sf))
-    assert(!p.contains("BroadcastNestedLoopJoin") || !p.contains("CartesianProduct"),
-      "band join degenerated to a non-equi join")
-    // the band condition must ride an equi join (hash or sort-merge)
-    assert(p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin") ||
-      p.contains("ShuffledHashJoin"), s"no equi join:\n$p")
+  test("q18/q43 forward arrays: one streaming replay, no equi-join, no chunk column") {
+    for ((name, df, exchanges) <- Seq(
+        ("q18", BarrierQueries.q18TripleBarrier(spark, sf), 2),
+        ("q43", SweepQueries.q43FormationBarrierSweep(spark, sf), 5))) {
+      val p = plan(df)
+      assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin") &&
+        !p.contains("ShuffledHashJoin"), s"$name: equi-join in the plan:\n$p")
+      assert(!p.contains("chunk"), s"$name: chunk column in the plan:\n$p")
+      assert(p.linesIterator.count(_.contains("MapGroups")) == 1,
+        s"$name: not exactly one forward-array replay:\n$p")
+      assert(p.linesIterator.count(_.contains("Exchange")) == exchanges,
+        s"$name: exchange count moved:\n$p")
+    }
   }
 
   test("q43/q18 barrier scans are codegen'd: no interpreted higher-order " +

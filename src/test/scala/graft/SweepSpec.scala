@@ -43,6 +43,16 @@ class SweepSpec extends GraftSuite {
     assert(tele.filter(col("generation") === "g1").count() == 2)
   }
 
+  test("Sweep.run outside any owning scope leaves nothing cached") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val out = Files.createTempDirectory("graft_sweep_cache").toString
+    Sweep.run(spark, sf, SweepSpec("gc",
+      Seq("2down_ng" -> "(dir_1 = 0 AND dir_0 = 0)"), grid), out)
+    assert(cacheManager.isEmpty, "Sweep.run left cached frames")
+  }
+
   test("E30 regime-gated sweep: gates key the output, any_regime slice matches " +
     "the ungated sweep, gate census matches an independent recomputation") {
     import org.apache.spark.sql.Row
